@@ -3,8 +3,8 @@
 At 100 TB an embeddings shard WILL contain NULL vectors, zero-length
 arrays, ragged dimensionalities (schema drift across ingest epochs), and
 NULL ids (retry half-writes). The pure-DataFrame kernels absorb these for
-free (NULL-propagating expressions), but the BLAS-shaped kernels call
-``np.stack`` / ``astype(int64)``, which turn one malformed row into a dead
+free (NULL-propagating expressions), but the BLAS-shaped kernels reshape
+a batch into one matrix, where a single malformed row would kill the
 partition task — the round-7 empty/dirty-mirror findings. These helpers
 centralize the contract those kernels share:
 
@@ -13,9 +13,12 @@ centralize the contract those kernels share:
   probe window cannot hijack the dimension), returning ``None`` on an
   empty/all-NULL column so builders can return the schema-correct empty
   frame instead of crashing;
-- a **batch cleaner** that masks NULL-id / NULL-vector / wrong-dimension
-  rows out of a pandas batch before ``np.stack`` — the malformed rows
-  contribute nothing, the task lives.
+- one **Arrow decoder** that masks NULL-vector / wrong-dimension /
+  non-finite rows out of an Arrow list array and reshapes the survivors
+  into a float64 matrix — the malformed rows contribute nothing, the
+  task lives. Kernels on ``mapInArrow`` / ``applyInArrow`` and the
+  driver-side ``toArrow()`` collects share it, so a vector batch has one
+  decode.
 
 Kept separate from functions/vector.py (frozen column-expression surface,
 see SCALE.md): these are kernel-side utilities, not SQL-facing functions.
@@ -40,14 +43,11 @@ def valid_vec(col, dim: int | None = None):
     return p
 
 
-def modal_dim(values) -> int | None:
-    """Modal length of the non-NULL, non-empty vectors in ``values``
-    (any iterable of list/None); ties prefer the larger dimension.
-    ``None`` when no valid vector exists."""
-    sizes: list[int] = []
-    for v in values:
-        if v is not None and len(v) > 0:
-            sizes.append(len(v))
+def modal_dim(lengths) -> int | None:
+    """Modal value of the positive vector ``lengths`` (any iterable of
+    int/None; NULL and zero-length vectors do not vote); ties prefer the
+    larger dimension. ``None`` when no valid vector exists."""
+    sizes = [d for d in lengths if d]
     if not sizes:
         return None
     return max(set(sizes), key=lambda d: (sizes.count(d), d))
@@ -63,60 +63,46 @@ def probe_dim(df: DataFrame, vec_col: str, sample: int = 64) -> int | None:
         .limit(sample)
         .collect()
     )
-    sizes = [r["d"] for r in rows]
-    if not sizes:
-        return None
-    return max(set(sizes), key=lambda d: (sizes.count(d), d))
+    return modal_dim(r["d"] for r in rows)
 
 
-def clean_rows(rows, vec_field: str, dim: int, id_field: str | None = None) -> list:
-    """Driver-side twin of :func:`clean_block` for collected Row lists:
-    keep rows with a non-NULL, all-finite ``dim``-length vector (and
-    non-NULL id when ``id_field`` is given). NULL elements arrive as
-    Python ``None`` from collect() (the kernels see them as NaN after
-    Arrow conversion) — they must drop the row, not TypeError the
-    driver."""
-    import math
-
-    out = []
-    for r in rows:
-        v = r[vec_field]
-        if (
-            v is None
-            or len(v) != dim
-            or any(x is None or not math.isfinite(x) for x in v)
-        ):
-            continue
-        if id_field is not None and r[id_field] is None:
-            continue
-        out.append(r)
-    return out
-
-
-def clean_block(pdf, vec_col: str, dim: int, id_col: str | None = None):
-    """(mask, matrix) for one pandas batch: ``mask`` is the boolean row
-    filter (vector present, exactly ``dim`` long, all elements FINITE, id
-    present when ``id_col`` given — a NULL long id arrives as NaN after
-    Arrow conversion) and ``matrix`` is the float64 ``np.stack`` of the
-    surviving vectors, or ``None`` when nothing survives.
+def decode(arr, dim: int | None = None):
+    """(mask, matrix) for an Arrow list array of vectors (a ``mapInArrow``
+    batch column, an ``applyInArrow`` group column or a ``toArrow()``
+    collect): ``mask`` is the boolean row filter (vector present, exactly
+    ``dim`` long, all elements FINITE) and ``matrix`` is the float64
+    ``(mask.sum(), dim)`` matrix of the surviving vectors, or ``None`` when
+    nothing survives. NULL elements arrive as NaN and drop their row.
+    ``dim=None`` takes the :func:`modal_dim` of ``arr`` itself (a
+    driver-side collect that defines the working dimensionality).
 
     The finite requirement mirrors vector.cosine's nan_to_null doctrine:
     a NaN element would flow through the GEMM into NaN scores, which the
     expression kernels map to NULL but a numpy/Spark desc ranking would
     order FIRST — one NaN embedding silently winning a top-k is the
-    wrong-value failure mode, worse than a crash."""
-    import numpy as np
-    import pandas as pd
+    wrong-value failure mode, worse than a crash.
 
-    vals = pdf[vec_col].to_numpy(dtype=object)
-    mask = np.fromiter(
-        (v is not None and len(v) == dim for v in vals), dtype=bool, count=len(vals)
-    )
-    if id_col is not None:
-        mask &= pd.notna(pdf[id_col]).to_numpy()
+    NULL ids are not this helper's concern: every caller drops them on
+    the JVM side (``.where(id.isNotNull())``) before the batch is built."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    lengths = pc.list_value_length(arr)
+    if dim is None:
+        # -1 matches no length: an all-invalid collect keeps nothing
+        dim = modal_dim(lengths.to_pylist()) or -1
+    mask = pc.fill_null(pc.equal(lengths, dim), False)
+    mask = mask.to_numpy(zero_copy_only=False)
     if not mask.any():
         return mask, None
-    M = np.stack([np.asarray(v, dtype=np.float64) for v in vals[mask]])
+    if not mask.all():
+        arr = arr.filter(pa.array(mask))
+    # flatten() honours the slice offset and skips NULL slots' backing
+    M = arr.flatten().to_numpy(zero_copy_only=False).reshape(-1, dim)
+    M = M.astype(np.float64)
     finite = np.isfinite(M).all(axis=1)
     if not finite.all():
         mask[np.flatnonzero(mask)[~finite]] = False

@@ -804,26 +804,29 @@ def embedding_neardup_pairs_blas(
     composes the same kernel with sign-LSH bucketing and never collects.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    rows = vectors.select(id_col, vec_col).limit(max_collect_rows + 1).collect()
-    if len(rows) > max_collect_rows:
+    rows = (
+        vectors.select(id_col, vec_col)
+        .where(F.col(id_col).isNotNull())
+        .limit(max_collect_rows + 1)
+        .toArrow()
+    )
+    if rows.num_rows > max_collect_rows:
         raise ValueError(
             f"embedding_neardup_pairs_blas collects the corpus to the driver "
             f"and got > {max_collect_rows} rows; use "
             f"embedding_neardup_pairs_blas_bucketed for unbucketed corpora"
         )
-    # row-fails-not-job: NULL / zero-length / ragged vectors and NULL ids
+    # row-fails-not-job: NULL / zero-length / ragged / non-finite vectors
     # drop (modal dim of the collected valid rows defines the working
     # dimensionality); an empty or all-invalid slice returns the
-    # schema-correct empty frame instead of dying in np.stack([])
+    # schema-correct empty frame
     out_schema = "id_a long, id_b long, cosine double"
-    dim = CV.modal_dim(r[vec_col] for r in rows)
-    rows = CV.clean_rows(rows, vec_col, dim, id_field=id_col) if dim else []
-    if not rows:
+    mask, M = CV.decode(rows.column(vec_col))
+    if M is None:
         return vectors.sparkSession.createDataFrame([], out_schema)
-    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    M = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
+    ids = rows.column(id_col).to_numpy()[mask].astype(np.int64)
     Mn = M / V.safe_row_norms(M)
     # (ids, Mn) ride the pickled kernel closure: PySpark ships large task
     # commands via its own managed TorrentBroadcast, reclaimed with the
@@ -831,33 +834,100 @@ def embedding_neardup_pairs_blas(
     # could never be destroy()ed without breaking lazy execution and
     # leaked across bench repeats.
 
-    def part(it):
+    def part(batches):
         ids_b, Mn_b = ids, Mn
-        for pdf in it:
-            if not len(pdf):
-                continue
-            mask, C = CV.clean_block(pdf, vec_col, Mn_b.shape[1], id_col=id_col)
+        for batch in batches:
+            mask, C = CV.decode(batch.column(vec_col), Mn_b.shape[1])
             if C is None:
                 continue
             Cn = C / V.safe_row_norms(C)
             S = Cn @ Mn_b.T  # (block, N)
-            bids = pdf[id_col].to_numpy()[mask].astype(np.int64)
+            bids = batch.column(id_col).to_numpy()[mask].astype(np.int64)
             bi, mj = np.nonzero(S >= threshold)
             keep = bids[bi] < ids_b[mj]
-            yield pd.DataFrame(
-                {
-                    "id_a": bids[bi][keep],
-                    "id_b": ids_b[mj][keep],
-                    "cosine": S[bi, mj][keep],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(bids[bi][keep]),
+                    pa.array(ids_b[mj][keep]),
+                    pa.array(S[bi, mj][keep]),
+                ],
+                names=["id_a", "id_b", "cosine"],
             )
 
-    # NULL-id rows filtered BEFORE the kernel: one NULL per batch turns the
-    # Arrow->pandas id column into float64, silently rounding ids > 2^53
+    # The JVM-side NULL-id filter is the only place NULL ids drop: the
+    # kernel reads the id column as plain int64
     return (
         vectors.select(id_col, vec_col)
         .where(F.col(id_col).isNotNull())
-        .mapInPandas(part, schema="id_a long, id_b long, cosine double")
+        .mapInArrow(part, schema=out_schema)
+    )
+
+
+def _sign_lsh_cells(
+    vectors: DataFrame,
+    id_col: str,
+    vec_col: str,
+    num_tables: int,
+    bits_per_table: int,
+    seed: int,
+    carry_vec: bool,
+) -> DataFrame | None:
+    """(vid, tbl, bucket[, vec]): each valid vector's sign-LSH bucket in
+    each of ``num_tables`` tables, from one ``mapInArrow`` scan — a matmul
+    against the tiny plane matrix (T·B × d, seeded by ``seed``, riding the
+    kernel closure; see embedding_neardup_pairs_blas for the
+    broadcast-lifecycle note). ``carry_vec`` re-emits the vector column
+    with ``pc.take`` for a per-cell kernel. ``None`` on an empty or
+    all-invalid corpus: the modal-dim probe over a bounded valid-row
+    sample finds no dimensionality to draw planes for, and a ragged
+    minority row can't hijack it."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    dim = CV.probe_dim(vectors, vec_col)
+    if dim is None:
+        return None
+    rng = np.random.default_rng(seed)
+    planes = rng.standard_normal((num_tables * bits_per_table, dim))
+    weights = np.power(2, np.arange(bits_per_table), dtype=np.int64)
+    schema = "vid long, tbl int, bucket long"
+    if carry_vec:
+        schema += f", vec {vectors.schema[vec_col].dataType.simpleString()}"
+
+    def assign(batches):
+        P = planes
+        for batch in batches:
+            # row-fails-not-job: NULL/ragged/non-finite vectors drop here
+            vec = batch.column(vec_col)
+            mask, M = CV.decode(vec, dim)
+            if M is None:
+                continue
+            rows = np.flatnonzero(mask)
+            n = len(rows)
+            signs = (M @ P.T) > 0  # (rows, T*B), table t in bits t*B..(t+1)*B
+            buckets = (
+                signs.reshape(n, num_tables, bits_per_table).astype(np.int64) @ weights
+            )  # (rows, T)
+            vids = batch.column(id_col).to_numpy()[rows].astype(np.int64)
+            # table-major: row r of table t sits at t*n + r
+            cols = [
+                pa.array(np.tile(vids, num_tables)),
+                pa.array(np.repeat(np.arange(num_tables, dtype=np.int32), n)),
+                pa.array(buckets.T.ravel()),
+            ]
+            if carry_vec:
+                cols.append(pc.take(vec, pa.array(np.tile(rows, num_tables))))
+            yield pa.RecordBatch.from_arrays(
+                cols, names=["vid", "tbl", "bucket", "vec"][: len(cols)]
+            )
+
+    # The JVM-side NULL-id filter is the only place NULL ids drop: the
+    # kernel reads the id column as plain int64
+    return (
+        vectors.select(id_col, vec_col)
+        .where(F.col(id_col).isNotNull())
+        .mapInArrow(assign, schema=schema)
     )
 
 
@@ -877,11 +947,11 @@ def embedding_neardup_pairs_blas_bucketed(
     Nothing is ever collected to the driver and the corpus never meets
     itself outside a bucket:
 
-    1. one ``mapInPandas`` scan assigns each vector to ``num_tables``
+    1. one ``mapInArrow`` scan assigns each vector to ``num_tables``
        (table, bucket) cells — a matmul against the tiny broadcast plane
        matrix — carrying the vector along (shuffle volume = T × corpus,
        the honest cost of multi-table LSH grouping);
-    2. ``groupBy(tbl, bucket).applyInPandas`` runs the exact BLAS all-pairs
+    2. ``groupBy(tbl, bucket).applyInArrow`` runs the exact BLAS all-pairs
        kernel within each cell (bucket size is the ``bits_per_table`` knob:
        b bits → 2^b buckets/table; raise b to shrink task memory);
     3. pairs colliding in several tables are merged with ``max(cosine)``
@@ -893,80 +963,31 @@ def embedding_neardup_pairs_blas_bucketed(
     tests/test_dedup.py.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     if num_tables is None:
         num_tables = _auto_num_tables(threshold, bits_per_table, recall_target)
-
-    # modal-dim probe over a bounded valid-row sample: an empty or
-    # all-invalid corpus returns the schema-correct empty frame (no planes
-    # to draw), and a ragged minority row can't hijack the dimensionality
-    dim = CV.probe_dim(vectors, vec_col)
-    if dim is None:
+    assigned = _sign_lsh_cells(
+        vectors, id_col, vec_col, num_tables, bits_per_table, seed, carry_vec=True
+    )
+    if assigned is None:
         return vectors.sparkSession.createDataFrame(
             [], "id_a long, id_b long, cosine double"
         )
-    rng = np.random.default_rng(seed)
-    # the plane matrix is tiny (T·B × d); it rides the kernel closures —
-    # see embedding_neardup_pairs_blas for the broadcast-lifecycle note
-    planes = rng.standard_normal((num_tables * bits_per_table, dim))
-    weights = np.power(2, np.arange(bits_per_table), dtype=np.int64)
-    vec_type = vectors.schema[vec_col].dataType.simpleString()
 
-    def assign(it):
-        P = planes
-        for pdf in it:
-            if not len(pdf):
-                continue
-            # row-fails-not-job: NULL/ragged vectors and NULL ids drop here
-            mask, M = CV.clean_block(pdf, vec_col, dim, id_col=id_col)
-            if M is None:
-                continue
-            signs = (M @ P.T) > 0
-            vids = pdf[id_col].to_numpy()[mask].astype(np.int64)
-            vecs = pdf[vec_col][mask].reset_index(drop=True)
-            out = []
-            for t in range(num_tables):
-                block = signs[:, t * bits_per_table : (t + 1) * bits_per_table]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "vid": vids,
-                            "tbl": t,
-                            "bucket": block.astype(np.int64) @ weights,
-                            "vec": vecs,
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    # same NULL-id pre-filter as embedding_neardup_pairs_blas: keep the
-    # Arrow batches pure int64 so no id round-trips through float64
-    assigned = (
-        vectors.select(id_col, vec_col)
-        .where(F.col(id_col).isNotNull())
-        .mapInPandas(assign, schema=f"vid long, tbl int, bucket long, vec {vec_type}")
-    )
-
-    def kernel(pdf):
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
-            {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
-        )
-        if len(pdf) < 2:
-            return empty
-        M = np.stack(pdf["vec"].map(lambda v: np.asarray(v, dtype=np.float64)))
+    def kernel(table):
+        # every vector passed the assign pass's decode: the mask keeps all
+        mask, M = CV.decode(table.column("vec"))
+        ids = table.column("vid").to_numpy()[mask]
         Mn = M / V.safe_row_norms(M)
         S = Mn @ Mn.T
-        ids = pdf["vid"].to_numpy()
         i, j = np.nonzero(S >= threshold)
         keep = ids[i] < ids[j]
-        if not keep.any():
-            return empty
-        return pd.DataFrame(
+        return pa.table(
             {"id_a": ids[i][keep], "id_b": ids[j][keep], "cosine": S[i, j][keep]}
         )
 
-    per_cell = assigned.groupBy("tbl", "bucket").applyInPandas(
+    per_cell = assigned.groupBy("tbl", "bucket").applyInArrow(
         kernel, schema="id_a long, id_b long, cosine double"
     )
     return per_cell.groupBy("id_a", "id_b").agg(F.max("cosine").alias("cosine"))
@@ -991,7 +1012,7 @@ def embedding_neardup_lsh(
     its ``bits_per_table`` projections. Two vectors at cosine angle θ agree
     on one bit with prob 1−θ/π, so near-dup pairs collide in ≥1 table with
     high probability while the corpus never meets itself outside buckets:
-    the plan is bucket-assign (one mapInPandas scan, matmul with the tiny
+    the plan is bucket-assign (one mapInArrow scan, matmul with the tiny
     plane matrix) → explode tables → equi-join on (table, bucket) →
     distinct candidate pairs → exact cosine ≥ threshold.
 
@@ -1002,48 +1023,15 @@ def embedding_neardup_lsh(
     For loose thresholds (< ~0.7) lower ``bits_per_table`` (p^b collapses),
     e.g. b=3; the default b=8 targets real near-dup thresholds (>= 0.9).
     """
-    import numpy as np
-    import pandas as pd
-
     if num_tables is None:
         num_tables = _auto_num_tables(threshold, bits_per_table, recall_target)
-
-    # modal-dim probe + row contract: same hygiene as the bucketed BLAS
-    # kernel — empty/all-invalid corpus degrades to the empty pair frame,
-    # malformed rows fail the row, never the partition task
-    dim = CV.probe_dim(vectors, vec_col)
-    if dim is None:
+    assigned = _sign_lsh_cells(
+        vectors, id_col, vec_col, num_tables, bits_per_table, seed, carry_vec=False
+    )
+    if assigned is None:
         return vectors.sparkSession.createDataFrame(
             [], "id_a long, id_b long, cosine double"
         )
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((num_tables * bits_per_table, dim))
-    weights = np.power(2, np.arange(bits_per_table), dtype=np.int64)
-
-    def assign(it):
-        P = planes
-        for pdf in it:
-            if not len(pdf):
-                continue
-            mask, M = CV.clean_block(pdf, vec_col, dim, id_col=id_col)
-            if M is None:
-                continue
-            signs = (M @ P.T) > 0  # (rows, T*B)
-            out = []
-            ids = pdf[id_col].to_numpy()[mask].astype(np.int64)
-            for t in range(num_tables):
-                block = signs[:, t * bits_per_table : (t + 1) * bits_per_table]
-                buckets = block.astype(np.int64) @ weights
-                out.append(
-                    pd.DataFrame({"vid": ids, "tbl": t, "bucket": buckets})
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    assigned = (
-        vectors.select(id_col, vec_col)
-        .where(F.col(id_col).isNotNull())  # pure-int64 batches, see BLAS twin
-        .mapInPandas(assign, schema="vid long, tbl int, bucket long")
-    )
     a, b = assigned.alias("a"), assigned.alias("b")
     cand = (
         a.join(

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions import cleanvec as CV
 from .relational import top_k_per_group
 
 TEXT_BOOST = 1.0   # elasticsearch_index.py:241
@@ -170,7 +171,7 @@ def mmr_rerank(
 
     The iterative argmax is inherently sequential per query — exactly the
     kind of operator Spark's declarative algebra can't express — so it runs
-    as an Arrow-batched ``applyInPandas`` over query groups: the candidate
+    as an ``applyInArrow`` NumPy kernel over query groups: the candidate
     set per query is first-stage top-N (≤ ~100 rows by construction), so the
     grouped state is tiny regardless of corpus size. Corpus embeddings are
     attached via an equi-join on the candidate ids (the 100 TB side is
@@ -183,7 +184,7 @@ def mmr_rerank(
     <vec_col>).
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     cand = (
         candidates.select("query_id", id_col)
@@ -197,13 +198,28 @@ def mmr_rerank(
         f"query_id long, {id_col} long, mmr_rank int, mmr_score double"
     )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["__dv"]])
-        q = np.asarray(pdf["__qv"].iloc[0], dtype=np.float64)
+    empty = pa.schema(
+        [
+            ("query_id", pa.int64()),
+            (id_col, pa.int64()),
+            ("mmr_rank", pa.int32()),
+            ("mmr_score", pa.float64()),
+        ]
+    ).empty_table()
+
+    def kernel(table: pa.Table) -> pa.Table:
+        table = table.sort_by(id_col)  # stable: equal ids keep input order
+        # the query vector fixes the group's dimensionality; a malformed
+        # query selects nothing, a malformed candidate is never selected
+        _, q = CV.decode(table.column("__qv").slice(0, 1))
+        if q is None:
+            return empty
+        mask, V = CV.decode(table.column("__dv"), q.shape[1])
+        if V is None:
+            return empty
+        ids = table.column(id_col).to_numpy()[mask]
         Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
-        qn = q / max(np.linalg.norm(q), 1e-30)
+        qn = q[0] / max(np.linalg.norm(q[0]), 1e-30)
         rel = Vn @ qn
         sim = Vn @ Vn.T
         n = len(ids)
@@ -218,17 +234,17 @@ def mmr_rerank(
             scores.append(marg[i])
             avail[i] = False
             max_sim = np.maximum(max_sim, sim[:, i])
-        qid = int(pdf["query_id"].iloc[0])
-        return pd.DataFrame(
+        qid = table.column("query_id")[0].as_py()
+        return pa.table(
             {
-                "query_id": qid,
+                "query_id": np.full(len(chosen), qid, dtype=np.int64),
                 id_col: ids[chosen],
                 "mmr_rank": np.arange(1, len(chosen) + 1, dtype=np.int32),
                 "mmr_score": np.round(np.array(scores), 6),
             }
         )
 
-    return cand.groupBy("query_id").applyInPandas(kernel, out_schema)
+    return cand.groupBy("query_id").applyInArrow(kernel, out_schema)
 
 
 def pack_context_budget(

@@ -287,7 +287,7 @@ def knn_exact_blas(
     The query matrix (small) is collected, L2-normalized, and shipped with
     the kernel closure (PySpark's managed command broadcast — see the
     inline note); each
-    corpus partition computes one ``block @ Q.T`` matmul inside mapInPandas
+    corpus partition computes one ``block @ Q.T`` matmul inside mapInArrow
     and emits only its LOCAL per-query top-k; a final windowed top-k merges
     partitions. At 100 TB the corpus is scanned once, nothing but (parts × k
     × queries) candidate rows shuffle. ~100× the FLOP rate of the row-at-a-
@@ -305,28 +305,31 @@ def knn_exact_blas(
     possible (BLAS reduction order).
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     # limit(max+1) bounds the collect itself (no separate count job); one
     # extra row is enough to prove the bound was crossed
-    q_rows = queries.select("query_id", query_vec).limit(max_queries + 1).collect()
-    if len(q_rows) > max_queries:
+    q = (
+        queries.select("query_id", query_vec)
+        .where(F.col("query_id").isNotNull())
+        .limit(max_queries + 1)
+        .toArrow()
+    )
+    if q.num_rows > max_queries:
         raise ValueError(
             f"knn_exact_blas collects the query side to the driver; got more "
             f"than max_queries={max_queries} rows. Use knn_exact or the "
             f"bucketed BLAS dedup path for unbounded query sets."
         )
     out_schema = f"query_id long, {corpus_id} long, score double"
-    # row-fails-not-job: NULL / zero-length / ragged query vectors and NULL
-    # query ids are dropped (modal dim of the valid rows defines the
-    # working dimensionality); an empty or all-invalid query side returns
-    # the schema-correct empty frame instead of dying in np.stack([])
-    dim = CV.modal_dim(r[query_vec] for r in q_rows)
-    q_rows = CV.clean_rows(q_rows, query_vec, dim, id_field="query_id") if dim else []
-    if not q_rows:
+    # row-fails-not-job: NULL / zero-length / ragged / non-finite query
+    # vectors drop (modal dim of the valid rows defines the working
+    # dimensionality); an empty or all-invalid query side returns the
+    # schema-correct empty frame
+    mask, Q = CV.decode(q.column(query_vec))
+    if Q is None:
         return queries.sparkSession.createDataFrame([], out_schema)
-    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    Q = np.stack([np.asarray(r[query_vec], dtype=np.float64) for r in q_rows])
+    qids = q.column("query_id").to_numpy()[mask].astype(np.int64)
     Qn = Q / V.safe_row_norms(Q)
     # (qids, Qn) ride the pickled kernel closure instead of an explicit
     # sc.broadcast: PySpark ships large task commands through its own
@@ -335,14 +338,12 @@ def knn_exact_blas(
     # an explicit handle here could never be destroy()ed without breaking
     # the lazy-DataFrame contract and leaked across bench repeats.
 
-    def part(it):
+    def part(batches):
         ids_b, Qn_b = qids, Qn
-        for pdf in it:
-            if not len(pdf):
-                continue
+        for batch in batches:
             # same row contract on the corpus side: a malformed corpus row
             # contributes no candidates, the partition task lives
-            mask, C = CV.clean_block(pdf, corpus_vec, Qn_b.shape[1], id_col=corpus_id)
+            mask, C = CV.decode(batch.column(corpus_vec), Qn_b.shape[1])
             if C is None:
                 continue
             Cn = C / V.safe_row_norms(C)
@@ -350,7 +351,7 @@ def knn_exact_blas(
             if round_decimals is not None:
                 S = np.round(S, round_decimals)
             kk = min(k, S.shape[0])
-            cids = pdf[corpus_id].to_numpy()[mask].astype(np.int64)
+            cids = batch.column(corpus_id).to_numpy()[mask].astype(np.int64)
             if round_decimals is not None:
                 # deterministic local cut: (score DESC, id ASC) per query
                 top = np.empty((kk, S.shape[1]), dtype=np.int64)
@@ -359,28 +360,22 @@ def knn_exact_blas(
             else:
                 # local top-k per query: argpartition (fast path)
                 top = np.argpartition(-S, kk - 1, axis=0)[:kk]
-            frames = []
-            for j in range(S.shape[1]):
-                sel = top[:, j]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": ids_b[j],
-                            corpus_id: cids[sel],
-                            "score": S[sel, j],
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+            # query-major rows: (ids_b[j], cids[top[r, j]], S[top[r, j], j])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.repeat(ids_b, kk)),
+                    pa.array(cids[top.T.ravel()]),
+                    pa.array(S[top, np.arange(S.shape[1])].T.ravel()),
+                ],
+                names=["query_id", corpus_id, "score"],
+            )
 
-    # NULL-id rows are filtered BEFORE the kernel, not just masked inside
-    # it: one NULL in a batch makes Arrow hand pandas the whole id column
-    # as float64, silently rounding any id above 2^53 (hash-derived 60-bit
-    # ids would corrupt) — keep the batches pure int64
+    # The JVM-side NULL-id filter is the only place NULL ids drop: the
+    # kernel reads the id column as plain int64
     local = (
         corpus.select(corpus_id, corpus_vec)
         .where(F.col(corpus_id).isNotNull())
-        .mapInPandas(part, schema=out_schema)
+        .mapInArrow(part, schema=out_schema)
     )
     return top_k_per_group(local, ["query_id"], "score", k, tie_break=corpus_id)
 

@@ -4,7 +4,7 @@ crashers). The end-to-end coverage lives in the empty/dirty mirror gates;
 these pin the helper semantics and the builder-level degenerate returns."""
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,12 +17,13 @@ from auto_vectordb_spark.operators import knn as KNN
 
 
 def test_modal_dim_picks_majority_and_ignores_invalid():
-    assert CV.modal_dim([[1.0, 2.0], None, [3.0], [], [4.0, 5.0]]) == 2
-    assert CV.modal_dim([None, []]) is None
+    # lengths of [[1, 2], None, [3], [], [4, 5]]: NULL and empty do not vote
+    assert CV.modal_dim([2, None, 1, 0, 2]) == 2
+    assert CV.modal_dim([None, 0]) is None
     assert CV.modal_dim([]) is None
     # tie prefers the larger dimension (a truncated row is the likelier
     # corruption than a padded one)
-    assert CV.modal_dim([[1.0], [1.0, 2.0]]) == 2
+    assert CV.modal_dim([1, 2]) == 2
 
 
 def test_probe_dim_on_dataframe(spark):
@@ -35,30 +36,32 @@ def test_probe_dim_on_dataframe(spark):
     assert CV.probe_dim(df.where("embedding is null"), "embedding") is None
 
 
+def _vecs(values, type_=pa.float64()):
+    return pa.array(values, type=pa.list_(type_))
+
+
 def test_clean_block_masks_bad_vectors_and_null_ids():
-    pdf = pd.DataFrame(
-        {
-            # NULL long ids arrive as NaN after Arrow->pandas conversion
-            "vec_id": [1.0, 2.0, np.nan, 4.0, 5.0],
-            "embedding": [[1.0, 2.0], None, [3.0, 4.0], [9.0], [5.0, 6.0]],
-        }
-    )
-    mask, M = CV.clean_block(pdf, "embedding", 2, id_col="vec_id")
-    assert mask.tolist() == [True, False, False, False, True]
-    assert M.shape == (2, 2) and M.dtype == np.float64
-    assert M[1].tolist() == [5.0, 6.0]
-    # nothing survives -> (all-false mask, None), never np.stack([])
-    mask2, M2 = CV.clean_block(pdf.iloc[1:4], "embedding", 2, id_col="vec_id")
-    assert not mask2.any() and M2 is None
-
-
-def test_clean_rows_filters_like_clean_block(spark):
-    rows = spark.createDataFrame(
-        [(1, [1.0, 2.0]), (None, [3.0, 4.0]), (3, None), (4, [5.0])],
-        "query_id long, embedding array<double>",
-    ).collect()
-    kept = CV.clean_rows(rows, "embedding", 2, id_field="query_id")
-    assert [r["query_id"] for r in kept] == [1]
+    """The decode row contract: NULL, ragged and empty vectors drop (NULL
+    ids are dropped by every caller's JVM-side filter, not here)."""
+    arr = _vecs([[1.0, 2.0], None, [3.0, 4.0], [9.0], [], [5.0, 6.0]])
+    mask, M = CV.decode(arr, 2)
+    assert mask.tolist() == [True, False, True, False, False, True]
+    assert M.shape == (3, 2) and M.dtype == np.float64
+    assert M.tolist() == [[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]]
+    # nothing survives -> (all-false mask, None), never a (0, dim) matrix
+    mask2, M2 = CV.decode(arr.slice(3, 2), 2)
+    assert mask2.tolist() == [False, False] and M2 is None
+    mask3, M3 = CV.decode(arr.slice(0, 0), 2)
+    assert mask3.tolist() == [] and M3 is None
+    # dim=None: the modal length of the array itself (driver collects)
+    mask4, M4 = CV.decode(_vecs([[1.0], [1.0, 2.0], [3.0, 4.0], None]))
+    assert mask4.tolist() == [False, True, True, False] and M4.shape == (2, 2)
+    assert CV.decode(_vecs([None, []]))[1] is None
+    # float32 storage decodes to float64; a chunked collect decodes whole
+    f32 = pa.float32()
+    chunks = pa.chunked_array([_vecs([[0.5, 1.5]], f32), _vecs([[2.5, 3.5]], f32)])
+    _, M5 = CV.decode(chunks, 2)
+    assert M5.dtype == np.float64 and M5.tolist() == [[0.5, 1.5], [2.5, 3.5]]
 
 
 # ------------------------------------------------- builder-level contracts
@@ -125,22 +128,18 @@ def test_lsh_model_none_on_empty_and_search_degrades(spark):
 def test_clean_block_drops_nonfinite_vectors():
     import math
 
-    pdf = pd.DataFrame(
-        {
-            "vec_id": [1.0, 2.0, 3.0, 4.0],
-            "embedding": [
-                [1.0, 2.0],
-                [math.nan, 1.0],   # NaN element: row drops
-                [math.inf, 0.0],   # inf element: row drops
-                [3.0, 4.0],
-            ],
-        }
+    arr = _vecs(
+        [
+            [1.0, 2.0],
+            [math.nan, 1.0],   # NaN element: row drops
+            [math.inf, 0.0],   # inf element: row drops
+            [3.0, 4.0],
+        ]
     )
-    mask, M = CV.clean_block(pdf, "embedding", 2, id_col="vec_id")
+    mask, M = CV.decode(arr, 2)
     assert mask.tolist() == [True, False, False, True]
     assert M.shape == (2, 2) and np.isfinite(M).all()
-    rows_all_bad = pdf.iloc[1:3]
-    mask2, M2 = CV.clean_block(rows_all_bad, "embedding", 2, id_col="vec_id")
+    mask2, M2 = CV.decode(arr.slice(1, 2), 2)
     assert not mask2.any() and M2 is None
 
 
@@ -197,14 +196,15 @@ def test_valid_vec_predicate(spark):
 
 
 def test_clean_rows_survives_null_element_vectors(spark):
-    """A NULL element arrives as Python None from collect(); math.isfinite
-    would TypeError on it — the row must drop, not kill the driver."""
-    rows = spark.createDataFrame(
+    """A NULL element in a driver-side ``toArrow()`` collect must drop its
+    row, not poison the matrix or kill the driver."""
+    t = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, [1.0, None]), (3, [float("nan"), 1.0])],
         "query_id long, embedding array<double>",
-    ).collect()
-    kept = CV.clean_rows(rows, "embedding", 2, id_field="query_id")
-    assert [r["query_id"] for r in kept] == [1]
+    ).toArrow()
+    mask, M = CV.decode(t.column("embedding"))
+    assert t.column("query_id").to_numpy()[mask].tolist() == [1]
+    assert M.tolist() == [[1.0, 2.0]]
 
 
 # ------------------------------------------------- property-based contract
@@ -220,64 +220,33 @@ _vector = st.one_of(
     st.none(),
     st.lists(_element, min_size=0, max_size=5),
 )
-_row = st.tuples(st.one_of(st.none(), st.integers(0, 10**17)), _vector)
+_rows = st.lists(_vector, min_size=0, max_size=30)
 
 
-def _valid(v, i, dim):
+def _valid(v, dim):
     import math
 
     return (
-        i is not None
-        and v is not None
+        v is not None
         and len(v) == dim
         and all(x is not None and math.isfinite(x) for x in v)
     )
 
 
 @settings(max_examples=200, deadline=None)
-@given(st.lists(_row, min_size=0, max_size=30), st.integers(1, 5))
+@given(_rows, st.integers(1, 5))
 def test_clean_block_mask_matches_reference_predicate(rows, dim):
-    """For ANY batch composition, clean_block's survivors are exactly the
-    rows with a non-NULL id and a finite dim-length vector, in order —
-    no crash, no silent admission, no over-dropping."""
-    pdf = pd.DataFrame(
-        {
-            "vec_id": pd.array(
-                [i for i, _ in rows], dtype="float64"  # Arrow null-int form
-            ),
-            "embedding": pd.Series(
-                [
-                    None
-                    if v is None
-                    else np.array(
-                        [np.nan if x is None else x for x in v], dtype=np.float64
-                    )
-                    for _, v in rows
-                ],
-                dtype=object,
-            ),
-        }
-    )
-    mask, M = CV.clean_block(pdf, "embedding", dim, id_col="vec_id")
-    want = [_valid(v, i, dim) for i, v in rows]
-    assert mask.tolist() == want
-    if any(want):
-        assert M.shape == (sum(want), dim) and np.isfinite(M).all()
-    else:
-        assert M is None
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.lists(_row, min_size=0, max_size=30), st.integers(1, 5))
-def test_clean_rows_agrees_with_clean_block(rows, dim):
-    """Driver-side and kernel-side cleaners accept EXACTLY the same rows
-    (clean_rows sees Python None where the kernel sees NaN)."""
-
-    class R(dict):
-        def __getitem__(self, k):
-            return dict.__getitem__(self, k)
-
-    row_objs = [R(query_id=i, embedding=v) for i, v in rows]
-    kept = CV.clean_rows(row_objs, "embedding", dim, id_field="query_id")
-    want = [r for (i, v), r in zip(rows, row_objs) if _valid(v, i, dim)]
-    assert kept == want
+    """For ANY batch composition, decode's survivors are exactly the rows
+    with a finite dim-length vector, in order — no crash, no silent
+    admission, no over-dropping. NULL elements ride as Arrow nulls, and
+    the sliced case catches an offset bug in ``flatten``."""
+    arr = _vecs(rows)
+    for start in (0, 3):
+        mask, M = CV.decode(arr.slice(start), dim)
+        kept = [v for v in rows[start:] if _valid(v, dim)]
+        assert mask.tolist() == [_valid(v, dim) for v in rows[start:]]
+        if kept:
+            assert M.shape == (len(kept), dim)
+            assert M.tolist() == kept
+        else:
+            assert M is None

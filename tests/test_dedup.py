@@ -111,6 +111,49 @@ def test_blas_bucketed_recall_and_precision(spark, sf_dir):
     assert all(abs(e[k] - b[k]) <= 1e-9 for k in set(b) & set(e))
 
 
+def test_blas_bucketed_dirty_frame_subset_of_exact(spark):
+    """Fast-tier twin of the bucketed kernel's gate on a hand-built dirty
+    frame: NULL vector, ragged row, NaN element and NULL id all drop; every
+    bucketed pair is an exact pair with the same cosine, and a 60-bit id
+    above 2^53 survives the Arrow kernels exactly."""
+    import math
+
+    import pyarrow as pa
+
+    big = (1 << 60) + 3
+    rows = [
+        (1, [1.0, 0.0, 0.0, 0.0]),
+        (2, [0.99, 0.1, 0.0, 0.0]),
+        (big, [1.0, 0.01, 0.0, 0.0]),
+        (4, [0.0, 1.0, 0.0, 0.0]),
+        (5, [0.0, 1.0, 0.05, 0.0]),
+        (9, [0.0, 0.0, 1.0, 0.0]),
+        (6, None),
+        (7, [1.0, 0.0, 0.0]),
+        (8, [math.nan, 0.0, 0.0, 1.0]),
+        (None, [1.0, 0.0, 0.0, 0.0]),
+    ]
+    # an Arrow table becomes a LocalTableScan; a list of tuples would scan
+    # through a Python RDD on every job and blow the fast tier's 4 s cut
+    emb = spark.createDataFrame(
+        pa.table(
+            {
+                "vec_id": pa.array([i for i, _ in rows], pa.int64()),
+                "embedding": pa.array([v for _, v in rows], pa.list_(pa.float64())),
+            }
+        )
+    )
+    exact = DD.embedding_neardup_pairs(emb, threshold=0.9)
+    bucketed = DD.embedding_neardup_pairs_blas_bucketed(
+        emb, threshold=0.9, bits_per_table=2
+    )
+    e = {(r["id_a"], r["id_b"]): r["cosine"] for r in exact.collect()}
+    b = {(r["id_a"], r["id_b"]): r["cosine"] for r in bucketed.collect()}
+    assert b and not (set(b) - set(e))
+    assert all(abs(e[k] - b[k]) <= 1e-9 for k in b)
+    assert (1, big) in b
+
+
 def test_embedding_lsh_recall_gate(spark, sf_dir):
     """Sign-LSH bucketed near-dup must reach recall >= 0.85 vs exact pairs
     (params auto-tuned from the threshold), with zero false positives

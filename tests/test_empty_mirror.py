@@ -11,7 +11,7 @@ opaque MLlib fit failure. First run of this gate (round 7) found 14
 entries dying on empty input; 9 were fixed (cluster/PQ empty-quantizer
 guards, loud typed error + entry-level degrade for the classifier), 5
 (the BLAS/LSH numpy kernels) were deferred on the r7/r8 staleness budget
-and fixed in round 9 (modal-dim probe + clean_block row masking,
+and fixed in round 9 (modal-dim probe + per-batch row masking,
 functions/cleanvec.py) — the deferral list and its canary are gone, the
 gate covers all entries with ZERO exemptions.
 
