@@ -284,9 +284,8 @@ def knn_exact_blas(
     ``dedup.embedding_neardup_pairs_blas_bucketed`` (sign-LSH bucketed
     per-partition GEMM).
 
-    The query matrix (small) is collected, L2-normalized, and shipped with
-    the kernel closure (PySpark's managed command broadcast — see the
-    inline note); each
+    The query matrix (small) is collected and shipped with the kernel
+    closure (:func:`cosine_scores_blas`, which L2-normalizes it); each
     corpus partition computes one ``block @ Q.T`` matmul inside mapInArrow
     and emits only its LOCAL per-query top-k; a final windowed top-k merges
     partitions. At 100 TB the corpus is scanned once, nothing but (parts × k
@@ -305,7 +304,6 @@ def knn_exact_blas(
     possible (BLAS reduction order).
     """
     import numpy as np
-    import pyarrow as pa
 
     # limit(max+1) bounds the collect itself (no separate count job); one
     # extra row is enough to prove the bound was crossed
@@ -321,42 +319,90 @@ def knn_exact_blas(
             f"than max_queries={max_queries} rows. Use knn_exact or the "
             f"bucketed BLAS dedup path for unbounded query sets."
         )
-    out_schema = f"query_id long, {corpus_id} long, score double"
     # row-fails-not-job: NULL / zero-length / ragged / non-finite query
     # vectors drop (modal dim of the valid rows defines the working
     # dimensionality); an empty or all-invalid query side returns the
     # schema-correct empty frame
     mask, Q = CV.decode(q.column(query_vec))
     if Q is None:
-        return queries.sparkSession.createDataFrame([], out_schema)
+        return queries.sparkSession.createDataFrame(
+            [], _scores_schema(corpus, corpus_id)
+        )
     qids = q.column("query_id").to_numpy()[mask].astype(np.int64)
+    local = cosine_scores_blas(
+        corpus, qids, Q, corpus_id, corpus_vec, k=k, round_decimals=round_decimals
+    )
+    return top_k_per_group(local, ["query_id"], "score", k, tie_break=corpus_id)
+
+
+def _scores_schema(corpus: DataFrame, corpus_id: str):
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [
+            T.StructField("query_id", T.LongType()),
+            T.StructField(corpus_id, corpus.schema[corpus_id].dataType),
+            T.StructField("score", T.DoubleType()),
+        ]
+    )
+
+
+def cosine_scores_blas(
+    corpus: DataFrame,
+    qids,
+    Q,
+    corpus_id: str = "vec_id",
+    corpus_vec: str = "embedding",
+    k: int | None = None,
+    round_decimals: int | None = None,
+) -> DataFrame:
+    """(query_id, <corpus_id>, score): cosine of every valid corpus row
+    against a driver-side query matrix, scored by one ``mapInArrow``
+    kernel — per batch :func:`cleanvec.decode` → unit rows
+    (:func:`vector.safe_row_norms`) → one ``C @ Q.T`` GEMM.
+
+    ``qids`` (int64) and ``Q`` (float64, one decoded row per query) ride
+    the pickled kernel closure instead of an explicit ``sc.broadcast``:
+    PySpark ships large task commands through its own managed
+    TorrentBroadcast (rdd._prepare_for_python_RDD), whose lifecycle is
+    tied to the plan and reclaimed by the ContextCleaner — an explicit
+    handle here could never be destroy()ed without breaking the
+    lazy-DataFrame contract and leaked across bench repeats.
+
+    ``k=None`` emits every (query, valid row) score: no local cut, no
+    window — the caller fuses or ranks. An int ``k`` keeps each batch's
+    LOCAL per-query top-k (argpartition; with ``round_decimals``, a
+    lexsort on (rounded score DESC, id ASC)), for a caller-side merge.
+    The corpus id passes through as Arrow in its own type. A malformed
+    corpus row (NULL, ragged or non-finite vector) contributes nothing
+    and the task lives; NULL ids drop on the JVM side."""
+    import numpy as np
+    import pyarrow as pa
+
     Qn = Q / V.safe_row_norms(Q)
-    # (qids, Qn) ride the pickled kernel closure instead of an explicit
-    # sc.broadcast: PySpark ships large task commands through its own
-    # managed TorrentBroadcast (rdd._prepare_for_python_RDD), whose
-    # lifecycle is tied to the plan and reclaimed by the ContextCleaner —
-    # an explicit handle here could never be destroy()ed without breaking
-    # the lazy-DataFrame contract and leaked across bench repeats.
 
     def part(batches):
         ids_b, Qn_b = qids, Qn
         for batch in batches:
-            # same row contract on the corpus side: a malformed corpus row
-            # contributes no candidates, the partition task lives
             mask, C = CV.decode(batch.column(corpus_vec), Qn_b.shape[1])
             if C is None:
                 continue
-            Cn = C / V.safe_row_norms(C)
-            S = Cn @ Qn_b.T  # (rows, nq)
+            S = (C / V.safe_row_norms(C)) @ Qn_b.T  # (rows, nq)
             if round_decimals is not None:
                 S = np.round(S, round_decimals)
-            kk = min(k, S.shape[0])
-            cids = batch.column(corpus_id).to_numpy()[mask].astype(np.int64)
-            if round_decimals is not None:
+            cids = batch.column(corpus_id)
+            if not mask.all():
+                cids = cids.filter(pa.array(mask))
+            n, nq = S.shape
+            kk = n if k is None else min(k, n)
+            if k is None:
+                top = np.broadcast_to(np.arange(n)[:, None], S.shape)
+            elif round_decimals is not None:
                 # deterministic local cut: (score DESC, id ASC) per query
-                top = np.empty((kk, S.shape[1]), dtype=np.int64)
-                for j in range(S.shape[1]):
-                    top[:, j] = np.lexsort((cids, -S[:, j]))[:kk]
+                cid_keys = cids.to_numpy(zero_copy_only=False)
+                top = np.empty((kk, nq), dtype=np.int64)
+                for j in range(nq):
+                    top[:, j] = np.lexsort((cid_keys, -S[:, j]))[:kk]
             else:
                 # local top-k per query: argpartition (fast path)
                 top = np.argpartition(-S, kk - 1, axis=0)[:kk]
@@ -364,20 +410,17 @@ def knn_exact_blas(
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.repeat(ids_b, kk)),
-                    pa.array(cids[top.T.ravel()]),
-                    pa.array(S[top, np.arange(S.shape[1])].T.ravel()),
+                    cids.take(pa.array(top.T.ravel())),
+                    pa.array(S[top, np.arange(nq)].T.ravel()),
                 ],
                 names=["query_id", corpus_id, "score"],
             )
 
-    # The JVM-side NULL-id filter is the only place NULL ids drop: the
-    # kernel reads the id column as plain int64
-    local = (
+    return (
         corpus.select(corpus_id, corpus_vec)
         .where(F.col(corpus_id).isNotNull())
-        .mapInArrow(part, schema=out_schema)
+        .mapInArrow(part, schema=_scores_schema(corpus, corpus_id))
     )
-    return top_k_per_group(local, ["query_id"], "score", k, tie_break=corpus_id)
 
 
 # --- IVF: centroid-bucketed approximate search ------------------------------

@@ -37,8 +37,15 @@ Endpoint ↔ method map (reference file:line → here):
   here)
 
 Scale design: the corpus is written partitioned by ``lv1_cat`` (partition
-pruning for category-scoped search); BM25 postings shuffle once at build;
-query-time plans only broadcast-join query-sized tables against them.
+pruning for category-scoped :meth:`corpus` reads). :meth:`build_index` pins
+ONE deduplicated search side (``dropDuplicates(["id"])`` over the corpus,
+cached at MEMORY_AND_DISK like the BM25 postings) and builds the BM25 index
+from it; BM25 postings shuffle once at build. Every query reads that pin —
+kNN leg, ``categories`` filter, BM25 category semi-join, final hit join —
+so a query does no parquet scan and no dedup shuffle; query-time plans only
+broadcast-join query-sized tables against the pinned frames. A write to the
+corpus (save, delete, streamed append) releases the pins
+(:meth:`VectorPipeline._invalidate`).
 """
 
 from __future__ import annotations
@@ -46,6 +53,8 @@ from __future__ import annotations
 import shutil
 from collections.abc import Callable, Iterator
 from pathlib import Path
+
+import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,6 +73,7 @@ from .operators import bm25 as BM25
 from .operators import hybrid as HY
 from .operators import knn as KNN
 from .operators.relational import delete_by_ids as _delete_by_ids
+from .session import release_materialized
 
 # A parser maps (filepath, raw bytes) → [(page_number, page_markdown), ...].
 ParserFn = Callable[[str, bytes], list[tuple[int, str]]]
@@ -137,6 +147,7 @@ class VectorPipeline:
         self.embed_backend = embed_backend
         self.upload_root = upload_root
         self._bm25: BM25.BM25Index | None = None
+        self._search_side: DataFrame | None = None
         self._corpus_cache: DataFrame | None = None
 
     # ---- staging (S1/S2) --------------------------------------------------
@@ -295,7 +306,7 @@ class VectorPipeline:
         ok = chunks.filter(F.col("status") == "success").drop("error", "status")
         ok.write.mode(mode).partitionBy("lv1_cat").parquet(str(self.base / "corpus"))
         self._corpus_cache = None
-        self._bm25 = None
+        self._invalidate()
         if remove_original:
             self.clear_staging()
 
@@ -312,13 +323,34 @@ class VectorPipeline:
         return self._corpus_cache
 
     def build_index(self) -> None:
-        """S11 — derive the search-index artifacts from the corpus: BM25
-        postings/stats (cached DataFrames). Idempotent by id
-        (dropDuplicates = ES _id overwrite, elasticsearch_index.py:141)."""
-        docs = self.corpus().dropDuplicates(["id"]).select(
+        """S11 — derive the search-index artifacts from the corpus: the
+        pinned search side and the BM25 postings/stats over it (cached
+        DataFrames). Idempotent by id (dropDuplicates = ES _id overwrite,
+        elasticsearch_index.py:141); a repeated call rebuilds from the
+        current corpus."""
+        self._invalidate()
+        self._search_side = self.corpus().dropDuplicates(["id"]).cache()
+        docs = self._search_side.select(
             F.col("id").alias("doc_id"), F.col("page_content").alias("text")
         )
         self._bm25 = BM25.build_index(docs, "doc_id", "text", cache=True)
+
+    def _invalidate(self) -> None:
+        """Release every frame pinned over the corpus path and refresh
+        Spark's view of it. Spark re-caches only the path a write names:
+        ``delete_by_ids`` writes a staging path and renames it, so without
+        this a later :meth:`build_index` would match the stale cached plans
+        over ``corpus/`` and serve deleted pages."""
+        pinned = [self._search_side]
+        if self._bm25 is not None:
+            idx = self._bm25
+            pinned += [idx.postings, idx.doc_lens, idx.term_df, idx.stats]
+        for df in pinned:
+            if df is not None:
+                release_materialized(df)
+        self._search_side = None
+        self._bm25 = None
+        self.spark.catalog.refreshByPath(str(self.base / "corpus"))
 
     # ---- search (V2–V5, P5, P6) -------------------------------------------
 
@@ -337,33 +369,38 @@ class VectorPipeline:
         bounds 1..100 (routers/es_index.py:45-46). Returns hits joined back
         to corpus columns (V5 — hits are already columnar here).
 
-        ``categories`` restricts the kNN leg to the given ``lv1_cat`` values —
-        since the corpus is WRITTEN partitioned by lv1_cat, this filter is a
-        partition-pruned scan (whole directories skipped, verified in
-        tests), not a row filter.
+        Every leg reads the search side pinned by :meth:`build_index` (no
+        parquet scan, no dedup shuffle per query). The kNN leg scores every
+        pinned page with one Arrow/NumPy GEMV per batch
+        (:func:`knn.cosine_scores_blas`); a page whose vector is NULL,
+        ragged or non-finite never matches the kNN clause (ES semantics for
+        a doc without a vector) and is a hit only through BM25.
+
+        ``categories`` restricts both legs to the given ``lv1_cat`` values
+        by filtering the pinned frame (a cached-batch filter; partition
+        pruning covers category-scoped :meth:`corpus` reads).
         """
         size = max(1, min(int(size), 100))
         if self._bm25 is None:
             self.build_index()
-        qvec = self.embed_texts([query_text])[0]
+        qvec = np.asarray(self.embed_texts([query_text])[0], dtype=np.float64)
         if len(qvec) != self.dim:  # P6 dimension guard (es_index.py:107-111)
             raise ValueError(f"query embedding dim {len(qvec)} != {self.dim}")
-        corpus = self.corpus().dropDuplicates(["id"])
+        if not np.isfinite(qvec).all():
+            raise ValueError("query embedding has non-finite elements")
+        corpus = self._search_side
         if categories is not None:
             corpus = corpus.filter(F.col("lv1_cat").isin(list(categories)))
         queries_df = self.spark.createDataFrame(
             [(0, query_text)], ["query_id", "query_text"]
         )
-        qvec_df = self.spark.createDataFrame(
-            [(0, qvec)], T.StructType([
-                T.StructField("query_id", T.LongType()),
-                T.StructField("embedding", T.ArrayType(T.FloatType())),
-            ]),
-        )
-        knn_scores = KNN.score_pairs(
-            qvec_df, corpus.select(F.col("id").alias("doc_id"), F.col("embeddings")),
+        knn_scores = KNN.cosine_scores_blas(
+            corpus.select(F.col("id").alias("doc_id"), F.col("embeddings")),
+            np.zeros(1, dtype=np.int64),
+            qvec[None, :],
+            corpus_id="doc_id",
             corpus_vec="embeddings",
-        ).select("query_id", "doc_id", "score")
+        )
         bm25_scores = BM25.search(self._bm25, queries_df, k=max(size * 10, 50))
         if categories is not None:
             # the BM25 index is corpus-wide; restrict its leg too, or
@@ -435,7 +472,7 @@ class VectorPipeline:
         shutil.rmtree(final)
         staging.rename(final)
         self._corpus_cache = None
-        self._bm25 = None
+        self._invalidate()
 
     def count(self) -> int:
         return self.corpus().count()
@@ -593,7 +630,7 @@ def _ingest_stream_method(
                 str(self.base / "corpus")
             )
             self._corpus_cache = None
-            self._bm25 = None
+            self._invalidate()
 
     return foreach_batch_index_merge(chunks, write_fn, ckpt)
 

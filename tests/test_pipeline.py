@@ -131,6 +131,176 @@ def test_category_search_prunes_partitions(pipe):
     assert "lv1_cat" in pf
 
 
+def _seq(scala_seq):
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _plan_nodes(plan):
+    """Every node of an executed physical plan, through adaptive plans and
+    query stages. A cached frame's InMemoryTableScan is a leaf here: the
+    plan that BUILT the cache (its parquet scan) is not part of the query."""
+    name = plan.getClass().getSimpleName()
+    yield name, plan
+    if name == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    else:
+        kids = _seq(plan.children())
+    for kid in kids:
+        yield from _plan_nodes(kid)
+
+
+def test_search_plan_reads_only_pinned_frames(pipe):
+    """After build_index a query reads the pinned search side and the
+    cached BM25 frames only: no parquet scan, and no query × corpus cross
+    product (the one nested-loop join allowed broadcasts BM25's one-row
+    (__n, __avgdl) stats). A category-scoped query exercises all four
+    reads of the pinned side: kNN leg, filter, BM25 semi-join, hit join."""
+    df = pipe.search("bread flour catalyst", size=3, categories=["food"])
+    assert df.collect()
+    nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
+    names = [n for n, _ in nodes]
+    assert "InMemoryTableScanExec" in names
+    assert "FileSourceScanExec" not in names
+    assert "CartesianProductExec" not in names
+    for name, node in nodes:
+        if name == "BroadcastNestedLoopJoinExec":
+            sides = [node.left(), node.right()]
+            outputs = [sorted(a.name() for a in _seq(side.output())) for side in sides]
+            assert ["__avgdl", "__n"] in outputs, outputs
+
+
+def _tokens(text):
+    import re
+
+    return [t for t in re.split("[^a-z0-9]+", (text or "").lower()) if t]
+
+
+def _reference_hits(rows, qvec, text, size, categories=None):
+    """Plain-Python POST /search: Lucene BM25 (k1=1.2, b=0.75) top
+    max(10·size, 50) over the whole corpus, cosine × 0.8 for every page
+    with a valid vector, weighted sum over the union, category scope on
+    both legs, min_score 0.0, ties by id."""
+    import math
+    from collections import Counter
+
+    k1, b = 1.2, 0.75
+    docs = {r["id"]: Counter(_tokens(r["page_content"])) for r in rows}
+    dl = {d: sum(c.values()) for d, c in docs.items() if c}
+    n, avgdl = len(dl), sum(dl.values()) / len(dl)
+    bm25 = {}
+    for term in set(_tokens(text)):
+        having = [d for d, c in docs.items() if term in c]
+        idf = math.log(1.0 + (n - len(having) + 0.5) / (len(having) + 0.5))
+        for d in having:
+            tf = docs[d][term]
+            bm25[d] = bm25.get(d, 0.0) + idf * (
+                tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl[d] / avgdl))
+            )
+    cut = dict(sorted(bm25.items(), key=lambda kv: (-kv[1], kv[0]))[: max(10 * size, 50)])
+    q = np.asarray(qvec, dtype=np.float64)
+    fused = {}
+    for r in rows:
+        if categories is not None and r["lv1_cat"] not in categories:
+            continue
+        v = r["embeddings"]
+        knn = None
+        if v is not None and len(v) == len(q):
+            c = np.asarray(v, dtype=np.float64)
+            knn = float(c @ q / (np.linalg.norm(c) * np.linalg.norm(q)))
+        if r["id"] in cut or knn is not None:
+            fused[r["id"]] = cut.get(r["id"], 0.0) + 0.8 * (knn or 0.0)
+    hits = [(d, s) for d, s in fused.items() if s >= 0.0]  # min_score=0.0
+    return sorted(hits, key=lambda kv: (-kv[1], kv[0]))[:size]
+
+
+@pytest.fixture(scope="module")
+def malformed_store(spark, tmp_path_factory):
+    """A pipeline whose corpus holds one page with a NULL vector and one
+    with a short vector, both written through save_corpus."""
+    base = tmp_path_factory.mktemp("vp_bad")
+    src = base / "src"
+    src.mkdir()
+    (src / "engines.txt").write_text(
+        "spark shuffles stages\fcatalyst rewrites plans\fwhisk eggs with sugar"
+    )
+    (src / "baking.txt").write_text("bread needs flour and yeast\fovens bake bread")
+    p = VectorPipeline(spark, str(base / "store"), dim=16)
+    p.stage_files([str(src / "engines.txt")], server_path="tech")
+    p.stage_files([str(src / "baking.txt")], server_path="food")
+    chunks = p.embed(p.parse())
+    fname, page = F.col("filename"), F.col("page")
+    null_page = (fname == "engines.txt") & (page == "2")  # whisk eggs ...
+    short_page = (fname == "baking.txt") & (page == "1")  # ovens bake bread
+    chunks = chunks.withColumn(
+        "embeddings",
+        F.when(null_page, F.lit(None).cast("array<float>"))
+        .when(short_page, F.array(F.lit(1.0).cast("float"), F.lit(0.5).cast("float")))
+        .otherwise(F.col("embeddings")),
+    )
+    p.save_corpus(chunks, mode="overwrite")
+    p.build_index()
+    assert p._bm25.n_docs == 5  # materializes the pinned frames
+    rows = p.corpus().collect()
+    bad = {r["id"] for r in rows if r["embeddings"] is None or len(r["embeddings"]) != 16}
+    assert len(bad) == 2
+    return p, rows, bad
+
+
+@pytest.mark.parametrize(
+    "text,categories",
+    [
+        ("bread flour", None),
+        ("bread flour", ["food"]),
+        ("whisk catalyst", None),
+        ("spark plans", ["tech"]),
+    ],
+)
+def test_search_matches_driver_reference(malformed_store, text, categories):
+    p, rows, bad = malformed_store
+    got = [
+        (r["id"], r["score"])
+        for r in p.search(text, size=10, categories=categories).collect()
+    ]
+    want = _reference_hits(rows, p.embed_texts([text])[0], text, 10, categories)
+    assert [d for d, _ in got] == [d for d, _ in want]
+    for (_, gs), (_, ws) in zip(got, want):
+        assert abs(gs - ws) <= 1e-9 * max(1.0, abs(ws))
+    # a page without a usable vector is a hit only through a query term
+    terms = set(_tokens(text))
+    by_id = {r["id"]: r for r in rows}
+    for d, _ in got:
+        if d in bad:
+            assert terms & set(_tokens(by_id[d]["page_content"]))
+
+
+def test_delete_rebuilds_index_from_current_corpus(spark, tmp_path):
+    """delete_by_ids writes a staging path and renames it; the index built
+    afterwards must see the surviving corpus only, not frames Spark cached
+    over the old files."""
+    src = tmp_path / "src_del"
+    src.mkdir()
+    (src / "a.txt").write_text("alpha beta")
+    (src / "b.txt").write_text("alpha gamma")
+    store = str(tmp_path / "store_del")
+    p = VectorPipeline(spark, store, dim=16)
+    p.save_corpus(p.embed(p.parse(str(src))), mode="overwrite")
+    p.build_index()
+    assert p._bm25.n_docs == 2  # materializes the pinned frames
+    victim = p.corpus().orderBy("id").first()["id"]
+    p.delete_by_ids([victim])
+    p.build_index()
+    assert p._bm25.n_docs == 1
+    # min_score=-1 keeps every union member, whatever its cosine's sign
+    hits = [(r["id"], r["score"]) for r in p.search("alpha", min_score=-1.0).collect()]
+    p._invalidate()  # the fresh pipeline must build from the files, not p's pins
+    fresh = VectorPipeline(spark, store, dim=16)
+    want = [(r["id"], r["score"]) for r in fresh.search("alpha", min_score=-1.0).collect()]
+    assert hits == want
+    assert len(hits) == 1 and hits[0][0] != victim
+
+
 def test_training_set_build_respects_budget(spark, sf_dir):
     from auto_vectordb_spark.pipeline import build_training_set
 
