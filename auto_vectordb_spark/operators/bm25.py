@@ -93,7 +93,16 @@ def build_index(
     +md5 front ends, tokenize+explode is cheap and the postings groupBy's
     map-side combine crushes the token stream before its shuffle, so the
     extra round-robin exchange costs more than the single-core stage it
-    parallelizes."""
+    parallelizes.
+
+    Measured dead-end (don't retry): a one-shot scorer without a prebuilt
+    index — the token stream broadcast-pruned to the query terms before the
+    (term, doc_id) shuffle, df from a window over the pruned tf table — was
+    1.5x SLOWER than this index + :func:`score_terms` at sf0.1 (min-of-5
+    1.98 s vs 1.30 s interleaved, r12). AQE stage reuse already shares the
+    postings exchange between the probe join and the term_df branch, so
+    the index path pays the corpus explode+shuffle once; the pruned plan
+    pays a per-token probe plus a sort-merge join against doc_lens."""
     toks = tokenize(F.col(text_col))
     tokens = docs.select(F.col(id_col).alias("doc_id"), F.explode(toks).alias("term"))
     postings = tokens.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
@@ -152,74 +161,6 @@ def search(index: BM25Index, queries: DataFrame, k: int = 10) -> DataFrame:
     )
     scored = score_terms(index, terms)
     return top_k_per_group(scored, ["query_id"], "score", k, tie_break="doc_id")
-
-
-def score_terms_adhoc(
-    docs: DataFrame,
-    query_terms: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """:func:`score_terms` semantics WITHOUT a prebuilt index — the right
-    plan when the index is not persisted (one-shot search over a corpus).
-
-    Scores are bit-identical to the index path; the plan is materially
-    better for the one-shot case:
-
-    - the exploded token stream is **broadcast-pruned to query terms BEFORE
-      the (term, doc_id) shuffle** — the full-corpus postings shuffle that
-      ``build_index`` pays never happens, only matching rows move;
-    - per-term df comes from a window over the pruned tf table (df of a
-      query term only needs rows for that term — prune-invariant), so there
-      is no term_df branch re-deriving postings (the diamond that made the
-      index path recompute its corpus scan);
-    - N / avgdl still come from the cheap no-explode corpus scan (global by
-      definition; a broadcast 1-row cross join, no collect — the whole
-      search is one job).
-
-    Net: 2 corpus scans (1 stats, 1 explode+prune) and a query-sized
-    shuffle, vs the index path's explode shuffle + recompute. At 100 TB
-    with a *persisted* postings table, prefer build_index(cache)/score_terms
-    — this operator is for when no index exists.
-    """
-    from pyspark.sql import Window
-
-    from .dedup import fan_out_small_scan
-
-    # tokenize is the expensive per-row stage and this plan runs it in
-    # three legs (explode, doc_lens join, stats agg); fan an under-split
-    # scan once so all three parallelize — conditional, no-op on a
-    # well-partitioned 100 TB corpus (same fix as every dedup front end)
-    docs = fan_out_small_scan(docs)
-    toks = tokenize(F.col(text_col))
-    doc_lens = docs.select(F.col(id_col).alias("doc_id"), F.size(toks).alias("dl")).filter(
-        F.col("dl") > 0
-    )
-    qterms = F.broadcast(query_terms.select("term").distinct())
-    tokens = docs.select(F.col(id_col).alias("doc_id"), F.explode(toks).alias("term"))
-    tf_table = (
-        tokens.join(qterms, "term")  # broadcast semi-prune, pre-shuffle
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
-    with_df = tf_table.withColumn("df", F.count("*").over(Window.partitionBy("term")))
-    qt = F.broadcast(query_terms.select("query_id", "term").distinct())
-    matched = (
-        qt.join(with_df, "term")
-        .join(doc_lens, "doc_id")
-        .crossJoin(F.broadcast(_stats_of(doc_lens)))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("__n") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    tf, dl = F.col("tf").cast("double"), F.col("dl").cast("double")
-    score = idf * (
-        tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / F.col("__avgdl")))
-    )
-    return matched.select(
-        "query_id", "doc_id", score.alias("term_score")
-    ).groupBy("query_id", "doc_id").agg(F.sum("term_score").alias("score"))
 
 
 def index_from_dir(spark, index_dir: str, cache: bool = False) -> BM25Index:

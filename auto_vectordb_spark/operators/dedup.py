@@ -35,6 +35,7 @@ from ..functions import cleanvec as CV
 from ..functions import hashing as H
 from ..functions import vector as V
 from ..functions.text import shingles, tokenize
+from ..session import release_materialized
 
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4  # 4 bands × 4 rows
@@ -1132,14 +1133,19 @@ def connected_components(
             edges.join(labels, edges["src"] == labels["node"])
             .select(F.col("dst").alias("node"), "label")
         )
+        prev = labels
         labels = (
             labels.unionAll(prop).groupBy("node").agg(F.min("label").alias("label"))
         ).localCheckpoint(eager=True)
+        # the new round is materialized: release the previous round's
+        # blocks (same rule as cluster.lloyd; the seed labels are an
+        # un-checkpointed projection — a no-op)
+        release_materialized(prev)
         cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-    edges.unpersist()
+    release_materialized(edges)
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component_id"))
 
 

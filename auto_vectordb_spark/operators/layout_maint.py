@@ -35,12 +35,29 @@ read, not rewritten, not even listed; the ranged write is one range-key
 shuffle (global_rank) + one 16-value hash shuffle; the ranged probe's
 pruning decision is pure metadata (driver-side interval intersection
 against per-file bounds) before any row is read.
+
+Corpus pin: :func:`zorder_compaction_apply` and :func:`zorder_write_ranged`
+pin their cleaned narrow events frame with ``persist(DISK_ONLY)`` +
+``count()`` and release it with ``session.release_materialized`` once
+every consumer has executed. At 20M
+rows (200x the bench SF) the postures measured: localCheckpoint 18.1 s,
+DISK_ONLY 18.3 s, no pin (every consumer re-derives from the scan) 20.1 s,
+MEMORY_AND_DISK 21.9 s (eviction churn) — OPTIMIZATION_r13.md. DISK_ONLY
+is within 1% of the checkpoint and KEEPS LINEAGE, so a lost executor
+recomputes its blocks instead of killing the job (the r12 verdict's
+100 TB objection to a corpus-sized localCheckpoint). Safe because these
+frames read only immutable inputs; the self-overwrite-hazard frame in
+:func:`zorder_compaction_apply` stays a localCheckpoint precisely because
+its recompute would read overwritten files.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import release_materialized
 
 from .layout import (
     GRID_BITS,
@@ -54,58 +71,6 @@ from .layout import (
 from .schedule import global_rank, ntile_expr
 
 _MAIN_SCHEMA = "{pay} long, xg long, yg long, z_bucket long"
-
-
-def _materialize_corpus(df: DataFrame) -> DataFrame:
-    """Materialize a corpus-sized, multiply-consumed working set — the
-    posture knob the r12 verdict (#3) asked to settle for the two z-order
-    maintenance paths, which checkpoint the cleaned narrow events frame.
-
-    Modes ($SPARK_GRAFT_CORPUS_MAT, measured head-to-head at 20M rows
-    (200x the bench SF): checkpoint 18.1 s, disk 18.3 s, none 20.1 s,
-    memdisk 21.9 s — full table in OPTIMIZATION_r13.md):
-
-    - ``disk`` (default): ``persist(StorageLevel.DISK_ONLY)`` + a count()
-      to materialize — measured WITHIN 1% of localCheckpoint at 20M rows
-      and it KEEPS LINEAGE, so a lost executor recomputes its blocks
-      instead of killing the job; non-replicated lineage-free blocks were
-      the r12 verdict's 100 TB objection to the corpus-sized
-      localCheckpoint. Safe here because these frames read only immutable
-      inputs (the self-overwrite-hazard frame below stays a
-      localCheckpoint precisely because its recompute would read
-      overwritten files — the lineage CUT is the point there).
-    - ``checkpoint``: eager ``localCheckpoint`` — the r12 posture;
-      equally fast, no recompute on executor loss.
-    - ``memdisk``: ``persist(StorageLevel.MEMORY_AND_DISK)`` — measured
-      slowest at size (eviction churn); kept for completeness.
-    - ``none``: no materialization — every consumer re-derives from the
-      source scan; the double-scan baseline, ~10% slower at 20M rows.
-
-    Release the returned frame with :func:`_release_corpus` once every
-    consumer has executed — corpus-sized blocks must not outlive the
-    operator call (the same explicit-release rule cluster.lloyd follows).
-    """
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_CORPUS_MAT", "disk")
-    if mode == "none":
-        return df
-    if mode in ("disk", "memdisk"):
-        from pyspark import StorageLevel
-
-        level = StorageLevel.DISK_ONLY if mode == "disk" else StorageLevel.MEMORY_AND_DISK
-        out = df.persist(level)
-        out.count()
-        return out
-    return df.localCheckpoint(eager=True)
-
-
-def _release_corpus(df: DataFrame) -> None:
-    """Free the blocks :func:`_materialize_corpus` pinned (a no-op for
-    mode=none)."""
-    from ..session import release_materialized
-
-    release_materialized(df)
 
 
 def _clean(events: DataFrame, id_col: str, x_col: str, ts_col: str) -> DataFrame:
@@ -180,14 +145,17 @@ def zorder_compaction_apply(
     # the session's parallelism (conditional — a no-op on a
     # well-partitioned 100 TB scan) and materialized ONCE; stats, plan,
     # base write, delta mapping and side write all derive from it.
-    ev = _materialize_corpus(
-        fan_out_small_scan(_clean(events, id_col, x_col, ts_col)).select(
+    ev = (
+        fan_out_small_scan(_clean(events, id_col, x_col, ts_col))
+        .select(
             F.col(id_col),
             F.col(x_col).cast("long").alias("__x"),
             _hour_index(ts_col).alias("__y"),
             (F.pmod(F.col(id_col), F.lit(delta_mod)) == 0).alias("__is_delta"),
         )
+        .persist(StorageLevel.DISK_ONLY)
     )
+    ev.count()  # the corpus pin (module docstring)
     # ONE min-max aggregate serves zorder_write's grid, the plan's grid
     # and the delta mapping (the r11 shape computed it three times —
     # identical input set, identical values). Collected as int literals:
@@ -316,8 +284,8 @@ def zorder_compaction_apply(
     # every consumer of the corpus-sized frames has executed (writes
     # committed, plan checkpointed): release their blocks — corpus-sized
     # storage must not outlive the operator call (r12 verdict #2 caveat)
-    _release_corpus(merged)
-    _release_corpus(ev)
+    release_materialized(merged)
+    release_materialized(ev)
     return plan
 
 
@@ -585,14 +553,17 @@ def zorder_write_ranged(
     # no-op on a well-partitioned 100 TB scan) and materialized ONCE;
     # the stats agg and both of global_rank's actions (boundary sketch
     # collect, consumer write) recompute only the cheap grid/Morton map
-    # over the checkpointed blocks.
-    ev = _materialize_corpus(
-        fan_out_small_scan(_clean(events, id_col, x_col, ts_col)).select(
+    # over the pinned blocks.
+    ev = (
+        fan_out_small_scan(_clean(events, id_col, x_col, ts_col))
+        .select(
             F.col(id_col),
             F.col(x_col).cast("long").alias("__x"),
             _hour_index(ts_col).alias("__y"),
         )
+        .persist(StorageLevel.DISK_ONLY)
     )
+    ev.count()  # the corpus pin (module docstring)
     row = ev.agg(
         F.min("__x").alias("__xmin"),
         F.max("__x").alias("__xmax"),
@@ -633,8 +604,8 @@ def zorder_write_ranged(
         "z_file"
     ).parquet(path)
     # stats agg, global_rank's sketch and the write have all executed:
-    # release the corpus-sized blocks (see _materialize_corpus)
-    _release_corpus(ev)
+    # release the corpus-sized blocks (the corpus pin, module docstring)
+    release_materialized(ev)
 
 
 def probe_z_intervals(

@@ -14,15 +14,14 @@ memory fleet-wide.
 Scale design
 ------------
 * **Training / encoding**: codebooks are tiny (m · ksub · d/m doubles) and
-  inlined as literal arrays → encoding is a map-only scan (same zero-join
-  shape as cluster.assign_centroids). Deterministic codebooks here are
-  "subvectors of the ksub lowest-id rows" — the standard seeded-sample
-  baseline; :func:`pq_codebooks_kmeans` upgrades them with per-subspace
-  MLlib KMeans without changing any downstream shape. THE PRODUCTION
-  DEFAULT is the trained path at m=16/ksub=256 via the broadcast
-  encode/ADC functions (recall@10 0.82 vs the seed baseline's 0.31 —
-  RECALL.md; gated in tests/test_ann.py): use the seed codebooks only as
-  the oracle-attestable twin.
+  ship inside an Arrow/NumPy kernel → encoding is a map-only scan (same
+  zero-join shape as cluster.assign_centroids). Deterministic codebooks
+  here are "subvectors of the ksub lowest-id rows" — the standard
+  seeded-sample baseline; :func:`pq_codebooks_kmeans` upgrades them with
+  per-subspace MLlib KMeans without changing any downstream shape. THE
+  PRODUCTION DEFAULT is the trained path at m=16/ksub=256 (recall@10 0.82
+  vs the seed baseline's 0.31 — RECALL.md; gated in tests/test_ann.py):
+  use the seed codebooks only as the oracle-attestable twin.
 * **Search (ADC)**: the per-query distance table (m · ksub doubles) is
   broadcast; scoring a corpus row is ``Σ_j dtable[j][code_j]`` — array
   element_at lookups, no float math over the original vectors, one scan,
@@ -59,8 +58,8 @@ def pq_codebooks_seed(
        the default m=4/ksub=16 measure recall@10 ≈ 0.31 on isotropic 64-d
        data (RECALL.md) — they exist because they are deterministic and
        SQL-expressible, i.e. cross-engine attestable. Ship
-       :func:`pq_codebooks_kmeans` at m=16/ksub=256 with the broadcast
-       encode/ADC path instead (recall@10 ≈ 0.82, gated >= 0.8 in
+       :func:`pq_codebooks_kmeans` at m=16/ksub=256 instead (recall@10
+       ≈ 0.82, gated >= 0.8 in
        tests/test_ann.py::test_trained_pq_recall_gate; registry entries
        knn_pq_adc_trained / knn_ivf_pq_trained)."""
     # train on the ksub lowest-id VALID vectors: a NULL / zero-length /
@@ -167,70 +166,6 @@ def pq_codebooks_kmeans(
         cached.unpersist()
 
 
-def _sub_argmin(subvec, codebook: list[list[float]], round_decimals: int = 6):
-    """struct(d, code) of the nearest codeword for one subvector column."""
-    cands = F.array(
-        *[
-            F.struct(
-                F.round(
-                    sqdist(subvec, F.array(*[F.lit(float(x)) for x in c])), round_decimals
-                ).alias("d"),
-                F.lit(ci).alias("code"),
-            )
-            for ci, c in enumerate(codebook)
-        ]
-    )
-    return F.array_min(cands)
-
-
-def pq_encode_exprs(
-    vectors: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, codes array<int>) — map-only encode against LITERAL codebook
-    expressions: every codeword inlined as an array literal, the argmin as
-    nested array_min/struct expressions inside whole-stage codegen.
-
-    This is the teaching shape and the INDEPENDENT JVM-expression twin the
-    Arrow kernel's bit-identity tests compare against
-    (tests/test_ann.py::test_pq_broadcast_paths_match_literal). It is NOT
-    the default entry path: even at the small oracle knobs (m=4, ksub=16)
-    the 64 inlined sqdist aggregates cost ~3.8 s of driver-side ANALYSIS
-    per query — a fixed planning cost that dwarfs execution on anything
-    but huge inputs (opt guide §7.3 "very large plans") — measured r13,
-    which is why :func:`pq_encode` routes through the Arrow kernel."""
-    if not codebooks:
-        return _empty_codes(vectors, id_col)
-    v = V.as_double_array(F.col(vec_col))
-    sub = len(codebooks[0][0])
-    codes = F.array(
-        *[
-            _sub_argmin(F.slice(v, j * sub + 1, sub), cb)["code"]
-            for j, cb in enumerate(codebooks)
-        ]
-    )
-    return vectors.select(F.col(id_col), codes.alias("codes"))
-
-
-def pq_encode(
-    vectors: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, codes array<int>) — map-only encode. Delegates to the Arrow
-    kernel (:func:`pq_encode_broadcast`), which is test-pinned
-    bit-identical to the literal expression twin
-    (:func:`pq_encode_exprs`) including rounded-tie and malformed-row
-    cases, and avoids the expression twin's measured ~3.8 s per-query
-    driver ANALYSIS cost (r13; the plan inlined one sqdist aggregate per
-    codeword). Oracle hashes for pq_encode / knn_pq_adc / knn_ivf_pq
-    re-attested at all three SFs after the switch."""
-    return pq_encode_broadcast(vectors, codebooks, vec_col=vec_col, id_col=id_col)
-
-
 def _empty_codes(vectors: DataFrame, id_col: str) -> DataFrame:
     """Empty (id, codes) frame with the normal encode schema — the
     degenerate result when the codebooks were trained on an empty slice."""
@@ -255,7 +190,7 @@ def _empty_topk(queries: DataFrame, codes: DataFrame, corpus_id: str) -> DataFra
 
 def _codebook_df(spark, codebooks: list[list[list[float]]]) -> DataFrame:
     """One-row DataFrame carrying the codebooks as DATA (``__cb``:
-    array<array<array<double>>>) for the broadcast encode/search path."""
+    array<array<array<double>>>) for the ADC distance tables."""
     return spark.createDataFrame(
         [(codebooks,)], "__cb array<array<array<double>>>"
     )
@@ -281,32 +216,33 @@ def _round6_jvm(x: float) -> float:
     )
 
 
-def pq_encode_broadcast(
+def pq_encode(
     vectors: DataFrame,
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """(id, codes array<int>) — encode against data-driven codebooks with
-    a vectorized Arrow/NumPy argmin kernel.
+    """(id, codes array<int>) — map-only encode with a vectorized
+    Arrow/NumPy argmin kernel.
 
-    :func:`pq_encode_exprs` inlines every codeword into the plan — ideal
-    for small books (whole-stage codegen, zero joins) but explodes the
-    expression tree at production sizes — m=16 x ksub=256 is 4096 literal
-    arrays, beyond what codegen handles. Through r12 this path carried the
-    codebook as a broadcast one-row table and ran the argmin in row-local
-    higher-order lambdas, which evaluate INTERPRETED — measured as the
-    dominant cost of the two trained-PQ registry entries (r12 verdict #4).
-    Now the codebook ships inside an Arrow ``mapInArrow`` kernel (a few
+    The codebook ships inside an Arrow ``mapInArrow`` kernel (a few
     hundred KB in the task closure) and the m x ksub distance argmin runs
     as NumPy float64 batch matrix ops (opt guide §4.2: hand whole batches
-    to vectorized native code). Still one map-only scan of the vectors —
-    the correct 100 TB shape; the corpus never moves.
+    to vectorized native code). One map-only scan of the vectors — the
+    correct 100 TB shape; the corpus never moves.
 
-    Bit-identical to the literal path (test-pinned,
-    tests/test_ann.py::test_pq_broadcast_paths_match_literal): distances
-    accumulate in the same sequential float64 order as ``cluster.sqdist``,
-    argmin resolves rounded-1e-6 ties to the lowest code exactly like the
+    Measured dead ends (don't retry): inlining every codeword into the
+    plan as literal expressions costs ~3.8 s of driver-side ANALYSIS per
+    query even at m=4/ksub=16 and is beyond codegen at m=16/ksub=256
+    (r13); carrying the codebook as a broadcast one-row table with the
+    argmin in row-local higher-order lambdas evaluates INTERPRETED — the
+    dominant cost of the trained-PQ entries through r12 (3.2 s -> 0.55 s
+    warm at sf0.1 on this kernel).
+
+    Bit-identical to the literal-expression twin in tests/pq_literal.py
+    (test-pinned, tests/test_ann.py): distances accumulate in the same
+    sequential float64 order as ``cluster.sqdist``, argmin resolves
+    rounded-1e-6 ties to the lowest code exactly like the
     ``array_min(struct(round(d,6), code))`` expression (near-ties within
     the rounding window fall back to the JVM's exact HALF_UP semantics via
     :func:`_round6_jvm`), and malformed rows degrade identically: a NULL /
@@ -419,28 +355,14 @@ def pq_encode_broadcast(
     return src.mapInArrow(encode, schema=f"{id_col} {id_type}, codes array<int>")
 
 
-def pq_adc_topk_broadcast(
-    queries: DataFrame,
-    codes: DataFrame,
-    codebooks: list[list[list[float]]],
-    k: int = 10,
-    query_vec: str = "embedding",
-    corpus_id: str = "vec_id",
+def _query_dtables(
+    queries: DataFrame, query_vec: str, codebooks: list[list[list[float]]]
 ) -> DataFrame:
-    """(query_id, vec_id, adist) — ADC top-k with data-driven distance
-    tables (the :func:`pq_adc_topk` twin for production-size codebooks).
-
-    The per-query dtable (m x ksub quantized int64 sub-distances) is
-    computed ONCE per query row from the broadcast codebook table, then the
-    broadcast-crossJoin scoring is the same m element_at lookups + exact
-    int sum as the literal path; the code table still never shuffles.
-    """
-    if not codebooks:
-        return _empty_topk(queries, codes, corpus_id)
+    """(query_id, __dt) — per-query ADC distance tables: quantized int64
+    sqdist of each query subvector against every codeword of the
+    broadcast codebook table, computed once per query row."""
     qv = V.as_double_array(F.col(query_vec))
     sub = len(codebooks[0][0])
-    m = len(codebooks)
-    cb = _codebook_df(queries.sparkSession, codebooks)
     dtables = F.transform(
         F.col("__cb"),
         lambda book, j: F.transform(
@@ -450,115 +372,20 @@ def pq_adc_topk_broadcast(
             ).cast("long"),
         ),
     )
-    q = F.broadcast(
-        queries.crossJoin(F.broadcast(cb)).select(
-            F.col("query_id"), dtables.alias("__dt")
-        )
-    )
-    score_q = None
-    for j in range(m):
-        term = F.element_at(F.col("__dt")[j], F.col("codes")[j] + 1)
-        score_q = term if score_q is None else score_q + term
-    scored = q.crossJoin(codes).select(
-        "query_id",
-        F.col(corpus_id),
-        (score_q.cast("double") / _Q).alias("adist"),
-    )
-    return top_k_per_group(
-        scored, ["query_id"], "adist", k, ascending=True, tie_break=corpus_id
-    )
-
-
-def ivf_pq_topk_broadcast(
-    queries: DataFrame,
-    codes_indexed: DataFrame,
-    centroids: DataFrame,
-    codebooks: list[list[list[float]]],
-    k: int = 10,
-    nprobe: int = 2,
-    query_vec: str = "embedding",
-    corpus_id: str = "vec_id",
-) -> DataFrame:
-    """IVF-PQ (IVFADC) with data-driven distance tables — the
-    :func:`ivf_pq_topk` twin for production-size codebooks (same coarse L2
-    cell probing, same broadcast(probes x dtables) ⋈ codes join on
-    centroid_id; the code table never shuffles and at scale its
-    partitionBy("centroid_id") layout prunes the scan to ~nprobe/n_cells).
-    """
-    if not codebooks:
-        return _empty_topk(queries, codes_indexed, corpus_id)
-    qv = V.as_double_array(F.col(query_vec))
-    sub = len(codebooks[0][0])
-    m = len(codebooks)
-    cscored = queries.select(F.col("query_id"), qv.alias("__qv")).crossJoin(
-        F.broadcast(
-            centroids.select(
-                F.col("centroid_id"), V.as_double_array(F.col("centroid")).alias("__cv")
-            )
-        )
-    ).select(
-        "query_id",
-        "centroid_id",
-        F.round(sqdist(F.col("__qv"), F.col("__cv")), 6).alias("__cd"),
-    )
-    probes = top_k_per_group(
-        cscored, ["query_id"], "__cd", nprobe, ascending=True, tie_break="centroid_id"
-    ).select("query_id", "centroid_id")
     cb = _codebook_df(queries.sparkSession, codebooks)
-    dtables = F.transform(
-        F.col("__cb"),
-        lambda book, j: F.transform(
-            book,
-            lambda cw: F.round(
-                sqdist(F.slice(qv, j * F.lit(sub) + 1, sub), cw) * _Q
-            ).cast("long"),
-        ),
-    )
-    q = queries.crossJoin(F.broadcast(cb)).select(
+    return queries.crossJoin(F.broadcast(cb)).select(
         F.col("query_id"), dtables.alias("__dt")
     )
+
+
+def _adc_dist(m: int):
+    """Σ_j dtable[j][code_j] as an exact int64 sum, then rescaled to the
+    double ``adist`` (reduction-order-independent, parity rule 1)."""
     score_q = None
     for j in range(m):
         term = F.element_at(F.col("__dt")[j], F.col("codes")[j] + 1)
         score_q = term if score_q is None else score_q + term
-    cand = F.broadcast(probes.join(q, "query_id")).join(codes_indexed, "centroid_id")
-    scored = cand.select(
-        "query_id",
-        F.col(corpus_id),
-        (score_q.cast("double") / _Q).alias("adist"),
-    )
-    return top_k_per_group(
-        scored, ["query_id"], "adist", k, ascending=True, tie_break=corpus_id
-    )
-
-
-def _query_dtables(query_vec: str, codebooks: list[list[list[float]]]):
-    """Per-query ADC distance-table columns (__dt0..__dtm-1): quantized int64
-    sqdist of each query subvector against every codeword — tiny literals,
-    evaluated once per query row."""
-    qv = V.as_double_array(F.col(query_vec))
-    sub = len(codebooks[0][0])
-    return [
-        F.array(
-            *[
-                F.round(
-                    sqdist(F.slice(qv, j * sub + 1, sub), F.array(*[F.lit(float(x)) for x in c]))
-                    * _Q
-                ).cast("long")
-                for c in cb
-            ]
-        ).alias(f"__dt{j}")
-        for j, cb in enumerate(codebooks)
-    ]
-
-
-def _adc_score(m: int):
-    """Σ_j dtable_j[code_j] — exact int64 ADC score expression."""
-    score_q = None
-    for j in range(m):
-        term = F.element_at(F.col(f"__dt{j}"), F.col("codes")[j] + 1)
-        score_q = term if score_q is None else score_q + term
-    return score_q
+    return (score_q.cast("double") / _Q).alias("adist")
 
 
 def pq_adc_topk(
@@ -569,41 +396,19 @@ def pq_adc_topk(
     query_vec: str = "embedding",
     corpus_id: str = "vec_id",
 ) -> DataFrame:
-    """(query_id, vec_id, adist) — asymmetric-distance top-k. Delegates to
-    the data-driven twin (:func:`pq_adc_topk_broadcast`), test-pinned
-    bit-identical, for the same reason :func:`pq_encode` does: the literal
-    distance-table expressions cost seconds of driver ANALYSIS per query
-    (one sqdist tree per codeword) regardless of data size (r13)."""
-    return pq_adc_topk_broadcast(
-        queries, codes, codebooks, k=k, query_vec=query_vec, corpus_id=corpus_id
-    )
+    """(query_id, vec_id, adist) — asymmetric-distance (ADC) top-k.
 
-
-def pq_adc_topk_exprs(
-    queries: DataFrame,
-    codes: DataFrame,
-    codebooks: list[list[list[float]]],
-    k: int = 10,
-    query_vec: str = "embedding",
-    corpus_id: str = "vec_id",
-) -> DataFrame:
-    """(query_id, vec_id, adist) — asymmetric-distance top-k with LITERAL
-    distance-table expressions (the independent JVM twin, see
-    :func:`pq_encode_exprs` for why it is not the default path).
-
-    The query side gains m literal distance-table columns (query subvector
-    vs every codeword, quantized int64); the broadcast crossJoin then scores
-    each corpus row with m element_at lookups + an exact int sum. The code
-    table is the ONLY corpus-side input — at scale this reads ~1.5 % of the
-    float bytes and still never shuffles the big side.
+    The per-query dtable (m x ksub quantized int64 sub-distances) is
+    computed ONCE per query row from the broadcast codebook table; the
+    broadcast crossJoin then scores each corpus row with m element_at
+    lookups + an exact int sum. The code table is the ONLY corpus-side
+    input — at scale ~1.5 % of the float bytes — and never shuffles.
     """
     if not codebooks:
         return _empty_topk(queries, codes, corpus_id)
-    q = F.broadcast(queries.select(F.col("query_id"), *_query_dtables(query_vec, codebooks)))
+    q = F.broadcast(_query_dtables(queries, query_vec, codebooks))
     scored = q.crossJoin(codes).select(
-        "query_id",
-        F.col(corpus_id),
-        (_adc_score(len(codebooks)).cast("double") / _Q).alias("adist"),
+        "query_id", F.col(corpus_id), _adc_dist(len(codebooks))
     )
     return top_k_per_group(
         scored, ["query_id"], "adist", k, ascending=True, tie_break=corpus_id
@@ -620,35 +425,8 @@ def ivf_pq_topk(
     query_vec: str = "embedding",
     corpus_id: str = "vec_id",
 ) -> DataFrame:
-    """IVF-PQ top-k. Delegates to the data-driven twin
-    (:func:`ivf_pq_topk_broadcast`), test-pinned bit-identical, for the
-    same driver-analysis-cost reason as :func:`pq_encode` (r13)."""
-    return ivf_pq_topk_broadcast(
-        queries,
-        codes_indexed,
-        centroids,
-        codebooks,
-        k=k,
-        nprobe=nprobe,
-        query_vec=query_vec,
-        corpus_id=corpus_id,
-    )
-
-
-def ivf_pq_topk_exprs(
-    queries: DataFrame,
-    codes_indexed: DataFrame,
-    centroids: DataFrame,
-    codebooks: list[list[list[float]]],
-    k: int = 10,
-    nprobe: int = 2,
-    query_vec: str = "embedding",
-    corpus_id: str = "vec_id",
-) -> DataFrame:
     """IVF-PQ: coarse cell pruning + compressed ADC scoring — the standard
-    billion-scale ANN tier (Jégou et al. 2011 §V, IVFADC). LITERAL
-    distance-table twin — see :func:`pq_encode_exprs` for why it is not
-    the default path.
+    billion-scale ANN tier (Jégou et al. 2011 §V, IVFADC).
 
     ``codes_indexed``: (vec_id, centroid_id, codes) — :func:`pq_encode`
     joined with knn.ivf_build's cell assignment (at scale: written
@@ -682,13 +460,9 @@ def ivf_pq_topk_exprs(
     probes = top_k_per_group(
         cscored, ["query_id"], "__cd", nprobe, ascending=True, tie_break="centroid_id"
     ).select("query_id", "centroid_id")
-    q = queries.select(F.col("query_id"), *_query_dtables(query_vec, codebooks))
+    q = _query_dtables(queries, query_vec, codebooks)
     cand = F.broadcast(probes.join(q, "query_id")).join(codes_indexed, "centroid_id")
-    scored = cand.select(
-        "query_id",
-        F.col(corpus_id),
-        (_adc_score(len(codebooks)).cast("double") / _Q).alias("adist"),
-    )
+    scored = cand.select("query_id", F.col(corpus_id), _adc_dist(len(codebooks)))
     return top_k_per_group(
         scored, ["query_id"], "adist", k, ascending=True, tie_break=corpus_id
     )

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
+from ..session import release_materialized
 
 END_OF_WORD = "</w>"
 
@@ -210,7 +211,11 @@ def bpe_train(
                 pattern,
                 (left + right).replace("\\", "\\\\").replace("$", "\\$"),
             )
+        prev = vocab
         vocab = vocab.withColumn("sym", sym_col).localCheckpoint()
+        # the new vocab is materialized: release the previous round's
+        # blocks (same rule as cluster.lloyd)
+        release_materialized(prev)
     merges_df = spark.createDataFrame(
         merges, "rank int, left string, right string, freq bigint"
     )

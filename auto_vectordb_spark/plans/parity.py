@@ -1126,14 +1126,9 @@ def bm25_topk(spark, sf):
     t = load_views(spark, sf)
     from ..functions.text import tokenize
 
-    # Measured dead-end (r12, don't retry): swapping to score_terms_adhoc
-    # was 1.5x SLOWER at sf0.1 (min-of-5 1.98 s vs 1.30 s interleaved) —
-    # AQE stage reuse already shares the postings exchange between the
-    # probe join and the term_df branch, so the index path pays the corpus
-    # explode+shuffle ONCE at runtime despite the two pipelines in the
-    # initial plan; adhoc's broadcast-prune pays per-token probe + an SMJ
-    # against doc_lens instead. A window-df variant (df from the pruned
-    # postings) measured equal-to-worse (1.57 vs 1.46).
+    # index path: the one-shot query-pruned scorer is a measured dead-end
+    # (r12, see the bm25.build_index docstring); a window-df variant (df
+    # from the pruned postings) measured equal-to-worse (1.57 vs 1.46 s).
     index = BM25.build_index(t["documents"])
     queries = spark.createDataFrame(BM25_QUERIES, ["query_id", "query_text"])
     terms = queries.select(
@@ -1195,7 +1190,7 @@ def hybrid_search(spark, sf):
     from ..functions.text import tokenize
 
     t = load_views(spark, sf)
-    # index path, not score_terms_adhoc — measured dead-end, see bm25_topk
+    # index path — the one-shot scorer is a measured dead-end, see bm25_topk
     index = BM25.build_index(t["documents"])
     queries = spark.createDataFrame(BM25_QUERIES, ["query_id", "query_text"])
     terms = queries.select(
@@ -2063,7 +2058,7 @@ def hybrid_rrf(spark, sf):
     from ..functions.text import tokenize
 
     t = load_views(spark, sf)
-    # index path, not score_terms_adhoc — measured dead-end, see bm25_topk
+    # index path — the one-shot scorer is a measured dead-end, see bm25_topk
     index = BM25.build_index(t["documents"])
     queries = spark.createDataFrame(BM25_QUERIES, ["query_id", "query_text"])
     terms = queries.select(
@@ -2171,7 +2166,7 @@ def hybrid_fusion_ab(spark, sf):
     from ..functions.text import tokenize
 
     t = load_views(spark, sf)
-    # index path, not score_terms_adhoc — measured dead-end, see bm25_topk
+    # index path — the one-shot scorer is a measured dead-end, see bm25_topk
     index = BM25.build_index(t["documents"])
     queries = spark.createDataFrame(BM25_QUERIES, ["query_id", "query_text"])
     terms = queries.select(
@@ -4096,7 +4091,7 @@ def rerank_hybrid(spark, sf):
     from ..functions.text import tokenize
 
     t = load_views(spark, sf)
-    # index path, not score_terms_adhoc — measured dead-end, see bm25_topk
+    # index path — the one-shot scorer is a measured dead-end, see bm25_topk
     index = BM25.build_index(t["documents"])
     queries = spark.createDataFrame(BM25_QUERIES, ["query_id", "query_text"])
     terms = queries.select(
@@ -5104,7 +5099,7 @@ _PQ_SQL_BASE = """
     SELECT vec_id, j, code FROM codes
     """,
     doc="Product-quantization encode (operators/pq.py, Jegou 2011): m=4 "
-    "subspaces x 16 seed codewords, argmin inlined as literals — map-only "
+    "subspaces x 16 seed codewords, argmin in an Arrow/NumPy kernel — map-only "
     "corpus scan; codes are ~1.5%% of the float bytes at d=64. Attested in "
     "long form (vec_id, j, code): the engine API returns an array<int> "
     "codes column, which the driver's pandas canonicalizer cannot sort "
@@ -6492,7 +6487,7 @@ def more_like_this(spark, sf):
         .filter(F.col("doc_id") < _MLT_QUERY_DOCS)
         .select(F.col("doc_id").alias("query_id"), "term")
     )
-    # index path, not score_terms_adhoc — measured dead-end, see bm25_topk
+    # index path — the one-shot scorer is a measured dead-end, see bm25_topk
     index = BM25.build_index(docs)
     scored = (
         BM25.score_terms(index, qt)
@@ -9492,7 +9487,7 @@ def scd2_incremental(spark, sf):
     None,  # MLlib-KMeans codebooks are not DuckDB-expressible — rows-only;
     # recall is gated instead (tests/test_ann.py::test_trained_pq_recall_gate)
     doc="PQ ADC at the PRODUCTION default knobs (pq.pq_codebooks_kmeans "
-    "m=16, ksub=256 + the broadcast data-driven encode/ADC path): "
+    "m=16, ksub=256 through the same pq_encode/pq_adc_topk path): "
     "recall@10 = 0.82 vs the exact-L2 oracle on this fixture, gated >= 0.8 "
     "— the path a user should ship, vs the seed-codebook knn_pq_adc entry "
     "(0.315) which exists because its deterministic codebooks are the "
@@ -9504,11 +9499,11 @@ def knn_pq_adc_trained(spark, sf):
     t = load_views(spark, sf)
     emb = t["embeddings"]
     books = PQ.pq_codebooks_kmeans(emb, m=16, ksub=256)
-    codes = PQ.pq_encode_broadcast(emb, books)
+    codes = PQ.pq_encode(emb, books)
     queries = emb.filter(F.col("vec_id") < _N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return PQ.pq_adc_topk_broadcast(queries, codes, books, k=_KNN_K)
+    return PQ.pq_adc_topk(queries, codes, books, k=_KNN_K)
 
 
 @_register(
@@ -9528,11 +9523,11 @@ def knn_ivf_pq_trained(spark, sf):
     centroids = KNN.label_centroids(emb)
     cells = KNN.ivf_build(emb, centroids).select("vec_id", "centroid_id")
     books = PQ.pq_codebooks_kmeans(emb, m=16, ksub=256)
-    codes_indexed = PQ.pq_encode_broadcast(emb, books).join(cells, "vec_id")
+    codes_indexed = PQ.pq_encode(emb, books).join(cells, "vec_id")
     queries = emb.filter(F.col("vec_id") < _N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return PQ.ivf_pq_topk_broadcast(
+    return PQ.ivf_pq_topk(
         queries, codes_indexed, centroids, books, k=_KNN_K, nprobe=8
     )
 

@@ -153,57 +153,6 @@ def _host_telemetry() -> dict:
     return t
 
 
-def _relayout_inputs(spark, sf_dir: str, cpus: int) -> tuple[str, dict]:
-    """Rewrite the input tables into multiple files so scan parallelism is
-    OBSERVABLE (r12 verdict #2): every driver-testdata table is ONE parquet
-    row group, so a bare scan is a single task at any core count — the
-    low-core/high-core ratios the driver computes could never separate
-    scan-bound queries from fixed-cost ones, and its scaling heuristic
-    false-flagged $SPARK_GRAFT_CPUS as ignored (session.py provably honors
-    it). Each table is split into ~128 KB files (capped at ``cpus``); with
-    ``spark.sql.files.minPartitionNum`` defaulting to the session
-    parallelism, a multi-file table then scans with ~one task per file at
-    high core counts and packs into fewer splits at low ones — the same
-    behavior a many-file 100 TB table has, which is the point: the single
-    row group was a testdata artifact, not a property of the workload.
-
-    Runs ONCE per bench invocation, into a fresh tempdir, BEFORE the warm
-    phase and outside every timed window; rows are byte-identical (ts
-    columns are copied in their stored encoding — load_views normalizes
-    both). Nothing persists across invocations.
-
-    OPT-IN (SPARK_GRAFT_MRG=1), measured and left OFF by default: the
-    interleaved A/B against the r12-close tree read the relayed suite at
-    head/ref 1.23 (legacy) / 1.18 (v2) — the relayout's extra session
-    work and per-scan overheads cost more wall noise on this host than
-    the observability is worth inside the DRIVER's timed channel, and it
-    co-occurred with the host's outlier episodes twice (details in
-    OPTIMIZATION_r13.md §2/§2b). The scaling-observability need is
-    served instead by the always-on input_layout telemetry below: the
-    sidecar reports each table's bytes and ROW-GROUP count, which is the
-    true physical cap on scan parallelism (every driver table is one row
-    group, so ≈1 low/high-core ratios are input-capped, not evidence the
-    env var is ignored).
-    """
-    import glob
-    import math
-    import tempfile
-
-    out_dir = tempfile.mkdtemp(prefix="bench_mrg_")
-    layout: dict = {}
-    for src in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        name = os.path.basename(src)
-        size = os.path.getsize(src)
-        n = min(cpus, max(1, math.ceil(size / (128 * 1024))))
-        dst = os.path.join(out_dir, name)
-        if n <= 1:
-            os.symlink(src, dst)  # too small to split: same bytes, zero copy
-        else:
-            spark.read.parquet(src).repartition(n).write.mode("overwrite").parquet(dst)
-        layout[name.removesuffix(".parquet")] = {"files": n, "bytes": size}
-    return out_dir, layout
-
-
 def _input_layout(sf_dir: str) -> dict:
     """Per-table physical-parallelism telemetry for the BENCH_DETAIL
     sidecar (r12 verdict #2): bytes and parquet ROW-GROUP count per input
@@ -212,7 +161,12 @@ def _input_layout(sf_dir: str) -> dict:
     per-query ratios are INPUT-capped — the evidence the driver's scaling
     heuristic needs instead of suspecting $SPARK_GRAFT_CPUS is ignored
     (session.py honors it; r12's suspect_cpus_ignored was a false alarm).
-    Metadata-only (parquet footers), never a data scan."""
+    Metadata-only (parquet footers), never a data scan.
+
+    Measured dead-end (don't retry): relaying the inputs out through a
+    Spark repartition+write before the warm phase read the suite at
+    head/ref 1.23 (legacy) / 1.18 (v2) in the interleaved A/B (r13,
+    OPTIMIZATION_r13.md §2)."""
     import glob
 
     try:
@@ -245,9 +199,6 @@ def main() -> None:
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
     spark = get_spark(app_name="bench")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    relayed = None
-    if os.environ.get("SPARK_GRAFT_MRG", "0") in ("1", "true"):
-        sf_dir, relayed = _relayout_inputs(spark, sf_dir, cpus)
     layout = _input_layout(sf_dir)
     # Steady-state measurement: run every headline query once at the smallest
     # SF first so JVM/whole-stage-codegen compilation (several seconds,
@@ -343,19 +294,13 @@ def main() -> None:
         "sf": sf,
         # scale-out observability (r12 verdict #2): the core count the
         # session actually ran with and per-table bytes/file/row-group
-        # counts of the inputs ACTUALLY timed (the relayed copy when
-        # SPARK_GRAFT_MRG=1), so the driver's scaling check can tell
-        # input-capped parallelism from an ignored env var.
+        # counts of the timed inputs, so the driver's scaling check can
+        # tell input-capped parallelism from an ignored env var.
         "cpus": cpus,
         "input_layout": layout,
-        "relayout": relayed is not None,
     }
     _emit(compact, detail)
     spark.stop()
-    if relayed is not None:
-        import shutil
-
-        shutil.rmtree(sf_dir, ignore_errors=True)  # per-invocation tmp copy
 
 
 def _compact_payload(

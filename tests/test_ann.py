@@ -4,6 +4,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from auto_vectordb_spark.operators import knn as KNN
+from auto_vectordb_spark.operators import pq as PQ
+
+import pq_literal as LIT  # the literal-expression PQ twin (tests/pq_literal.py)
 
 K = 10
 N_QUERIES = 20
@@ -319,26 +322,24 @@ def test_pq_broadcast_paths_match_literal(queries, emb):
     """The data-driven (broadcast codebook) encode and ADC paths must be
     bit-identical to the literal-expression paths — same argmin, same
     quantized int64 scoring, different physical carrier."""
-    from auto_vectordb_spark.operators import pq as PQ
-
     books = PQ.pq_codebooks_seed(emb, m=4, ksub=16)
     lit = {
         r["vec_id"]: list(r["codes"])
-        for r in PQ.pq_encode_exprs(emb, books).collect()
+        for r in LIT.pq_encode_exprs(emb, books).collect()
     }
     brd = {
         r["vec_id"]: list(r["codes"])
-        for r in PQ.pq_encode_broadcast(emb, books).collect()
+        for r in PQ.pq_encode(emb, books).collect()
     }
     assert lit == brd
-    codes = PQ.pq_encode_exprs(emb, books)
+    codes = LIT.pq_encode_exprs(emb, books)
     ta = sorted(
         (r["query_id"], r["vec_id"], r["adist"])
-        for r in PQ.pq_adc_topk_exprs(queries, codes, books, k=K).collect()
+        for r in LIT.pq_adc_topk_exprs(queries, codes, books, k=K).collect()
     )
     tb = sorted(
         (r["query_id"], r["vec_id"], r["adist"])
-        for r in PQ.pq_adc_topk_broadcast(queries, codes, books, k=K).collect()
+        for r in PQ.pq_adc_topk(queries, codes, books, k=K).collect()
     )
     assert ta == tb
     # IVF-PQ twin pair too (same dtable arithmetic behind different carriers)
@@ -348,17 +349,55 @@ def test_pq_broadcast_paths_match_literal(queries, emb):
     )
     ia = sorted(
         (r["query_id"], r["vec_id"], r["adist"])
-        for r in PQ.ivf_pq_topk_exprs(
+        for r in LIT.ivf_pq_topk_exprs(
             queries, indexed, centroids, books, k=K, nprobe=3
         ).collect()
     )
     ib = sorted(
         (r["query_id"], r["vec_id"], r["adist"])
-        for r in PQ.ivf_pq_topk_broadcast(
+        for r in PQ.ivf_pq_topk(
             queries, indexed, centroids, books, k=K, nprobe=3
         ).collect()
     )
     assert ia == ib
+
+
+@pytest.fixture(scope="module")
+def pq_small(emb):
+    """m=2/ksub=4 seed codebooks, the library's codes, and the IVF cell
+    assignment — shared by the small-knob twin pins below."""
+    books = PQ.pq_codebooks_seed(emb, m=2, ksub=4)
+    codes = PQ.pq_encode(emb, books).cache()
+    centroids = KNN.label_centroids(emb).cache()
+    indexed = codes.join(
+        KNN.ivf_build(emb, centroids).select("vec_id", "centroid_id"), "vec_id"
+    ).cache()
+    indexed.count()
+    yield books, codes, centroids, indexed
+    for df in (indexed, codes, centroids):
+        df.unpersist()
+
+
+@pytest.mark.parametrize("op", ["adc", "ivf_pq"])
+def test_pq_search_matches_literal_small_knobs(queries, pq_small, op):
+    """Fast-tier representative of the twin pin above: at m=2/ksub=4 and
+    three queries, the library's ADC / IVF-PQ top-k over the library's
+    codes equals the literal-expression twin row for row."""
+    books, codes, centroids, indexed = pq_small
+    q3 = queries.filter(F.col("query_id") < 3)
+    if op == "adc":
+        lib = PQ.pq_adc_topk(q3, codes, books, k=K)
+        twin = LIT.pq_adc_topk_exprs(q3, codes, books, k=K)
+    else:
+        lib = PQ.ivf_pq_topk(q3, indexed, centroids, books, k=K, nprobe=3)
+        twin = LIT.ivf_pq_topk_exprs(q3, indexed, centroids, books, k=K, nprobe=3)
+
+    def rows(df):
+        return sorted((r["query_id"], r["vec_id"], r["adist"]) for r in df.collect())
+
+    got = rows(lib)
+    assert len(got) == 3 * K
+    assert got == rows(twin)
 
 
 def test_pq_arrow_kernel_tie_cases_match_literal(spark):
@@ -369,8 +408,6 @@ def test_pq_arrow_kernel_tie_cases_match_literal(spark):
     mid-window while the rounded argmin holds the lowest code — plus
     malformed rows (NULL / short / NULL-element / NaN), which must
     degrade to code 0 per incomplete subspace on both paths."""
-    from auto_vectordb_spark.operators import pq as PQ
-
     books = [[[0.0, 0.0], [1.0, 1.0]], [[0.0, 0.0], [2.0, 2.0]]]
     rows = [
         (k, [0.5 + k * 1e-7, 0.5 + k * 1e-7, 1.0 + k * 1e-7, 1.0 + k * 1e-7])
@@ -393,11 +430,11 @@ def test_pq_arrow_kernel_tie_cases_match_literal(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     lit = {
         r["vec_id"]: list(r["codes"])
-        for r in PQ.pq_encode_exprs(df, books).collect()
+        for r in LIT.pq_encode_exprs(df, books).collect()
     }
     brd = {
         r["vec_id"]: list(r["codes"])
-        for r in PQ.pq_encode_broadcast(df, books).collect()
+        for r in PQ.pq_encode(df, books).collect()
     }
     # the literal path NULLs malformed subspaces differently only in carrier,
     # never in value — the kernel must agree row by row
@@ -415,8 +452,6 @@ def test_trained_pq_recall_gate(spark, queries, emb):
     seed-codebook tiers stay gated at their honest >=0.2 floor)."""
     import numpy as np
 
-    from auto_vectordb_spark.operators import pq as PQ
-
     c_rows = emb.select("vec_id", "embedding").collect()
     cids = np.array([r["vec_id"] for r in c_rows])
     C = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in c_rows])
@@ -427,9 +462,9 @@ def test_trained_pq_recall_gate(spark, queries, emb):
         exact_l2[r["query_id"]] = set(cids[np.argsort(d)[:K]].tolist())
 
     books = PQ.pq_codebooks_kmeans(emb, m=16, ksub=256)
-    codes = PQ.pq_encode_broadcast(emb, books).cache()
+    codes = PQ.pq_encode(emb, books).cache()
     full = _recall(
-        PQ.pq_adc_topk_broadcast(queries, codes, books, k=K).collect(), exact_l2
+        PQ.pq_adc_topk(queries, codes, books, k=K).collect(), exact_l2
     )
     assert full >= 0.8, f"trained full-scan ADC recall@10 = {full}"
 
@@ -437,7 +472,7 @@ def test_trained_pq_recall_gate(spark, queries, emb):
     cells = KNN.ivf_build(emb, centroids).select("vec_id", "centroid_id")
     indexed = codes.join(cells, "vec_id")
     ivf = _recall(
-        PQ.ivf_pq_topk_broadcast(
+        PQ.ivf_pq_topk(
             queries, indexed, centroids, books, k=K, nprobe=8
         ).collect(),
         exact_l2,
@@ -531,8 +566,6 @@ def test_pq_empty_training_slice_degrades_end_to_end(spark):
     sample are [], and every encode/ADC-search consumer returns the empty
     frame with its normal schema — train-then-apply composes over an
     empty slice without crashing."""
-    from auto_vectordb_spark.operators import pq as PQ
-
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     queries = spark.createDataFrame(
         [(0, [1.0, 0.0, 0.0, 0.0])], "query_id long, embedding array<double>"
@@ -545,10 +578,9 @@ def test_pq_empty_training_slice_degrades_end_to_end(spark):
     assert codes.collect() == []
     assert [f.name for f in codes.schema] == ["vec_id", "codes"]
     assert codes.schema["codes"].dataType.simpleString() == "array<int>"
-    assert PQ.pq_encode_broadcast(empty, []).collect() == []
-    assert PQ.pq_encode_exprs(empty, []).collect() == []
+    assert LIT.pq_encode_exprs(empty, []).collect() == []
 
-    for fn in (PQ.pq_adc_topk, PQ.pq_adc_topk_exprs, PQ.pq_adc_topk_broadcast):
+    for fn in (PQ.pq_adc_topk, LIT.pq_adc_topk_exprs):
         out = fn(queries, codes, [])
         assert out.collect() == []
         assert [f.name for f in out.schema] == ["query_id", "vec_id", "adist"]
@@ -559,7 +591,7 @@ def test_pq_empty_training_slice_degrades_end_to_end(spark):
     idx = spark.createDataFrame(
         [], "vec_id long, centroid_id long, codes array<int>"
     )
-    for fn in (PQ.ivf_pq_topk, PQ.ivf_pq_topk_exprs, PQ.ivf_pq_topk_broadcast):
+    for fn in (PQ.ivf_pq_topk, LIT.ivf_pq_topk_exprs):
         out = fn(queries, idx, cents, [])
         assert out.collect() == []
         assert [f.name for f in out.schema] == ["query_id", "vec_id", "adist"]

@@ -1,11 +1,10 @@
-"""Gates for the curation-rule operators (operators/curation.py), the
-IVF-PQ composed ANN tier, and the ad-hoc BM25 path: flag consistency,
-cap/quota exactness, growth stability, score equivalence, and recall."""
+"""Gates for the curation-rule operators (operators/curation.py) and the
+IVF-PQ composed ANN tier: flag consistency, cap/quota exactness, growth
+stability, score equivalence, and recall."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from auto_vectordb_spark.operators import bm25 as BM25
 from auto_vectordb_spark.operators import curation as CU
 from auto_vectordb_spark.operators import knn as KNN
 from auto_vectordb_spark.operators import pq as PQ
@@ -75,28 +74,6 @@ def test_fertility_report_shape(spark, tables):
     for r in out.values():
         assert r["n_docs"] > 0 and r["avg_tokens"] > 0
         assert 0 < r["avg_chars_per_token"] < 20
-
-
-def test_bm25_adhoc_matches_index_path(spark, tables):
-    docs = tables["documents"]
-    queries = spark.createDataFrame(
-        [(0, "the table value"), (1, "fast spark merge")], ["query_id", "query_text"]
-    )
-    from auto_vectordb_spark.functions.text import tokenize
-
-    terms = queries.select(
-        "query_id", F.explode(tokenize(F.col("query_text"))).alias("term")
-    )
-    idx = BM25.build_index(docs)
-    a = sorted(
-        (r["query_id"], r["doc_id"], round(r["score"], 9))
-        for r in BM25.score_terms(idx, terms).collect()
-    )
-    b = sorted(
-        (r["query_id"], r["doc_id"], round(r["score"], 9))
-        for r in BM25.score_terms_adhoc(docs, terms).collect()
-    )
-    assert a == b and len(a) > 0
 
 
 @pytest.fixture(scope="module")
