@@ -46,11 +46,12 @@ class BM25Index:
 
     # Corpus scalars stay a DataFrame that rides into the query plan as a
     # broadcast 1-row cross join (measured ~0.3 s faster per query than a
-    # collect at build time). Lazy stats remain right for an uncached index:
-    # building it and scoring with it is ONE Spark job. A cached index
-    # (build_index(cache=True)) caches the row too, so repeated queries
-    # read it instead of re-aggregating doc_lens. The properties below
-    # collect on first access for callers that genuinely want the numbers.
+    # collect at build time). Lazy stats remain right for an unpinned
+    # index: building it and scoring with it is ONE Spark job. An owner
+    # that queries repeatedly pins the row with the other frames
+    # (VectorPipeline.build_index), so queries read it instead of
+    # re-aggregating doc_lens. The properties below collect on first
+    # access for callers that genuinely want the numbers.
     _scalars: tuple[int, float] | None = None
 
     def _fetch(self) -> tuple[int, float]:
@@ -78,14 +79,14 @@ def _stats_of(doc_lens: DataFrame) -> DataFrame:
 
 
 def build_index(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", cache: bool = False
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> BM25Index:
-    """One corpus pass, zero actions. ``doc_lens`` is computed per-row as
-    the token-array size — zero shuffle — and only postings pays the
-    (term, doc_id) shuffle. Within a single query job Spark's
-    ReusedExchange serves term_df and the query join from one postings
-    computation; pass ``cache=True`` when the index is queried repeatedly
-    (e.g. the pipeline facade) — it caches the one-row stats too.
+    """One corpus pass, zero actions, nothing pinned. ``doc_lens`` is
+    computed per-row as the token-array size — zero shuffle — and only
+    postings pays the (term, doc_id) shuffle. Within a single query job
+    Spark's ReusedExchange serves term_df and the query join from one
+    postings computation; an index queried repeatedly is pinned by its
+    owner (``session.materialize``, as the pipeline facade does).
 
     Measured dead-end (don't retry): pre-fanning an under-parallelized
     corpus scan (dedup.fan_out_small_scan) is SLOWER here — min-of-5
@@ -112,18 +113,7 @@ def build_index(
         F.col("dl") > 0
     )
     term_df = postings.groupBy("term").agg(F.count("*").alias("df"))
-    return _index(postings, doc_lens, term_df, cache)
-
-
-def _index(
-    postings: DataFrame, doc_lens: DataFrame, term_df: DataFrame, cache: bool
-) -> BM25Index:
-    if not cache:
-        return BM25Index(postings, doc_lens, term_df, _stats_of(doc_lens))
-    doc_lens = doc_lens.cache()
-    return BM25Index(
-        postings.cache(), doc_lens, term_df.cache(), _stats_of(doc_lens).cache()
-    )
+    return BM25Index(postings, doc_lens, term_df, _stats_of(doc_lens))
 
 
 def score_terms(index: BM25Index, query_terms: DataFrame) -> DataFrame:
@@ -163,7 +153,7 @@ def search(index: BM25Index, queries: DataFrame, k: int = 10) -> DataFrame:
     return top_k_per_group(scored, ["query_id"], "score", k, tie_break="doc_id")
 
 
-def index_from_dir(spark, index_dir: str, cache: bool = False) -> BM25Index:
+def index_from_dir(spark, index_dir: str) -> BM25Index:
     """Open a :class:`BM25Index` over the append-only artifacts written by
     ``streaming.pipeline.incremental_bm25_index`` — latest epoch wins per
     doc (ES ``_id`` overwrite semantics, /root/reference/backend/process/
@@ -195,7 +185,7 @@ def index_from_dir(spark, index_dir: str, cache: bool = False) -> BM25Index:
         .select("term", "doc_id", "tf")
     )
     term_df = postings.groupBy("term").agg(F.count("*").alias("df"))
-    return _index(postings, doc_lens, term_df, cache)
+    return BM25Index(postings, doc_lens, term_df, _stats_of(doc_lens))
 
 
 def compact_index(spark, index_dir: str) -> dict[str, int]:

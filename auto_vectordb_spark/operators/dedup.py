@@ -35,7 +35,7 @@ from ..functions import cleanvec as CV
 from ..functions import hashing as H
 from ..functions import vector as V
 from ..functions.text import shingles, tokenize
-from ..session import release_materialized
+from ..session import materialize
 
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4  # 4 bands × 4 rows
@@ -324,7 +324,7 @@ def minhash_lsh_pairs_incremental(
     # Materialize it once: batch-sized (bands rows per doc, 3 short
     # columns), exactly the artifact a production flow persists anyway
     # (opt guide §2.4).
-    nb = nb.select(key_cols).localCheckpoint(eager=True)
+    nb = materialize(nb.select(key_cols), "checkpoint").df
     all_b = bucket_table.select(key_cols).unionByName(nb)
     a, b = nb.alias("a"), all_b.alias("b")
     cand = a.join(
@@ -1115,37 +1115,36 @@ def connected_components(
         out = [(n, find(n)) for n in parent]
         spark = pairs.sparkSession
         return spark.createDataFrame(out, "doc_id long, component_id long")
-    edges = (
+    with materialize(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionAll(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-        .cache()
-    )
-    labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
-    # Convergence via Σlabel: min-label propagation only ever DECREASES
-    # labels, so an unchanged sum ⇔ a fixed point — one scan-agg on the
-    # (checkpointed, tiny) label table instead of a join-and-count per round.
-    prev_sum = None
-    for _ in range(max_iterations):
-        prop = (
-            edges.join(labels, edges["src"] == labels["node"])
-            .select(F.col("dst").alias("node"), "label")
+        .distinct(),
+        "memory",
+    ) as edges:
+        labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
+            "label", F.col("node")
         )
-        prev = labels
-        labels = (
-            labels.unionAll(prop).groupBy("node").agg(F.min("label").alias("label"))
-        ).localCheckpoint(eager=True)
-        # the new round is materialized: release the previous round's
-        # blocks (same rule as cluster.lloyd; the seed labels are an
-        # un-checkpointed projection — a no-op)
-        release_materialized(prev)
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    release_materialized(edges)
+        # Convergence via Σlabel: min-label propagation only ever DECREASES
+        # labels, so an unchanged sum ⇔ a fixed point — one scan-agg on the
+        # (checkpointed, tiny) label table instead of a join-and-count per round.
+        prev_sum = None
+        pin = None
+        for _ in range(max_iterations):
+            prop = (
+                edges.join(labels, edges["src"] == labels["node"])
+                .select(F.col("dst").alias("node"), "label")
+            )
+            prev, pin = pin, materialize(
+                labels.unionAll(prop).groupBy("node").agg(F.min("label").alias("label")),
+                "checkpoint",
+            )
+            if prev is not None:
+                prev.release()
+            labels = pin.df
+            cur_sum = labels.agg(F.sum("label")).collect()[0][0]
+            if cur_sum == prev_sum:
+                break
+            prev_sum = cur_sum
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component_id"))
 
 

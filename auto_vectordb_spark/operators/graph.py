@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import release_materialized
+from ..session import materialize
 
 
 def pagerank(
@@ -51,12 +51,13 @@ def pagerank(
     rank table — no new shuffle of the edge table.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (
+    nodes_pin = materialize(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "checkpoint",
     )
+    nodes = nodes_pin.df
     n = nodes.count()
     if n == 0:
         # e.g. copurchase_edges with a high min_support: a legitimate
@@ -71,54 +72,52 @@ def pagerank(
     # (ranks leave each round partitioned by node from the groupBy, which
     # satisfies the rank side too). One exchange per iteration remains:
     # the contribution groupBy(dst).
-    ed = e.join(out_deg, "src").repartition("src").localCheckpoint()
-    dangling = nodes.join(
-        out_deg.select(F.col("src").alias("node")), "node", "left_anti"
-    ).localCheckpoint()
-    has_dangling = dangling.limit(1).count() > 0
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    base = (1.0 - damping) / n
-    for _ in range(iterations):
-        dangling_mass = 0.0
-        if has_dangling:
-            dm_row = (
-                ranks.join(dangling, "node", "left_semi")
-                .agg(F.sum("rank").alias("dm"))
-                .first()
+    with (
+        materialize(e.join(out_deg, "src").repartition("src"), "checkpoint") as ed,
+        materialize(
+            nodes.join(out_deg.select(F.col("src").alias("node")), "node", "left_anti"),
+            "checkpoint",
+        ) as dangling,
+    ):
+        has_dangling = dangling.limit(1).count() > 0
+        ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+        pin = None
+        base = (1.0 - damping) / n
+        for _ in range(iterations):
+            dangling_mass = 0.0
+            if has_dangling:
+                dm_row = (
+                    ranks.join(dangling, "node", "left_semi")
+                    .agg(F.sum("rank").alias("dm"))
+                    .first()
+                )
+                dangling_mass = dm_row["dm"] or 0.0
+            step_base = base + damping * dangling_mass / n
+            contribs = (
+                ed.join(ranks, ed["src"] == ranks["node"])
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.col("rank") / F.col("deg")).alias("c"),
+                )
+                .groupBy("node")
+                .agg(F.sum("c").alias("s"))
             )
-            dangling_mass = dm_row["dm"] or 0.0
-        step_base = base + damping * dangling_mass / n
-        contribs = (
-            ed.join(ranks, ed["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") / F.col("deg")).alias("c"),
+            prev, pin = pin, materialize(
+                nodes.join(contribs, "node", "left").select(
+                    "node",
+                    (
+                        F.lit(step_base)
+                        + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+                    ).alias("rank"),
+                ),
+                "checkpoint",
             )
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
-        )
-        prev = ranks
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(step_base)
-                    + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-        # the new round's ranks are materialized: release the previous
-        # round's blocks so iterations don't pile rank tables up in
-        # executor storage (same rule as cluster.lloyd; first round's
-        # `prev` is the un-checkpointed seed projection — a no-op)
-        release_materialized(prev)
-    # the returned frame is checkpointed; the loop inputs are not needed
-    # to recompute it
-    release_materialized(ed)
-    release_materialized(dangling)
-    release_materialized(nodes)
+            if prev is not None:
+                prev.release()
+            ranks = pin.df
+    # the returned ranks are checkpointed, unless no iteration ran
+    if pin is not None:
+        nodes_pin.release()
     return ranks
 
 

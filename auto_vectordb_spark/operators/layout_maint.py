@@ -37,9 +37,9 @@ pruning decision is pure metadata (driver-side interval intersection
 against per-file bounds) before any row is read.
 
 Corpus pin: :func:`zorder_compaction_apply` and :func:`zorder_write_ranged`
-pin their cleaned narrow events frame with ``persist(DISK_ONLY)`` +
-``count()`` and release it with ``session.release_materialized`` once
-every consumer has executed. At 20M
+pin their cleaned narrow events frame with ``session.materialize(...,
+"disk")`` (``persist(DISK_ONLY)`` + ``count()``) and release the handle
+once every consumer has executed. At 20M
 rows (200x the bench SF) the postures measured: localCheckpoint 18.1 s,
 DISK_ONLY 18.3 s, no pin (every consumer re-derives from the scan) 20.1 s,
 MEMORY_AND_DISK 21.9 s (eviction churn) — OPTIMIZATION_r13.md. DISK_ONLY
@@ -53,12 +53,10 @@ its recompute would read overwritten files.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import release_materialized
-
+from ..session import materialize
 from .layout import (
     GRID_BITS,
     PROBE_X,
@@ -145,17 +143,16 @@ def zorder_compaction_apply(
     # the session's parallelism (conditional — a no-op on a
     # well-partitioned 100 TB scan) and materialized ONCE; stats, plan,
     # base write, delta mapping and side write all derive from it.
-    ev = (
-        fan_out_small_scan(_clean(events, id_col, x_col, ts_col))
-        .select(
+    ev_pin = materialize(  # the corpus pin (module docstring)
+        fan_out_small_scan(_clean(events, id_col, x_col, ts_col)).select(
             F.col(id_col),
             F.col(x_col).cast("long").alias("__x"),
             _hour_index(ts_col).alias("__y"),
             (F.pmod(F.col(id_col), F.lit(delta_mod)) == 0).alias("__is_delta"),
-        )
-        .persist(StorageLevel.DISK_ONLY)
+        ),
+        "disk",
     )
-    ev.count()  # the corpus pin (module docstring)
+    ev = ev_pin.df
     # ONE min-max aggregate serves zorder_write's grid, the plan's grid
     # and the delta mapping (the r11 shape computed it three times —
     # identical input set, identical values). Collected as int literals:
@@ -217,7 +214,7 @@ def zorder_compaction_apply(
     # back-fills executors idled by the write's commit tail (guide §2.6).
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_base = pool.submit(_write_base)
-        plan = (
+        plan = materialize(  # one decide pass; three consumers
             gz.groupBy("z_bucket")
             .agg(
                 F.count(F.when(~F.col("__is_delta"), 1)).alias("base_rows"),
@@ -237,9 +234,9 @@ def zorder_compaction_apply(
                 )
                 .otherwise(F.lit("defer"))
                 .alias("action"),
-            )
-            .localCheckpoint(eager=True)  # one decide pass; three consumers
-        )
+            ),
+            "checkpoint",
+        ).df
         rewrite_buckets = F.broadcast(
             plan.where(F.col("action") == "rewrite").select("z_bucket")
         )
@@ -263,29 +260,27 @@ def zorder_compaction_apply(
 
         schema = _MAIN_SCHEMA.format(pay=id_col)
         stored = spark.read.schema(schema).parquet(main_path)
-        merged = (
-            stored.join(rewrite_buckets, "z_bucket", "left_semi")
-            .unionByName(
+        with materialize(
+            stored.join(rewrite_buckets, "z_bucket", "left_semi").unionByName(
                 dz.join(rewrite_buckets, "z_bucket", "left_semi").select(
                     "z_bucket", id_col, "xg", "yg"
                 )
-            )
-            .localCheckpoint(eager=True)
-        )
-        # dynamic overwrite scoped to THIS write via the writer option (r11
-        # ADVICE #1): mutating the session conf, even set/restore in
-        # finally, races concurrent writers on a shared SparkSession.
-        merged.select(id_col, "xg", "yg", "z_bucket").repartition(
-            2 ** bucket_bits, "z_bucket"
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("z_bucket").parquet(main_path)
+            ),
+            "checkpoint",
+        ) as merged:
+            # dynamic overwrite scoped to THIS write via the writer option
+            # (r11 ADVICE #1): mutating the session conf, even set/restore
+            # in finally, races concurrent writers on a shared SparkSession.
+            merged.select(id_col, "xg", "yg", "z_bucket").repartition(
+                2 ** bucket_bits, "z_bucket"
+            ).write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("z_bucket").parquet(main_path)
         f_side.result()
-    # every consumer of the corpus-sized frames has executed (writes
-    # committed, plan checkpointed): release their blocks — corpus-sized
-    # storage must not outlive the operator call (r12 verdict #2 caveat)
-    release_materialized(merged)
-    release_materialized(ev)
+    # every consumer of the corpus pin has executed (writes committed, plan
+    # checkpointed): corpus-sized storage must not outlive the operator
+    # call (r12 verdict #2 caveat)
+    ev_pin.release()
     return plan
 
 
@@ -382,7 +377,7 @@ def zorder_compaction_cycle2(
     side = spark.read.schema(schema).parquet(side_path)
     m_cnt = main.groupBy("z_bucket").agg(F.count("*").alias("__m"))
     s_cnt = side.groupBy("z_bucket").agg(F.count("*").alias("__s"))
-    plan2 = (
+    plan2 = materialize(  # one decide pass, three consumers; the returned report reads it
         m_cnt.join(s_cnt, "z_bucket", "full_outer")
         .select(
             "z_bucket",
@@ -401,30 +396,32 @@ def zorder_compaction_cycle2(
             )
             .otherwise(F.lit("defer"))
             .alias("action"),
-        )
-        .localCheckpoint(eager=True)  # one decide pass; three consumers
-    )
+        ),
+        "checkpoint",
+    ).df
     rewrite2 = F.broadcast(
         plan2.where(F.col("action") == "rewrite").select("z_bucket")
     )
-    merged = (
-        main.join(rewrite2, "z_bucket", "left_semi")
-        .unionByName(side.join(rewrite2, "z_bucket", "left_semi"))
-        .localCheckpoint(eager=True)
-    )
-    remaining = side.join(rewrite2, "z_bucket", "left_anti").localCheckpoint(
-        eager=True
-    )
-    # writer-scoped dynamic overwrite (r11 ADVICE #1) — see the apply step;
-    # exchange width pinned to the bucket count (see layout.zorder_write)
-    merged.select(id_col, "xg", "yg", "z_bucket").repartition(
-        2 ** bucket_bits, "z_bucket"
-    ).write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("z_bucket").parquet(main_path)
-    remaining.select(id_col, "xg", "yg", "z_bucket").repartition(
-        2 ** bucket_bits, "z_bucket"
-    ).write.mode("overwrite").partitionBy("z_bucket").parquet(side_path)
+    # both rewrite sets are checkpointed before either write replaces their files
+    with (
+        materialize(
+            main.join(rewrite2, "z_bucket", "left_semi").unionByName(
+                side.join(rewrite2, "z_bucket", "left_semi")
+            ),
+            "checkpoint",
+        ) as merged,
+        materialize(side.join(rewrite2, "z_bucket", "left_anti"), "checkpoint") as remaining,
+    ):
+        # writer-scoped dynamic overwrite (r11 ADVICE #1) — see the apply step;
+        # exchange width pinned to the bucket count (see layout.zorder_write)
+        merged.select(id_col, "xg", "yg", "z_bucket").repartition(
+            2 ** bucket_bits, "z_bucket"
+        ).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("z_bucket").parquet(main_path)
+        remaining.select(id_col, "xg", "yg", "z_bucket").repartition(
+            2 ** bucket_bits, "z_bucket"
+        ).write.mode("overwrite").partitionBy("z_bucket").parquet(side_path)
     return compaction_report(
         spark, main_path, side_path, plan2, id_col=id_col
     )
@@ -554,16 +551,15 @@ def zorder_write_ranged(
     # the stats agg and both of global_rank's actions (boundary sketch
     # collect, consumer write) recompute only the cheap grid/Morton map
     # over the pinned blocks.
-    ev = (
-        fan_out_small_scan(_clean(events, id_col, x_col, ts_col))
-        .select(
+    ev_pin = materialize(  # the corpus pin (module docstring)
+        fan_out_small_scan(_clean(events, id_col, x_col, ts_col)).select(
             F.col(id_col),
             F.col(x_col).cast("long").alias("__x"),
             _hour_index(ts_col).alias("__y"),
-        )
-        .persist(StorageLevel.DISK_ONLY)
+        ),
+        "disk",
     )
-    ev.count()  # the corpus pin (module docstring)
+    ev = ev_pin.df
     row = ev.agg(
         F.min("__x").alias("__xmin"),
         F.max("__x").alias("__xmax"),
@@ -605,7 +601,7 @@ def zorder_write_ranged(
     ).parquet(path)
     # stats agg, global_rank's sketch and the write have all executed:
     # release the corpus-sized blocks (the corpus pin, module docstring)
-    release_materialized(ev)
+    ev_pin.release()
 
 
 def probe_z_intervals(

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cleanvec as CV
 from ..functions import vector as V
+from ..session import materialize
 from .cluster import sqdist
 from .relational import top_k_per_group
 
@@ -121,13 +122,12 @@ def pq_codebooks_kmeans(
     )
     v = V.as_double_array(F.col(vec_col))
     # The validated-vector projection feeds first(), count() AND every
-    # per-subspace KMeans fit (each fit = many iterative jobs): persist it
+    # per-subspace KMeans fit (each fit = many iterative jobs): pin it
     # once instead of re-scanning + re-validating the source per action
-    # (opt guide §2.4/§5 — reused AND expensive to recompute; unpersisted
+    # (opt guide §2.4/§5 — reused AND expensive to recompute; released
     # before return). Partitioning is untouched so the fits see the exact
     # same data layout (and therefore centers) as the sequential path.
-    cached = df.select(v.alias("v")).persist()
-    try:
+    with materialize(df.select(v.alias("v")), "memory") as cached:
         row = cached.first()
         if row is None:
             return []  # empty training slice — same degenerate contract as seed
@@ -162,8 +162,6 @@ def pq_codebooks_kmeans(
 
         with ThreadPoolExecutor(max_workers=min(4, m)) as pool:
             return list(pool.map(fit, range(m)))
-    finally:
-        cached.unpersist()
 
 
 def _empty_codes(vectors: DataFrame, id_col: str) -> DataFrame:

@@ -329,7 +329,7 @@ def bm25_delete_docs(
     )
 
 
-def bm25_index_with_deletes(spark, index_dir: str, cache: bool = False):
+def bm25_index_with_deletes(spark, index_dir: str):
     """Delete-aware reader for the incremental BM25 index: latest-epoch
     resolution per doc (bm25.index_from_dir semantics, crash-replay
     dedup included) PLUS tombstone filtering — a doc is live iff its
@@ -375,10 +375,6 @@ def bm25_index_with_deletes(spark, index_dir: str, cache: bool = False):
         .select("term", "doc_id", "tf")
     )
     term_df = postings.groupBy("term").agg(F.count("*").alias("df"))
-    if cache:
-        postings = postings.cache()
-        doc_lens = doc_lens.cache()
-        term_df = term_df.cache()
     return BM25Index(postings, doc_lens, term_df, _stats_of(doc_lens))
 
 

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions import hashing as H
 from ..functions.text import shingles, tokenize
+from ..session import materialize
 
 
 def snapshot_diff(
@@ -238,7 +239,7 @@ def split_leakage_groupaware(
             .otherwise(F.lit("test"))
         )
 
-    pairs = minhash_lsh_pairs(docs, id_col, text_col).localCheckpoint(eager=True)
+    pairs = materialize(minhash_lsh_pairs(docs, id_col, text_col), "checkpoint").df
     comps = connected_components(pairs)
     ca = comps.select(
         F.col("doc_id").alias("id_a"), F.col("component_id").alias("__ca")
@@ -311,7 +312,7 @@ def curriculum_pack_manifest(
         text_col,
         extra_cols=("__h",),
     )
-    scored = (
+    scored = materialize(
         sc.groupBy("__h")
         .agg(
             F.min("doc_id").alias("doc_id"),
@@ -319,14 +320,14 @@ def curriculum_pack_manifest(
             F.min("quality").alias("quality"),
         )
         .select("doc_id", "n_tokens", "quality")
-        .where(F.col("quality") >= quality_min)
+        .where(F.col("quality") >= quality_min),
         # global_rank runs TWO actions over its input (boundary sketch,
         # then the consumer's job) — materialize the survivor projection
         # once so the keep-one agg + tokenize front end isn't re-run
         # per action (opt guide §2.4). Narrow (id + 2 numerics): the same
         # survivors-table posture training_set_build persists.
-        .localCheckpoint(eager=True)
-    )
+        "checkpoint",
+    ).df
     ranked = global_rank(scored, "quality", "doc_id")
     staged = ranked.withColumn("stage", ntile_expr("__r", "__n", n_stages))
     pw = (

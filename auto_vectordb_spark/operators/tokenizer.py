@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
-from ..session import release_materialized
+from ..session import materialize
 
 END_OF_WORD = "</w>"
 
@@ -164,11 +164,11 @@ def bpe_train(
     batching here is a scheduling optimization, not an approximation.
     """
     spark = docs.sparkSession
-    vocab = (
-        word_counts(docs, text_col)
-        .select("word", _initial_symbols().alias("sym"), "count")
-        .localCheckpoint()
+    pin = materialize(
+        word_counts(docs, text_col).select("word", _initial_symbols().alias("sym"), "count"),
+        "checkpoint",
     )
+    vocab = pin.df
     merges: list[tuple[int, str, str, int]] = []
     while len(merges) < num_merges:
         batch = min(max(1, merge_batch), num_merges - len(merges))
@@ -211,11 +211,9 @@ def bpe_train(
                 pattern,
                 (left + right).replace("\\", "\\\\").replace("$", "\\$"),
             )
-        prev = vocab
-        vocab = vocab.withColumn("sym", sym_col).localCheckpoint()
-        # the new vocab is materialized: release the previous round's
-        # blocks (same rule as cluster.lloyd)
-        release_materialized(prev)
+        prev, pin = pin, materialize(vocab.withColumn("sym", sym_col), "checkpoint")
+        prev.release()
+        vocab = pin.df
     merges_df = spark.createDataFrame(
         merges, "rank int, left string, right string, freq bigint"
     )

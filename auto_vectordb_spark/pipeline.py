@@ -73,7 +73,7 @@ from .operators import bm25 as BM25
 from .operators import hybrid as HY
 from .operators import knn as KNN
 from .operators.relational import delete_by_ids as _delete_by_ids
-from .session import release_materialized
+from .session import Materialized, materialize
 
 # A parser maps (filepath, raw bytes) → [(page_number, page_markdown), ...].
 ParserFn = Callable[[str, bytes], list[tuple[int, str]]]
@@ -148,6 +148,7 @@ class VectorPipeline:
         self.upload_root = upload_root
         self._bm25: BM25.BM25Index | None = None
         self._search_side: DataFrame | None = None
+        self._pins: list[Materialized] = []  # build_index's; _invalidate frees them
         self._corpus_cache: DataFrame | None = None
 
     # ---- staging (S1/S2) --------------------------------------------------
@@ -324,30 +325,33 @@ class VectorPipeline:
 
     def build_index(self) -> None:
         """S11 — derive the search-index artifacts from the corpus: the
-        pinned search side and the BM25 postings/stats over it (cached
-        DataFrames). Idempotent by id (dropDuplicates = ES _id overwrite,
-        elasticsearch_index.py:141); a repeated call rebuilds from the
-        current corpus."""
+        pinned search side and the BM25 postings/doc_lens/term_df/stats
+        over it, each a lazy ``"memory"`` pin this pipeline owns until the
+        next corpus write. Idempotent by id (dropDuplicates = ES _id
+        overwrite, elasticsearch_index.py:141); a repeated call rebuilds
+        from the current corpus."""
         self._invalidate()
-        self._search_side = self.corpus().dropDuplicates(["id"]).cache()
-        docs = self._search_side.select(
-            F.col("id").alias("doc_id"), F.col("page_content").alias("text")
+        search = materialize(self.corpus().dropDuplicates(["id"]), "memory")
+        idx = BM25.build_index(
+            search.df.select(F.col("id").alias("doc_id"), F.col("page_content").alias("text"))
         )
-        self._bm25 = BM25.build_index(docs, "doc_id", "text", cache=True)
+        # doc_lens before its stats row and postings before term_df, so each
+        # later pin's plan reads the earlier pin's blocks
+        names = ("doc_lens", "postings", "term_df", "stats")
+        pins = {n: materialize(getattr(idx, n), "memory") for n in names}
+        self._search_side = search.df
+        self._bm25 = BM25.BM25Index(**{n: pin.df for n, pin in pins.items()})
+        self._pins = [search, *pins.values()]
 
     def _invalidate(self) -> None:
-        """Release every frame pinned over the corpus path and refresh
-        Spark's view of it. Spark re-caches only the path a write names:
+        """Release this pipeline's pins and refresh Spark's view of the
+        corpus path. Spark re-caches only the path a write names:
         ``delete_by_ids`` writes a staging path and renames it, so without
         this a later :meth:`build_index` would match the stale cached plans
         over ``corpus/`` and serve deleted pages."""
-        pinned = [self._search_side]
-        if self._bm25 is not None:
-            idx = self._bm25
-            pinned += [idx.postings, idx.doc_lens, idx.term_df, idx.stats]
-        for df in pinned:
-            if df is not None:
-                release_materialized(df)
+        for pin in self._pins:
+            pin.release()
+        self._pins = []
         self._search_side = None
         self._bm25 = None
         self.spark.catalog.refreshByPath(str(self.base / "corpus"))
@@ -549,9 +553,11 @@ def build_training_set(
     # the main probe branch both descend from `ranked`, whose lineage contains
     # the whole minhash-dedup front end (the expensive part). The broadcast
     # boundary defeats ReusedExchange under AQE (measured: 2× front-end cost,
-    # 6.2 s vs 4.4 s at sf0.1), so persist the survivors explicitly — a tiny
-    # (id + 3 numeric cols) table even at 100 TB corpus scale.
-    ranked = ranked.persist()
+    # 6.2 s vs 4.4 s at sf0.1), so pin the survivors explicitly — a tiny
+    # (id + 3 numeric cols) table even at 100 TB corpus scale. The pin stays
+    # behind the returned frame (a "memory" pin: clearCache() frees it).
+    pin = materialize(ranked, "memory")
+    ranked = pin.df
     # ONE action both materializes the cache (pinning the front end to
     # exactly one execution — a lazy persist lets the two branches race,
     # measured up to 17 s run-to-run at sf0.1) AND produces the offsets:
@@ -566,6 +572,7 @@ def build_training_set(
         offsets[r["__bkt"]] = run
         run += r["__tot"]
     if not offsets:  # every doc deduped/filtered away: empty, typed result
+        pin.release()
         return ranked.select(
             "doc_id", "n_tokens", F.lit(0).cast("long").alias("cum_tokens"), "quality"
         ).limit(0)

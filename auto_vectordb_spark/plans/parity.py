@@ -66,6 +66,7 @@ from ..operators import retraction as RT
 from ..operators import schedule as SCH
 from ..operators import snapshots as SNAP
 from ..operators import textstats as TS
+from ..session import materialize
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -1063,13 +1064,13 @@ BM25_QUERIES: list[tuple[int, str]] = [
 ]
 
 # NOTE on index reuse: memoizing the BM25 index across the bm25/hybrid
-# entries (build once, cache=True, serve all three) was tried and MEASURED
-# SLOWER at sf0.1: the .cache() materialization of postings/doc_lens/term_df
+# entries (build once, pin postings/doc_lens/term_df in memory, serve all
+# three) was tried and MEASURED SLOWER at sf0.1: materializing the pins
 # cost ~+1.8s on the building query while saving only ~0.3-0.7s on each
 # reuse — in-memory cache round-trips break whole-stage pipelining, and at
 # this corpus size a fused rebuild is cheaper. Entries stay self-contained;
-# the pipeline facade (long-lived index, many queries) is where cache=True
-# pays.
+# the pipeline facade (long-lived index, many queries) is where pinning
+# the index (VectorPipeline.build_index) pays.
 
 
 def _bm25_score_cte(queries: list[tuple[int, str]]) -> str:
@@ -5391,13 +5392,13 @@ def events_cohort_retention(spark, sf):
 def events_funnel(spark, sf):
     t = load_views(spark, sf)
     ev = t["events"].select("user_id", "ts", "event_type")
-    s1 = (
+    s1 = materialize(
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-        .persist()
-    )
-    s2 = (
+        .agg(F.min("ts").alias("t1")),
+        "memory",
+    ).df
+    s2 = materialize(
         ev.filter(F.col("event_type") == "view")
         .join(s1, "user_id")
         .filter(
@@ -5405,9 +5406,9 @@ def events_funnel(spark, sf):
             & (F.col("ts") <= F.col("t1") + F.expr("INTERVAL 6 HOURS"))
         )
         .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-        .persist()
-    )
+        .agg(F.min("ts").alias("t2")),
+        "memory",
+    ).df
     s3 = (
         ev.filter(F.col("event_type") == "purchase")
         .join(s2, "user_id")
@@ -9477,8 +9478,8 @@ def scd2_incremental(spark, sf):
     # window-heavy batch lineage isn't re-run per consumer (was 9 scans of
     # the events parquet in one plan — opt guide §2.4). Production stores
     # the state anyway (cf. rollup_incremental's parquet round-trip).
-    old_state = IC.scd2_state(old).localCheckpoint(eager=True)
-    new_state = IC.scd2_state(new).localCheckpoint(eager=True)
+    old_state = materialize(IC.scd2_state(old), "checkpoint").df
+    new_state = materialize(IC.scd2_state(new), "checkpoint").df
     return IC.scd2_finalize(IC.scd2_merge(old_state, new_state))
 
 
@@ -9715,10 +9716,12 @@ def scd2_incremental_retract(spark, sf):
     old, new = _ivm_split(t["events"])
     # state + merged materialized once: scd2_merge multiplies its inputs
     # (3×/2×) and scd2_retract consumes `merged` twice (pass-through +
-    # affected-user rebuild) — see scd2_incremental
-    old_state = IC.scd2_state(old).localCheckpoint(eager=True)
-    new_state = IC.scd2_state(new).localCheckpoint(eager=True)
-    merged = IC.scd2_merge(old_state, new_state).localCheckpoint(eager=True)
+    # affected-user rebuild) — see scd2_incremental; only `merged` stays pinned
+    with (
+        materialize(IC.scd2_state(old), "checkpoint") as old_state,
+        materialize(IC.scd2_state(new), "checkpoint") as new_state,
+    ):
+        merged = materialize(IC.scd2_merge(old_state, new_state), "checkpoint").df
     deleted = (
         t["events"]
         .where(F.pmod(F.col("event_id"), F.lit(101)) == 0)

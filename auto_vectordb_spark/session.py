@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and :func:`materialize`,
+the one way library code pins (and releases) a working set.
 
 Local-mode defaults match the test/bench environment (local[32], single JVM);
 on a real cluster the same settings remain sane: AQE handles skew/coalesce at
@@ -10,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -58,31 +60,49 @@ def get_spark(
     return spark
 
 
-def release_materialized(df) -> None:
-    """Free the storage blocks behind a materialized DataFrame, whichever
-    way it was materialized:
+class Materialized:
+    """A pin's handle: ``df`` reads the pinned blocks and :meth:`release`
+    frees exactly what :func:`materialize` created (idempotent). As a
+    context manager it yields ``df`` and releases on exit."""
 
-    - ``persist()``/``cache()``: ``Dataset.unpersist`` drops the
-      CacheManager entry and its blocks.
-    - ``localCheckpoint()``: the blocks belong to the INTERNAL RDD the
-      plan wraps (``LogicalRDD``). ``Dataset.unpersist`` does not touch
-      them, and ``df.rdd.unpersist`` unpersists a fresh conversion RDD,
-      not the materialized one — measured: storage unchanged. Unpersist
-      the plan's RDD directly.
+    def __init__(self, df: DataFrame, free) -> None:
+        self.df, self._free = df, free
 
-    Best-effort by design (wrong-shape plans are left to the async
-    ContextCleaner, which eventually frees them once the Python proxy is
-    collected): operators call this when a corpus-sized working set has
-    served every consumer, so blocks never pile up across iterations or
-    outlive the operator call.
+    def release(self) -> None:
+        if self._free is not None:
+            self._free(False)  # non-blocking
+            self._free = None
+
+    def __enter__(self) -> DataFrame:
+        return self.df
+
+    def __exit__(self, *exc) -> None:
+        self.release()
+
+
+def materialize(df: DataFrame, kind: str) -> Materialized:
+    """Pin ``df`` — the only way library code pins a working set. Whoever
+    holds the handle owns the pin; a loop releases the previous round's
+    handle once the new round's is materialized.
+
+    - ``"memory"``: lazy ``persist()`` (MEMORY_AND_DISK, the ``cache()``
+      level); the first action fills it. ``clearCache()`` also frees it.
+    - ``"disk"``: ``persist(DISK_ONLY)`` filled by one ``count()``; keeps
+      lineage, so a lost executor recomputes its blocks.
+    - ``"checkpoint"``: eager ``localCheckpoint``, cutting the lineage. Its
+      blocks belong to the plan's internal RDD (``LogicalRDD``), which
+      release unpersists: ``Dataset.unpersist`` and ``clearCache()`` do not
+      touch it, and ``df.rdd.unpersist`` hits a fresh conversion RDD
+      (measured: storage unchanged).
     """
-    try:
-        df.unpersist(False)
-    except Exception:  # noqa: BLE001 — release is best-effort hygiene
-        pass
-    try:
-        node = df._jdf.queryExecution().analyzed()  # noqa: SLF001
-        if node.getClass().getSimpleName() == "LogicalRDD":
-            node.rdd().unpersist(False)
-    except Exception:  # noqa: BLE001
-        pass
+    if kind == "memory":
+        df = df.persist()
+        return Materialized(df, df.unpersist)
+    if kind == "disk":
+        df = df.persist(StorageLevel.DISK_ONLY)
+        df.count()
+        return Materialized(df, df.unpersist)
+    if kind == "checkpoint":
+        df = df.localCheckpoint(eager=True)
+        return Materialized(df, df._jdf.queryExecution().analyzed().rdd().unpersist)  # noqa: SLF001
+    raise ValueError(f"unknown materialize kind {kind!r}")

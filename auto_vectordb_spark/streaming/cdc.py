@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.retraction import rollup_merge_r, rollup_retract, rollup_state_r
+from ..session import materialize
 
 #: retract-capable rollup state schema (operators/retraction.rollup_state_r)
 STATE_SCHEMA = T.StructType(
@@ -103,22 +104,23 @@ def apply_cdc_batch(
     rollup_retract(rollup_merge_r(prev, ups), dels)."""
     from ..operators.retraction import _rollup_add
 
-    delta = rollup_state_r(batch, extra_keys=(op_col,)).localCheckpoint(eager=True)
-    ops = [r[0] for r in delta.select(op_col).distinct().collect()]
-    bad = [o for o in ops if o not in ("upsert", "delete")]
-    if bad:
-        raise ValueError(f"unknown CDC op values: {bad}")
-    ups_p = delta.where(F.col(op_col) == "upsert").drop(op_col)
-    neg_p = delta.where(F.col(op_col) == "delete").select(
-        "window_start",
-        "event_type",
-        (-F.col("n_events")).alias("n_events"),
-        (-F.col("n_vals")).alias("n_vals"),
-        (-F.col("sum_cents")).alias("sum_cents"),
-    )
-    prev = _state_before(spark, state_dir, epoch)
-    new = _rollup_add(_rollup_add(prev, ups_p), neg_p).where(F.col("n_events") > 0)
-    new.write.mode("overwrite").parquet(f"{state_dir}/v{epoch:012d}")
+    # released once the version write commits: one pin per micro-batch would pile up
+    with materialize(rollup_state_r(batch, extra_keys=(op_col,)), "checkpoint") as delta:
+        ops = [r[0] for r in delta.select(op_col).distinct().collect()]
+        bad = [o for o in ops if o not in ("upsert", "delete")]
+        if bad:
+            raise ValueError(f"unknown CDC op values: {bad}")
+        ups_p = delta.where(F.col(op_col) == "upsert").drop(op_col)
+        neg_p = delta.where(F.col(op_col) == "delete").select(
+            "window_start",
+            "event_type",
+            (-F.col("n_events")).alias("n_events"),
+            (-F.col("n_vals")).alias("n_vals"),
+            (-F.col("sum_cents")).alias("sum_cents"),
+        )
+        prev = _state_before(spark, state_dir, epoch)
+        new = _rollup_add(_rollup_add(prev, ups_p), neg_p).where(F.col("n_events") > 0)
+        new.write.mode("overwrite").parquet(f"{state_dir}/v{epoch:012d}")
     # prune old versions, always keeping everything >= the replay horizon
     # (the newest version below the one just written must survive so a
     # replay of THIS epoch still finds its input)
