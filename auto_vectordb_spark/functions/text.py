@@ -17,10 +17,22 @@ Reference citations (/root/reference/):
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"  # lower-cased alnum tokens; RE2/Java-regex safe
+
+
+def tokenize_text(text: str) -> list[str]:
+    """Driver-side twin of :func:`tokenize` for one query string:
+    ``str.lower`` then the same split, empties dropped. Spark's ``lower``
+    goes through Java ``toLowerCase``; the two agree on non-ASCII input
+    (İ, ß, the Kelvin sign, ǅ, fullwidth letters, ligatures, accents —
+    gated in tests/test_functions.py) under the JVM's root-locale
+    lowering."""
+    return [t for t in re.split(TOKEN_SPLIT_RE, text.lower()) if t]
 
 
 def md5_hex(col: Column) -> Column:

@@ -4,7 +4,8 @@ elasticsearch_index.py:249-258, which delegates scoring to Lucene).
 
 Design (scale-first):
 
-- **Index build** (:func:`build_index`): one pass over the corpus →
+- **Index build** (:func:`build_index`: tokenize, then
+  :func:`index_terms` over the term arrays): one pass over the corpus →
   (a) ``postings``: (term, doc_id, tf) — the exploded term-frequency table,
   partitionable by term; (b) ``doc_lens``: (doc_id, dl);
   (c) ``stats``: broadcast-sized scalars (N, avgdl) + per-term df.
@@ -25,6 +26,7 @@ Identical formula in the DuckDB oracle (plans/parity.py).
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -35,6 +37,12 @@ from .relational import top_k_per_group
 
 K1 = 1.2
 B = 0.75
+
+
+def idf(n_docs: float, df: int) -> float:
+    """Lucene idf of a term in ``df`` of ``n_docs`` docs — the driver-side
+    form of :func:`score_terms`' expression (always > 0 for df ≤ N)."""
+    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
 @dataclass
@@ -51,7 +59,8 @@ class BM25Index:
     # that queries repeatedly pins the row with the other frames
     # (VectorPipeline.build_index), so queries read it instead of
     # re-aggregating doc_lens. The properties below collect on first
-    # access for callers that genuinely want the numbers.
+    # access for callers that genuinely want the numbers; an owner that
+    # already collected the row passes it as ``_scalars``.
     _scalars: tuple[int, float] | None = None
 
     def _fetch(self) -> tuple[int, float]:
@@ -81,7 +90,8 @@ def _stats_of(doc_lens: DataFrame) -> DataFrame:
 def build_index(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> BM25Index:
-    """One corpus pass, zero actions, nothing pinned. ``doc_lens`` is
+    """Tokenize ``text_col`` and index the term arrays (:func:`index_terms`).
+    One corpus pass, zero actions, nothing pinned. ``doc_lens`` is
     computed per-row as the token-array size — zero shuffle — and only
     postings pays the (term, doc_id) shuffle. Within a single query job
     Spark's ReusedExchange serves term_df and the query join from one
@@ -104,7 +114,19 @@ def build_index(
     postings exchange between the probe join and the term_df branch, so
     the index path pays the corpus explode+shuffle once; the pruned plan
     pays a per-token probe plus a sort-merge join against doc_lens."""
-    toks = tokenize(F.col(text_col))
+    return index_terms(
+        docs.select(F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("terms"))
+    )
+
+
+def index_terms(
+    docs: DataFrame, id_col: str = "doc_id", terms_col: str = "terms"
+) -> BM25Index:
+    """The index over an already-tokenized ``terms_col`` (array<string>,
+    one entry per token occurrence) — the step :func:`build_index` runs
+    after tokenizing, and the one an owner that keeps the term arrays
+    itself (VectorPipeline.build_index) calls directly."""
+    toks = F.col(terms_col)
     tokens = docs.select(F.col(id_col).alias("doc_id"), F.explode(toks).alias("term"))
     postings = tokens.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
     # dl > 0 filter ≡ "docs with ≥1 token": identical population to a

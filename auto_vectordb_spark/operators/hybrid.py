@@ -3,28 +3,46 @@ elasticsearch_index.py:215-306).
 
 The reference builds one ES bool query: ``should: [match(boost=1.0),
 knn(boost=0.8)]``, ``minimum_should_match: 1``, then ``min_score`` cut and
-top ``size``. That is a *weighted sum over the union of both result sets* —
-here a full-outer join of the two score DataFrames on (query_id, doc_id):
+top ``size``. That is a *weighted sum over the union of both result sets*:
 
     fused = 1.0 * coalesce(bm25, 0) + 0.8 * coalesce(knn, 0)
 
-``minimum_should_match: 1`` ≡ the row exists in at least one side ≡ full
-outer join membership. An RRF variant (the comment at
-elasticsearch_index.py:222 *claims* RRF; the implementation is weighted
-boolean score — we provide both, weighted is the parity default).
+``minimum_should_match: 1`` ≡ the row exists in at least one side. An RRF
+variant (the comment at elasticsearch_index.py:222 *claims* RRF; the
+implementation is weighted boolean score — we provide both, weighted is
+the parity default).
 
-Scale: both inputs arrive already reduced to (query, doc, score) — small
-relative to the corpus — so the fusion join is cheap; scores never touch the
-full corpus again.
+Two shapes compute the weighted fusion:
+
+- :func:`fused_topk` — the pipeline's search path. One ``mapInArrow``
+  kernel reads a pinned frame that carries each doc's id, vector, term
+  array and category, scores every row on BOTH legs (Lucene BM25 from
+  the term arrays and driver-side idf; cosine by one GEMV), and emits
+  per partition only its local BM25 top-K and its local cosine
+  top-``size``, both cut in the global (score desc, id asc) order. The
+  driver merges the ≤ partitions·(K + size) candidate rows: one Spark
+  job per query, no shuffle, no join. Decode → score → top-k in one
+  block operator is FuseME's argument (SIGMOD 2022); cutting each
+  partition to a provable candidate bound before the global merge is
+  the bound-based pruning of incremental top-K similarity search
+  (EDBT 2020).
+- :func:`fuse_weighted` — the composable DataFrame form for score legs
+  that arrive as (query_id, doc_id, score) frames: a full-outer join on
+  (query_id, doc_id) and a windowed top-k. The registry entries and the
+  pipeline's ``rerank`` first stage use it, and it is the twin the fused
+  kernel is tested against (tests/test_pipeline.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions import cleanvec as CV
+from ..functions import vector as V
+from . import bm25 as BM25
 from .relational import top_k_per_group
 
 TEXT_BOOST = 1.0   # elasticsearch_index.py:241
@@ -57,6 +75,160 @@ def fuse_weighted(
     )
     fused = fused.filter(F.col("score") >= min_score)
     return top_k_per_group(fused, ["query_id"], "score", k, tie_break="doc_id")
+
+
+def fused_topk(
+    side: DataFrame,
+    qvec,
+    idf: dict[str, float],
+    avgdl: float,
+    size: int,
+    text_k: int,
+    mode: str = "hybrid",
+    categories: list[str] | None = None,
+    min_score: float = 0.0,
+    id_col: str = "id",
+    vec_col: str = "embeddings",
+    terms_col: str = "terms",
+    cat_col: str = "lv1_cat",
+) -> list[tuple[str, float]]:
+    """The top ``size`` (id, score) of the reference's hybrid query over
+    ``side``, best first — what :func:`fuse_weighted` returns over the
+    BM25 top-``text_k`` (corpus-wide, then restricted to ``categories``)
+    and the cosine of every in-scope row with a valid vector — computed
+    by ONE ``mapInArrow`` pass and a driver-side merge.
+
+    ``side`` holds one row per id with ``vec_col`` (the vector),
+    ``terms_col`` (the doc's token array, :func:`text.tokenize` of its
+    text) and ``cat_col`` (its category). ``idf`` maps each distinct
+    query term present in the index to its idf (:func:`bm25.idf`);
+    ``avgdl`` is the index's mean doc length. ``mode`` ``"bm25"`` or
+    ``"knn"`` keeps one leg, as :func:`fuse_weighted` with the other leg
+    empty does.
+
+    Per batch the kernel decodes the vectors (:func:`cleanvec.decode`;
+    a NULL, ragged or non-finite vector is no kNN match), scores cosine
+    with the same unit-row GEMV as :func:`knn.cosine_scores_blas`, and
+    scores Lucene BM25 with query-term tf counted by ``pyarrow.compute``
+    over the flattened term lists. Each partition then keeps only its
+    local BM25 top-``text_k`` over all categories and its local cosine
+    top-``size`` over in-scope rows, both ordered (score desc, id asc).
+    The driver applies the global BM25 cut, the category scope, the
+    1.0/0.8 fusion, ``min_score`` and the final order.
+
+    Why the result is exact:
+
+    - BM25 scores are never negative (idf > 0, every tf term ≥ 0), so a
+      doc in the BM25 top-K scores at least 0.8·cos.
+    - Take a doc x outside both the global BM25 top-K and the scoped
+      cosine top-``size``. It scores 0.8·cos(x) (or is no member at all).
+      Each of the ``size`` docs d of the cosine top-``size`` has
+      cos(d) ≥ cos(x), id(d) < id(x) on equality, and scores
+      bm25(d) + 0.8·cos(d) ≥ 0.8·cos(x): all ``size`` rank above x under
+      (score desc, id asc), and pass any ``min_score`` x passes.
+    - So the fused top-``size`` ⊆ (BM25 top-K ∩ scope) ∪ (cosine
+      top-``size``). A per-partition cut in the same total order keeps
+      every member of either global set (ids are unique), and the
+      emitted rows carry both exact scores.
+
+    Scores equal :func:`fuse_weighted`'s up to the order BM25 sums its
+    terms in (the 1e-9 oracle tolerance)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if mode not in ("hybrid", "bm25", "knn"):
+        raise ValueError(f"unknown mode {mode!r}")
+    text_k = 0 if mode == "knn" else text_k
+    vec_k = 0 if mode == "bm25" else size
+    qterms = sorted(idf) if text_k else []
+    terms = pa.array(qterms, pa.string())
+    weights = np.array([idf[t] for t in qterms], dtype=np.float64)
+    q = np.asarray(qvec, dtype=np.float64)[None, :]
+    qn = q / V.safe_row_norms(q)
+    scope = None if categories is None else pa.array(list(categories), pa.string())
+    schema = T.StructType(
+        [
+            T.StructField(id_col, side.schema[id_col].dataType),
+            T.StructField("bm25", T.DoubleType()),
+            T.StructField("knn", T.DoubleType()),
+            T.StructField("in_scope", T.BooleanType()),
+        ]
+    )
+
+    def score(batch) -> pa.Table:
+        n = batch.num_rows
+        in_scope = np.ones(n, dtype=bool)
+        if scope is not None:
+            in_scope = pc.fill_null(pc.is_in(batch.column(cat_col), value_set=scope), False)
+            in_scope = in_scope.to_numpy(zero_copy_only=False)
+        bm25 = np.zeros(n)
+        matched = np.zeros(n, dtype=bool)
+        if len(terms):
+            lists = batch.column(terms_col)
+            slot = pc.index_in(pc.list_flatten(lists), value_set=terms)
+            hit = pc.is_valid(slot)
+            rows = pc.list_parent_indices(lists).filter(hit).to_numpy()
+            cols = slot.filter(hit).to_numpy()
+            nq = len(terms)
+            tf = np.bincount(rows * nq + cols, minlength=n * nq).reshape(n, nq)
+            tf = tf.astype(np.float64)
+            dl = pc.fill_null(pc.list_value_length(lists), 0).to_numpy(zero_copy_only=False)
+            norm = BM25.K1 * ((1.0 - BM25.B) + BM25.B * dl.astype(np.float64) / avgdl)
+            bm25 = (weights * (tf * (BM25.K1 + 1.0) / (tf + norm[:, None]))).sum(axis=1)
+            matched = tf.any(axis=1)
+        knn = np.zeros(n)
+        valid = np.zeros(n, dtype=bool)
+        if vec_k:
+            mask, C = CV.decode(batch.column(vec_col), qn.shape[1])
+            if C is not None:
+                knn[mask] = ((C / V.safe_row_norms(C)) @ qn.T)[:, 0]
+                valid = mask & in_scope
+        return pa.table(
+            {
+                id_col: batch.column(id_col),
+                "bm25": pa.array(bm25, mask=~matched),
+                "knn": pa.array(knn, mask=~valid),
+                "in_scope": pa.array(in_scope),
+            }
+        )
+
+    def cut(t: pa.Table) -> pa.Table:
+        keep = np.zeros(t.num_rows, dtype=bool)
+        for col, k in (("bm25", text_k), ("knn", vec_k)):
+            rows = np.flatnonzero(t.column(col).is_valid().to_numpy(zero_copy_only=False))
+            if k and len(rows):
+                top = pc.select_k_unstable(
+                    t.take(rows), k, sort_keys=[(col, "descending"), (id_col, "ascending")]
+                )
+                keep[rows[top.to_numpy()]] = True
+        return t.filter(pa.array(keep))
+
+    def part(batches):
+        kept = [cut(score(b)) for b in batches]
+        if kept:
+            yield from cut(pa.concat_tables(kept)).to_batches()
+
+    got = (
+        side.select(id_col, vec_col, terms_col, cat_col)
+        .where(F.col(id_col).isNotNull())
+        .mapInArrow(part, schema)
+        .toArrow()
+    )
+    ids = got.column(id_col).to_pylist()
+    b, v = got.column("bm25").to_pylist(), got.column("knn").to_pylist()
+    s = got.column("in_scope").to_pylist()
+    ranked = sorted((i for i, x in enumerate(b) if x is not None), key=lambda i: (-b[i], ids[i]))
+    text = {ids[i]: b[i] for i in ranked[:text_k] if s[i]}
+    vec = {d: x for d, x in zip(ids, v) if x is not None}
+    fused = {
+        d: TEXT_BOOST * text.get(d, 0.0) + VECTOR_BOOST * vec.get(d, 0.0)
+        for d in text.keys() | vec.keys()
+    }
+    hits = sorted(
+        ((d, x) for d, x in fused.items() if x >= min_score), key=lambda kv: (-kv[1], kv[0])
+    )
+    return hits[:size]
 
 
 def fuse_rrf(

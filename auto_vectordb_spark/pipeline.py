@@ -38,13 +38,13 @@ Endpoint ↔ method map (reference file:line → here):
 
 Scale design: the corpus is written partitioned by ``lv1_cat`` (partition
 pruning for category-scoped :meth:`corpus` reads). :meth:`build_index` pins
-ONE deduplicated search side (``dropDuplicates(["id"])`` over the corpus,
-cached at MEMORY_AND_DISK like the BM25 postings) and builds the BM25 index
-from it; BM25 postings shuffle once at build. Every query reads that pin —
-kNN leg, ``categories`` filter, BM25 category semi-join, final hit join —
-so a query does no parquet scan and no dedup shuffle; query-time plans only
-broadcast-join query-sized tables against the pinned frames. A write to the
-corpus (save, delete, streamed append) releases the pins
+ONE deduplicated search side (``dropDuplicates(["id"])`` over the corpus
+plus each page's token array, cached at MEMORY_AND_DISK like the BM25
+postings) and indexes BM25 from its token arrays; BM25 postings shuffle
+once at build. A query scores both legs in one ``mapInArrow`` pass over
+that pin and fetches its hits from it by id, so it does no parquet scan,
+no dedup shuffle and no join (:meth:`VectorPipeline.search`). A write to
+the corpus (save, delete, streamed append) releases the pins
 (:meth:`VectorPipeline._invalidate`).
 """
 
@@ -68,6 +68,8 @@ from .functions.text import (
     normalize_newlines,
     normalize_path,
     strip_image_tags,
+    tokenize,
+    tokenize_text,
 )
 from .operators import bm25 as BM25
 from .operators import hybrid as HY
@@ -79,6 +81,7 @@ from .session import Materialized, materialize
 ParserFn = Callable[[str, bytes], list[tuple[int, str]]]
 
 PAGE_CHARS = 2000  # fake-parser page size (reference pages are real PDF pages)
+TERMS = "__terms"  # the search side's internal token-array column
 
 
 def text_page_parser(path: str, content: bytes) -> list[tuple[int, str]]:
@@ -147,7 +150,8 @@ class VectorPipeline:
         self.embed_backend = embed_backend
         self.upload_root = upload_root
         self._bm25: BM25.BM25Index | None = None
-        self._search_side: DataFrame | None = None
+        self._search_side: DataFrame | None = None  # carries TERMS: drop it
+        self._term_df: dict[str, int] = {}  # term -> df, beside the pins
         self._pins: list[Materialized] = []  # build_index's; _invalidate frees them
         self._corpus_cache: DataFrame | None = None
 
@@ -326,22 +330,40 @@ class VectorPipeline:
     def build_index(self) -> None:
         """S11 — derive the search-index artifacts from the corpus: the
         pinned search side and the BM25 postings/doc_lens/term_df/stats
-        over it, each a lazy ``"memory"`` pin this pipeline owns until the
+        over it, each a ``"memory"`` pin this pipeline owns until the
         next corpus write. Idempotent by id (dropDuplicates = ES _id
         overwrite, elasticsearch_index.py:141); a repeated call rebuilds
-        from the current corpus."""
+        from the current corpus.
+
+        The search side carries each page's token array in the internal
+        column :data:`TERMS` (:func:`text.tokenize` of ``page_content``,
+        tokenized once); the BM25 frames index that column, and
+        :meth:`search`'s kernel reads it. Two ``toArrow()`` collects fill
+        the pins and bring ``N``/``avgdl`` and the term → df table to the
+        driver, where each query's idf is computed."""
         self._invalidate()
-        search = materialize(self.corpus().dropDuplicates(["id"]), "memory")
-        idx = BM25.build_index(
-            search.df.select(F.col("id").alias("doc_id"), F.col("page_content").alias("text"))
+        search = materialize(
+            self.corpus()
+            .dropDuplicates(["id"])
+            .withColumn(TERMS, tokenize(F.col("page_content"))),
+            "memory",
         )
+        idx = BM25.index_terms(search.df, id_col="id", terms_col=TERMS)
         # doc_lens before its stats row and postings before term_df, so each
         # later pin's plan reads the earlier pin's blocks
         names = ("doc_lens", "postings", "term_df", "stats")
         pins = {n: materialize(getattr(idx, n), "memory") for n in names}
-        self._search_side = search.df
-        self._bm25 = BM25.BM25Index(**{n: pin.df for n, pin in pins.items()})
         self._pins = [search, *pins.values()]
+        stats = pins["stats"].df.toArrow()
+        term_df = pins["term_df"].df.toArrow()
+        self._search_side = search.df
+        self._bm25 = BM25.BM25Index(
+            **{n: pin.df for n, pin in pins.items()},
+            # avgdl is NULL when no page has a token; no query term then
+            # has a df, so it is never divided by
+            _scalars=(int(stats["__n"][0].as_py()), float(stats["__avgdl"][0].as_py() or 0.0)),
+        )
+        self._term_df = dict(zip(term_df["term"].to_pylist(), term_df["df"].to_pylist()))
 
     def _invalidate(self) -> None:
         """Release this pipeline's pins and refresh Spark's view of the
@@ -354,6 +376,7 @@ class VectorPipeline:
         self._pins = []
         self._search_side = None
         self._bm25 = None
+        self._term_df = {}
         self.spark.catalog.refreshByPath(str(self.base / "corpus"))
 
     # ---- search (V2–V5, P5, P6) -------------------------------------------
@@ -369,22 +392,39 @@ class VectorPipeline:
         """Hybrid top-k search — the reference's POST /search.
 
         Weighted fusion bm25*1.0 + cosine*0.8 over the union of both legs
-        (minimum_should_match: 1), min_score cut, size clamped to the API
-        bounds 1..100 (routers/es_index.py:45-46). Returns hits joined back
-        to corpus columns (V5 — hits are already columnar here).
+        (minimum_should_match: 1), the BM25 leg cut to its corpus-wide top
+        max(10·size, 50), min_score cut, size clamped to the API bounds
+        1..100 (routers/es_index.py:45-46). Returns the hits' corpus
+        columns plus ``score``, ordered (score desc, id asc).
 
-        Every leg reads the search side pinned by :meth:`build_index` (no
-        parquet scan, no dedup shuffle per query). The kNN leg scores every
-        pinned page with one Arrow/NumPy GEMV per batch
-        (:func:`knn.cosine_scores_blas`); a page whose vector is NULL,
-        ragged or non-finite never matches the kNN clause (ES semantics for
-        a doc without a vector) and is a hit only through BM25.
+        Not fully lazy: the ``hybrid``, ``bm25`` and ``knn`` modes run ONE
+        scoring job at call time (:func:`hybrid.fused_topk`) — a
+        ``mapInArrow`` pass over the search side pinned by
+        :meth:`build_index` that scores BM25 from the pinned term arrays
+        and cosine by a GEMV, and ships back each partition's local BM25
+        top-K and cosine top-``size`` — and the driver fuses them. The
+        result is exact: BM25 scores are never negative, so a doc outside
+        both the global BM25 top-K and the scoped cosine top-``size``
+        scores 0.8·cos and ``size`` docs rank above it under (score desc,
+        id asc); the fused top-``size`` therefore lies in (BM25 top-K ∩
+        scope) ∪ (cosine top-``size``), and local cuts in the same total
+        order keep every member of both. The returned frame is a lazy
+        fetch of at most ``size`` pinned rows by id (a second job when
+        consumed), its score projected from a literal map: no parquet
+        scan, no shuffle, no join.
 
-        ``categories`` restricts both legs to the given ``lv1_cat`` values
-        by filtering the pinned frame (a cached-batch filter; partition
-        pruning covers category-scoped :meth:`corpus` reads).
+        A page whose vector is NULL, ragged or non-finite never matches
+        the kNN clause (ES semantics for a doc without a vector) and is a
+        hit only through BM25. ``categories`` restricts both legs to the
+        given ``lv1_cat`` values (the BM25 cut stays corpus-wide, as the
+        index is). ``rerank`` keeps the composed plan: the hybrid top
+        max(4·size, 20) from :func:`bm25.search` and
+        :func:`knn.cosine_scores_blas` fused by
+        :func:`hybrid.fuse_weighted`, reranked by token overlap.
         """
         size = max(1, min(int(size), 100))
+        if mode not in ("hybrid", "bm25", "knn", "rerank"):
+            raise ValueError(f"unknown mode {mode!r}")
         if self._bm25 is None:
             self.build_index()
         qvec = np.asarray(self.embed_texts([query_text])[0], dtype=np.float64)
@@ -392,7 +432,43 @@ class VectorPipeline:
             raise ValueError(f"query embedding dim {len(qvec)} != {self.dim}")
         if not np.isfinite(qvec).all():
             raise ValueError("query embedding has non-finite elements")
-        corpus = self._search_side
+        text_k = max(size * 10, 50)
+        corpus = self._search_side.drop(TERMS)
+        if mode == "rerank":
+            return self._rerank(corpus, query_text, qvec, size, min_score, categories, text_k)
+        n_docs = self._bm25.n_docs
+        idf = {
+            t: BM25.idf(n_docs, self._term_df[t])
+            for t in set(tokenize_text(query_text))
+            if t in self._term_df
+        }
+        hits = dict(
+            HY.fused_topk(
+                self._search_side,
+                qvec,
+                idf,
+                self._bm25.avgdl,
+                size,
+                text_k,
+                mode=mode,
+                categories=categories,
+                min_score=min_score,
+                terms_col=TERMS,
+            )
+        )
+        lits = [F.lit(x) for kv in hits.items() for x in kv]
+        score = F.create_map(*lits)[F.col("id")] if hits else F.lit(None)
+        return (
+            corpus.where(F.col("id").isin(list(hits)))
+            .select(score.cast("double").alias("score"), *corpus.columns)
+            .orderBy(F.col("score").desc(), F.col("id").asc())
+            .limit(size)
+        )
+
+    def _rerank(self, corpus, query_text, qvec, size, min_score, categories, text_k) -> DataFrame:
+        """Two-stage search: hybrid top-(4*size) candidates, reranked by the
+        pluggable second-stage scorer (token-overlap stand-in; a real
+        cross-encoder swaps in via operators/hybrid.py)."""
         if categories is not None:
             corpus = corpus.filter(F.col("lv1_cat").isin(list(categories)))
         queries_df = self.spark.createDataFrame(
@@ -405,37 +481,23 @@ class VectorPipeline:
             corpus_id="doc_id",
             corpus_vec="embeddings",
         )
-        bm25_scores = BM25.search(self._bm25, queries_df, k=max(size * 10, 50))
+        bm25_scores = BM25.search(self._bm25, queries_df, k=text_k)
         if categories is not None:
             # the BM25 index is corpus-wide; restrict its leg too, or
             # out-of-category docs would occupy top-k slots pre-join
             bm25_scores = bm25_scores.join(
                 corpus.select(F.col("id").alias("doc_id")), "doc_id", "left_semi"
             )
-        if mode == "hybrid":
-            hits = HY.fuse_weighted(bm25_scores, knn_scores, min_score=min_score, k=size)
-        elif mode == "bm25":
-            hits = HY.fuse_weighted(bm25_scores, bm25_scores.limit(0), min_score=min_score, k=size)
-        elif mode == "knn":
-            hits = HY.fuse_weighted(
-                knn_scores.limit(0), knn_scores, min_score=min_score, k=size
-            )
-        elif mode == "rerank":
-            # two-stage: hybrid top-(4*size) candidates, reranked by the
-            # pluggable second-stage scorer (token-overlap stand-in; a real
-            # cross-encoder swaps in via operators/hybrid.py)
-            cand = HY.fuse_weighted(
-                bm25_scores, knn_scores, min_score=min_score, k=max(4 * size, 20)
-            )
-            hits = HY.rerank_token_overlap(
-                cand,
-                queries_df,
-                corpus.select(F.col("id").alias("doc_id"), F.col("page_content")),
-                k=size,
-                text_col="page_content",
-            ).select("query_id", "doc_id", F.col("rerank_score").alias("score"))
-        else:
-            raise ValueError(f"unknown mode {mode!r}")
+        cand = HY.fuse_weighted(
+            bm25_scores, knn_scores, min_score=min_score, k=max(4 * size, 20)
+        )
+        hits = HY.rerank_token_overlap(
+            cand,
+            queries_df,
+            corpus.select(F.col("id").alias("doc_id"), F.col("page_content")),
+            k=size,
+            text_col="page_content",
+        ).select("query_id", "doc_id", F.col("rerank_score").alias("score"))
         return (
             hits.join(corpus, hits["doc_id"] == corpus["id"])
             .drop("doc_id", "query_id")

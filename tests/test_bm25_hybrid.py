@@ -2,6 +2,8 @@
 
 import math
 
+from pyspark.sql import functions as F
+
 from auto_vectordb_spark.operators import bm25 as BM25
 from auto_vectordb_spark.operators import hybrid as HY
 
@@ -55,6 +57,29 @@ def test_fuse_weighted_semantics(spark):
     assert abs(out[12] - 0.8 * 0.9) < 1e-12    # knn-only leg
     cut = {r["doc_id"] for r in HY.fuse_weighted(b, v, min_score=1.0, k=10).collect()}
     assert cut == {10, 11}
+
+
+def test_fused_topk_breaks_cross_partition_ties_by_id(spark):
+    """600 identical pages tie on BM25 and on cosine (exactly 1.0). They
+    arrive in DESCENDING id order over several partitions, each holding
+    more ties than either local cut keeps (BM25 top-50, cosine top-3):
+    every partition must keep its smallest ids, or the global merge
+    returns larger ones. The hybrid hits are decided by the BM25 cut
+    (every page is a kNN member), the knn hits by the cosine cut."""
+    n = 600
+    ids = [f"doc{i:04d}" for i in reversed(range(n))]
+    # a parallelized list keeps its order inside each slice
+    side = spark.createDataFrame(
+        [(d, [1.0, 0.0, 0.0], ["alpha", "beta", "gamma"], "x") for d in ids],
+        "id string, embeddings array<float>, terms array<string>, lv1_cat string",
+    )
+    sizes = side.groupBy(F.spark_partition_id()).count().collect()
+    assert len(sizes) >= 2 and max(r["count"] for r in sizes) > 50
+    idf = {t: BM25.idf(n, n) for t in ("alpha", "gamma")}
+    for mode in ("hybrid", "bm25", "knn"):
+        hits = HY.fused_topk(side, [2.0, 0.0, 0.0], idf, 3.0, 3, 50, mode=mode)
+        assert [d for d, _ in hits] == sorted(ids)[:3], mode
+        assert len({s for _, s in hits}) == 1, mode
 
 
 def test_fuse_rrf(spark):

@@ -68,6 +68,29 @@ def test_tokenize_and_shingles_edges(spark):
     assert sh[1] == [] and sh[2] == []  # < k tokens → empty
 
 
+def test_query_tokenizer_matches_jvm_tokenize(spark):
+    """tokenize_text (Python str.lower) must split exactly like the JVM
+    tokenize (Java toLowerCase): a default-locale change on the JVM (the
+    Turkish dotted/dotless i) would make query terms miss the index."""
+    texts = [
+        "Hello, World 42!",
+        "İSTANBUL ıstanbul Iİ",
+        "Straße STRASSE ß",
+        "\u212aelvin \u212a 273\u212a",  # the Kelvin sign lowers to ASCII k
+        "ǅemal Ǆ ǆ",
+        "ＦＵＬＬ width Ａ１",
+        "ﬁle ﬂow ﬁ",
+        "Café ÉCOLE naïve Ñandú",
+        "ÀÉÎÕÜ àéîõü",
+        "ΣΊΣΥΦΟΣ Ωmega",
+        "mIxEd-CaSe_with.dots",
+        "",
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["i", "s"])
+    jvm = {r["i"]: r["t"] for r in df.select("i", TX.tokenize(F.col("s")).alias("t")).collect()}
+    assert [jvm[i] for i in range(len(texts))] == [TX.tokenize_text(t) for t in texts]
+
+
 def test_cosine_dot_vs_numpy(spark):
     import numpy as np
 

@@ -195,6 +195,9 @@ def _pipeline_build_index_then_delete(spark, tmp):
         idx = p._bm25
         for pinned in (p._search_side, idx.postings, idx.doc_lens, idx.term_df, idx.stats):
             assert pinned.count() > 0
+        # search pins nothing: its scoring job and its fetch read the pins
+        for mode in ("hybrid", "bm25", "knn", "rerank"):
+            assert p.search("alpha gamma", size=2, mode=mode).collect(), mode
         p.delete_by_ids([victim])
 
     return run

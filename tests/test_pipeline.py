@@ -8,7 +8,10 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from auto_vectordb_spark.pipeline import PAGE_CHARS, VectorPipeline, text_page_parser
+from auto_vectordb_spark.operators import bm25 as BM25
+from auto_vectordb_spark.operators import hybrid as HY
+from auto_vectordb_spark.operators import knn as KNN
+from auto_vectordb_spark.pipeline import PAGE_CHARS, TERMS, VectorPipeline, text_page_parser
 
 
 @pytest.fixture(scope="module")
@@ -273,6 +276,61 @@ def test_search_matches_driver_reference(malformed_store, text, categories):
     for d, _ in got:
         if d in bad:
             assert terms & set(_tokens(by_id[d]["page_content"]))
+
+
+def _composed_hits(p, text, size, mode, categories, min_score):
+    """The search as a composition of the library's DataFrame operators:
+    fuse_weighted over BM25.search ⋉ scope and cosine_scores_blas."""
+    side = p._search_side.drop(TERMS)
+    if categories is not None:
+        side = side.filter(F.col("lv1_cat").isin(categories))
+    queries = p.spark.createDataFrame([(0, text)], ["query_id", "query_text"])
+    bm25 = BM25.search(p._bm25, queries, k=max(10 * size, 50)).join(
+        side.select(F.col("id").alias("doc_id")), "doc_id", "left_semi"
+    )
+    knn = KNN.cosine_scores_blas(
+        side.select(F.col("id").alias("doc_id"), "embeddings"),
+        np.zeros(1, dtype=np.int64),
+        np.asarray(p.embed_texts([text]), dtype=np.float64),
+        corpus_id="doc_id",
+        corpus_vec="embeddings",
+    )
+    legs = {"hybrid": (bm25, knn), "bm25": (bm25, knn.limit(0)), "knn": (bm25.limit(0), knn)}
+    fused = HY.fuse_weighted(*legs[mode], min_score=min_score, k=size)
+    rows = fused.orderBy(F.col("score").desc(), F.col("doc_id").asc()).collect()
+    return [(r["doc_id"], r["score"]) for r in rows]
+
+
+@pytest.mark.parametrize("min_score", [0.0, -1.0])
+@pytest.mark.parametrize("categories", [None, ["food"]])
+@pytest.mark.parametrize("mode", ["hybrid", "bm25", "knn"])
+def test_fused_search_matches_composed_operators(malformed_store, mode, categories, min_score):
+    p, _, _ = malformed_store
+    text = "whisk bread"  # matches both pages without a usable vector
+    got = [
+        (r["id"], r["score"])
+        for r in p.search(
+            text, size=3, mode=mode, categories=categories, min_score=min_score
+        ).collect()
+    ]
+    want = _composed_hits(p, text, 3, mode, categories, min_score)
+    assert got and [d for d, _ in got] == [d for d, _ in want]
+    for (_, gs), (_, ws) in zip(got, want):
+        assert abs(gs - ws) <= 1e-9 * max(1.0, abs(ws))
+
+
+def test_search_result_columns_match_the_corpus(malformed_store):
+    """Every mode, and both empty-result paths, return ``score`` plus the
+    corpus columns: the search side's internal term column never leaks."""
+    p, _, _ = malformed_store
+    want = ["score", *p.corpus().columns]
+    for mode in ("hybrid", "bm25", "knn", "rerank"):
+        assert p.search("bread flour", size=2, mode=mode).columns == want, mode
+    empty = p.search("bread", min_score=1e9)
+    assert empty.columns == want and empty.count() == 0
+    oov = p.search("zyzzyva quux", mode="bm25")
+    assert oov.columns == want and oov.count() == 0
+    assert dict(empty.dtypes)["score"] == "double"
 
 
 def test_delete_rebuilds_index_from_current_corpus(spark, tmp_path):
