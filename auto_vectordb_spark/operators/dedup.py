@@ -109,10 +109,11 @@ def doc_shingle_hashes(
     sampling noise (gated in tests/test_dedup.py).
     """
     def h(c):
-        # universal_hash's (a*(h%P)+b)%P needs a non-negative input to stay
-        # in [0, P) on Spark's sign-preserving %. Mask the sign bit rather
-        # than abs(): abs(Long.MIN_VALUE) is still negative in two's
-        # complement, and abs folds ±x into one value, doubling collisions.
+        # (a*(h%P)+b)%P needs a non-negative input: Spark's % keeps the
+        # sign and NumPy's (the MinHash fold) floors, so only h >= 0 gives
+        # one value in [0, P) on both. Mask the sign bit rather than abs():
+        # abs(Long.MIN_VALUE) is still negative in two's complement, and
+        # abs folds ±x into one value, doubling collisions.
         return (
             H.fast_hash64(c).bitwiseAND(F.lit(0x7FFFFFFFFFFFFFFF))
             if fast
@@ -135,29 +136,66 @@ def minhash_signatures(
     shingle_k: int = 3,
     fast: bool = False,
 ) -> DataFrame:
-    """(doc_id, mh_0..mh_{H-1}) — MinHash signature, one shuffle total.
+    """(doc_id, mh_0..mh_{H-1}) — MinHash signature, one shuffle of one
+    partial row per doc.
 
-    Explode distinct shingles, hash once, then ``repartition(doc_id)``
-    BEFORE the groupBy. The explicit repartition does double duty:
+    The JVM emits the (doc_id, sh) stream of :func:`doc_shingle_hashes`
+    (md5-60, or xxhash64 with ``fast=True``); a ``mapInArrow`` fold then
+    reduces each Arrow batch on its own:
 
-    - it is the exact hash partitioning the aggregation needs, so
-      EnsureRequirements adds no second exchange — still one shuffle;
-    - it is an optimization barrier: without it Catalyst collapses the
-      md5→60-bit projection into all H min-aggregate expressions, so the
-      expensive hash is evaluated H× per shingle (measured 11× slower).
+    - sort the batch by doc_id (dictionary codes, so any id type and one
+      NULL key work alike) and compute ``(a·(h mod P)+b) mod P`` for all H
+      universal hashes as one (rows, H) int64 matrix — a, b < 2^30 and
+      h mod P < P ≈ 2^32, so every term stays below 2^63 and the result is
+      exactly :func:`hashing.universal_hash`;
+    - ``np.minimum.reduceat`` over each doc's run emits one partial row
+      per doc per batch.
 
-    (A zero-shuffle all-array formulation — aggregate/zip_with folding per
-    row — was tried and measured ~4× slower: Spark's higher-order array
-    lambdas evaluate interpreted, per element.)
+    ``groupBy(doc_id).min`` merges the partials. ``min`` is associative, so
+    a doc whose shingles straddle batches, or whose id repeats across input
+    rows, gets the signature of the whole shingle multiset — identical to
+    the per-shingle aggregate form and the DuckDB ``GROUP BY`` (a NULL
+    doc_id keeps its one NULL-key row; a doc with no shingle has no row).
+    The partial aggregate runs below the one doc_id exchange, so the
+    shuffle carries H+1 longs per doc per map partition instead of every
+    shingle hash, and the md5 projection stays below it, evaluated once.
+
+    Measured dead ends (don't retry): H ``min(universal_hash(sh))``
+    aggregates over the exploded stream shuffle every shingle and need a
+    repartition barrier to keep Catalyst from inlining md5 into all H
+    aggregates (11× slower without it); a zero-shuffle all-array form
+    (aggregate/zip_with per row) measured ~4× slower, since Spark's
+    higher-order array lambdas evaluate interpreted, per element.
     """
-    sh = doc_shingle_hashes(docs, id_col, text_col, shingle_k, fast=fast).repartition(
-        F.col("doc_id")
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    sh = doc_shingle_hashes(docs, id_col, text_col, shingle_k, fast=fast)
+    names = [f"mh_{j}" for j in range(num_hashes)]
+    a, b = np.array(H.minhash_params(num_hashes), dtype=np.int64).T
+    prime = H.MINHASH_PRIME
+    id_type = sh.schema["doc_id"].dataType.simpleString()
+
+    def fold(batches):
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            codes = pc.dictionary_encode(batch.column("doc_id"), null_encoding="encode")
+            code = codes.indices.to_numpy()
+            order = np.argsort(code, kind="stable")
+            run = code[order]
+            starts = np.flatnonzero(np.r_[True, run[1:] != run[:-1]])
+            h = batch.column("sh").to_numpy()[order] % prime
+            sig = np.minimum.reduceat((h[:, None] * a + b) % prime, starts, axis=0)
+            cols = [codes.dictionary.take(pa.array(run[starts]))]
+            cols += [pa.array(c) for c in sig.T]
+            yield pa.RecordBatch.from_arrays(cols, names=["doc_id", *names])
+
+    partial = sh.mapInArrow(
+        fold, schema=f"doc_id {id_type}, " + ", ".join(f"{n} long" for n in names)
     )
-    aggs = [
-        F.min(H.universal_hash(F.col("sh"), a, b)).alias(f"mh_{j}")
-        for j, (a, b) in enumerate(H.minhash_params(num_hashes))
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    return partial.groupBy("doc_id").agg(*[F.min(n).alias(n) for n in names])
 
 
 def minhash_bucket_table(
@@ -952,16 +990,24 @@ def embedding_neardup_pairs_blas_bucketed(
        (table, bucket) cells — a matmul against the tiny broadcast plane
        matrix — carrying the vector along (shuffle volume = T × corpus,
        the honest cost of multi-table LSH grouping);
-    2. ``groupBy(tbl, bucket).applyInArrow`` runs the exact BLAS all-pairs
-       kernel within each cell (bucket size is the ``bits_per_table`` knob:
-       b bits → 2^b buckets/table; raise b to shrink task memory);
+    2. ``repartition(tbl, bucket).sortWithinPartitions(tbl, bucket)``
+       lays each cell out as one contiguous run, and ONE ``mapInArrow``
+       call per partition walks the sorted stream: every batch is decoded
+       and row-normalized once, each complete cell of ≥ 2 rows gets the
+       exact all-pairs ``Mn @ Mn.T``, and the last cell of a batch is
+       carried into the next one, since it may continue there. A task
+       holds at most one cell plus one Arrow batch — the memory bound of a
+       per-cell ``applyInArrow``, without one Python call per cell (the
+       cell size is the ``bits_per_table`` knob: b bits → 2^b
+       buckets/table; raise b to shrink task memory);
     3. pairs colliding in several tables are merged with ``max(cosine)``
        (BLAS reduction order may differ at last ulp between cells).
 
     Recall vs the exact kernel ≥ ``recall_target`` by the table-count bound
     (see :func:`_auto_num_tables`); precision is exact: every emitted pair's
     cosine was computed from the full vectors and thresholded. Gated in
-    tests/test_dedup.py.
+    tests/test_dedup.py, which also pins the streaming kernel to a
+    per-cell ``applyInArrow`` twin.
     """
     import numpy as np
     import pyarrow as pa
@@ -971,25 +1017,52 @@ def embedding_neardup_pairs_blas_bucketed(
     assigned = _sign_lsh_cells(
         vectors, id_col, vec_col, num_tables, bits_per_table, seed, carry_vec=True
     )
+    out_schema = "id_a long, id_b long, cosine double"
     if assigned is None:
-        return vectors.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cosine double"
-        )
+        return vectors.sparkSession.createDataFrame([], out_schema)
 
-    def kernel(table):
-        # every vector passed the assign pass's decode: the mask keeps all
-        mask, M = CV.decode(table.column("vec"))
-        ids = table.column("vid").to_numpy()[mask]
-        Mn = M / V.safe_row_norms(M)
-        S = Mn @ Mn.T
-        i, j = np.nonzero(S >= threshold)
-        keep = ids[i] < ids[j]
-        return pa.table(
-            {"id_a": ids[i][keep], "id_b": ids[j][keep], "cosine": S[i, j][keep]}
-        )
+    arrow_schema = pa.schema(
+        [("id_a", pa.int64()), ("id_b", pa.int64()), ("cosine", pa.float64())]
+    )
 
-    per_cell = assigned.groupBy("tbl", "bucket").applyInArrow(
-        kernel, schema="id_a long, id_b long, cosine double"
+    def pairs(cells):
+        # exact all-pairs per cell; a 1-row cell has no pair
+        out = []
+        for ids, Mn in cells:
+            if len(ids) > 1:
+                S = Mn @ Mn.T
+                i, j = np.nonzero(S >= threshold)
+                keep = ids[i] < ids[j]
+                out.append((ids[i][keep], ids[j][keep], S[i, j][keep]))
+        cols = [np.concatenate(c) for c in zip(*out)] if out else [[], [], []]
+        return pa.record_batch(cols, schema=arrow_schema)
+
+    def kernel(batches):
+        # (cell key, ids, normalized rows) of the cell that ended the
+        # previous batch and may continue in this one
+        key = ids = Mn = None
+        for batch in batches:
+            # every vector passed the assign pass's decode: the mask keeps all
+            mask, M = CV.decode(batch.column("vec"))
+            if M is None:
+                continue
+            k = batch.column("tbl").to_numpy().astype(np.int64) << bits_per_table
+            k = (k | batch.column("bucket").to_numpy())[mask]
+            v = batch.column("vid").to_numpy()[mask]
+            Mb = M / V.safe_row_norms(M)
+            if key is not None:
+                k, v, Mb = np.r_[key, k], np.r_[ids, v], np.vstack([Mn, Mb])
+            bounds = np.r_[np.flatnonzero(np.r_[True, k[1:] != k[:-1]]), len(k)]
+            last = bounds[-2]
+            key, ids, Mn = k[last:], v[last:], Mb[last:]
+            yield pairs((v[s:e], Mb[s:e]) for s, e in zip(bounds[:-2], bounds[1:-1]))
+        if key is not None:
+            yield pairs([(ids, Mn)])
+
+    per_cell = (
+        assigned.repartition("tbl", "bucket")
+        .sortWithinPartitions("tbl", "bucket")
+        .mapInArrow(kernel, schema=out_schema)
     )
     return per_cell.groupBy("id_a", "id_b").agg(F.max("cosine").alias("cosine"))
 
@@ -1087,8 +1160,13 @@ def connected_components(
     diameter) rounds, ``localCheckpoint`` truncating lineage. Both paths
     produce identical min-id labels. (This is the sanctioned use of
     collect: a size-gated final-stage fold over an already-reduced
-    result, not a driver loop over corpus data.)
+    result, not a driver loop over corpus data.) The driver path returns
+    its labels as an Arrow-backed ``LocalRelation`` of known size, so a
+    join against it (:func:`apply_dedup`'s anti-join) broadcasts it
+    rather than shuffling the other side.
     """
+    import pyarrow as pa
+
     # ONE guarded collect decides the path AND feeds the fast one — a
     # count() probe would recompute the (expensive, uncached) pair
     # lineage twice; limit(T+1) caps driver memory identically.
@@ -1112,9 +1190,16 @@ def connected_components(
             ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
-        out = [(n, find(n)) for n in parent]
-        spark = pairs.sparkSession
-        return spark.createDataFrame(out, "doc_id long, component_id long")
+        # a Python list would scan as an RDD of unknown size, which no
+        # join broadcasts
+        return pairs.sparkSession.createDataFrame(
+            pa.table(
+                {
+                    "doc_id": pa.array(list(parent), pa.int64()),
+                    "component_id": pa.array([find(n) for n in parent], pa.int64()),
+                }
+            )
+        )
     with materialize(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionAll(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
@@ -1155,7 +1240,12 @@ def apply_dedup(
 ) -> DataFrame:
     """Drop every doc that is in a near-dup component but not its keeper
     (min id). The end-to-end 'dedup the corpus' operation: pairs →
-    components → anti-join. Docs in no pair survive untouched."""
+    components → anti-join. Docs in no pair survive untouched.
+
+    On the driver path of :func:`connected_components` the losers are a
+    small ``LocalRelation``, so the anti-join is a ``BroadcastHashJoin``
+    and the docs (text included) are never shuffled; the output keeps the
+    docs' own partitioning."""
     comps = connected_components(pairs)
     losers = comps.filter(F.col("doc_id") != F.col("component_id")).select("doc_id")
     return docs.join(

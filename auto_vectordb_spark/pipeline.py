@@ -584,13 +584,14 @@ def build_training_set(
     documented shuffle budgets; stage 3 adds one hash shuffle on the bucket
     key plus a 256-row broadcast.
 
-    Measured dead-end (don't retry): fanning the 1-partition survivors
-    join output before quality_score/persist (dedup.fan_out_small_scan)
-    is a wash — min-of-4 2.90 s as-is vs 3.01 s fanned for the
-    front+persist segment at sf0.1/local[32]. The minhash front end
-    inside the join lineage dominates and is already fanned; the
-    single-core quality pass over the narrow survivor set costs less
-    than the extra exchange.
+    Measured dead-end, now moot: fanning the survivors join output before
+    quality_score/persist (dedup.fan_out_small_scan) was a wash — min-of-4
+    2.90 s as-is vs 3.01 s fanned for the front+persist segment at
+    sf0.1/local[32] — while the anti-join was a sort-merge join whose
+    output AQE coalesced to one partition. The anti-join now broadcasts
+    the driver-side losers table (dedup.apply_dedup), so the survivors
+    keep the docs' own scan partitioning and there is no single-partition
+    output left to fan.
     """
     from pyspark.sql.window import Window
 

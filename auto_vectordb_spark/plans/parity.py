@@ -1294,8 +1294,9 @@ def knn_blas_topk(spark, sf):
     "dedup_embedding_blas",
     None,
     doc="Embedding near-dup pairs via the bucket-composed BLAS kernel: "
-    "sign-LSH bucket assignment -> per-bucket all-pairs matmul "
-    "(applyInPandas) -> max-merge across tables. Never collects the corpus "
+    "sign-LSH bucket assignment -> per-bucket all-pairs matmul (one "
+    "mapInArrow walk over (tbl, bucket)-sorted partitions) -> max-merge "
+    "across tables. Never collects the corpus "
     "(the whole-corpus kernel is size-guarded and bucket-scoped only). "
     "GENUINELY rows-only: sign-LSH recall is probabilistic — measured "
     "961/990 pairs (0.971) on the sf0.01 fixtures at threshold=0.3, "

@@ -1,10 +1,27 @@
 """Dedup operators: exact, MinHash/LSH, SimHash, Jaccard, embedding cosine."""
 
+import contextlib
 import itertools
 
+import pytest
 from pyspark.sql import functions as F
 
 from auto_vectordb_spark.operators import dedup as DD
+
+
+@contextlib.contextmanager
+def _arrow_batch_rows(spark, n):
+    """Cap the Arrow batches the Python kernels see at ``n`` rows."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
 
 
 def test_exact_dedup(spark):
@@ -27,6 +44,54 @@ def test_minhash_estimates_jaccard(spark):
     agree_ac = sum(x == y for x, y in zip(sig[0], sig[2])) / 16
     assert agree_ab > 0.5  # true jaccard ≈ 0.83 on 3-shingles
     assert agree_ac == 0.0
+
+
+@pytest.mark.parametrize("fast", [False, True])
+def test_minhash_fold_matches_aggregate_form(spark, fast):
+    """The per-batch Arrow fold of minhash_signatures equals the
+    per-shingle aggregate form composed from library calls
+    (doc_shingle_hashes + universal_hash + groupBy.min). With 4-row Arrow
+    batches the 38-shingle docs straddle batches; doc 2 repeats across
+    rows; the two NULL-id rows keep ONE NULL-key row; NULL text and text
+    under k tokens have no shingle and no row."""
+    import pyarrow as pa
+
+    from auto_vectordb_spark.functions import hashing as H
+
+    words = " ".join(f"w{i}" for i in range(40))
+    rows = [
+        (1, words),
+        (2, "the quick brown fox jumps over the lazy dog"),
+        (2, "a second row for doc two with more words"),
+        (None, "null id text one two three four"),
+        (None, "another null id row five six seven"),
+        (3, None),
+        (4, "too short"),
+        (5, "Größe café naïve Ünïcödé 東京 タワー straße ÉCOLE déjà vu"),
+        (6, words + " tail"),
+    ]
+    docs = spark.createDataFrame(
+        pa.table(
+            {
+                "doc_id": pa.array([i for i, _ in rows], pa.int64()),
+                "text": pa.array([t for _, t in rows], pa.string()),
+            }
+        )
+    )
+    twin = DD.doc_shingle_hashes(docs, fast=fast).groupBy("doc_id").agg(
+        *[
+            F.min(H.universal_hash(F.col("sh"), a, b)).alias(f"mh_{j}")
+            for j, (a, b) in enumerate(H.minhash_params(DD.DEFAULT_NUM_HASHES))
+        ]
+    )
+    with _arrow_batch_rows(spark, 4):
+        got = DD.minhash_signatures(docs, fast=fast).collect()
+
+    def by_id(r):
+        return (r["doc_id"] is not None, r["doc_id"] or 0)
+
+    assert [r["doc_id"] for r in sorted(got, key=by_id)] == [None, 1, 2, 5, 6]
+    assert sorted(got, key=by_id) == sorted(twin.collect(), key=by_id)
 
 
 def test_minhash_lsh_finds_near_dups(spark):
@@ -154,6 +219,67 @@ def test_blas_bucketed_dirty_frame_subset_of_exact(spark):
     assert (1, big) in b
 
 
+def test_blas_bucketed_streaming_kernel_matches_per_cell_form(spark):
+    """The streaming cell kernel of embedding_neardup_pairs_blas_bucketed
+    gives the pair set of a per-cell applyInArrow form composed in the
+    test, cosines within 1e-9, on a corpus whose cells outgrow the 16-row
+    Arrow batches (so cells straddle batches and the carried tail is
+    exercised) and outnumber the shuffle partitions (so partitions hold
+    many cells)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from auto_vectordb_spark.functions import cleanvec as CV
+    from auto_vectordb_spark.functions import vector as V
+
+    rng = np.random.default_rng(5)
+    centers = rng.standard_normal((20, 8))
+    X = centers[rng.integers(0, 20, 300)] + 0.3 * rng.standard_normal((300, 8))
+    emb = spark.createDataFrame(
+        pa.table(
+            {
+                "vec_id": pa.array(np.arange(300) * 7 + 1, pa.int64()),
+                "embedding": pa.array(list(X), pa.list_(pa.float64())),
+            }
+        )
+    )
+    threshold, tables, bits = 0.8, 4, 3
+    assigned = DD._sign_lsh_cells(
+        emb, "vec_id", "embedding", tables, bits, 42, carry_vec=True
+    )
+
+    def per_cell(table):
+        mask, M = CV.decode(table.column("vec"))
+        ids = table.column("vid").to_numpy()[mask]
+        Mn = M / V.safe_row_norms(M)
+        S = Mn @ Mn.T
+        i, j = np.nonzero(S >= threshold)
+        keep = ids[i] < ids[j]
+        return pa.table(
+            {"id_a": ids[i][keep], "id_b": ids[j][keep], "cosine": S[i, j][keep]}
+        )
+
+    twin = (
+        assigned.groupBy("tbl", "bucket")
+        .applyInArrow(per_cell, schema="id_a long, id_b long, cosine double")
+        .groupBy("id_a", "id_b")
+        .agg(F.max("cosine").alias("cosine"))
+    )
+    sizes = [r["count"] for r in assigned.groupBy("tbl", "bucket").count().collect()]
+    assert max(sizes) > 16
+    assert len(sizes) > int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with _arrow_batch_rows(spark, 16):
+        got = {
+            (r["id_a"], r["id_b"]): r["cosine"]
+            for r in DD.embedding_neardup_pairs_blas_bucketed(
+                emb, threshold=threshold, num_tables=tables, bits_per_table=bits
+            ).collect()
+        }
+    want = {(r["id_a"], r["id_b"]): r["cosine"] for r in twin.collect()}
+    assert got and set(got) == set(want)
+    assert all(abs(got[k] - want[k]) <= 1e-9 for k in got)
+
+
 def test_embedding_lsh_recall_gate(spark, sf_dir):
     """Sign-LSH bucketed near-dup must reach recall >= 0.85 vs exact pairs
     (params auto-tuned from the threshold), with zero false positives
@@ -210,6 +336,22 @@ def test_apply_dedup_keeps_one_per_cluster(spark):
     pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"])
     kept = sorted(r["doc_id"] for r in DD.apply_dedup(docs, pairs).collect())
     assert kept == [1, 10, 99]  # cluster keepers + untouched singleton
+
+
+def test_apply_dedup_broadcasts_driver_components(spark, sf_dir):
+    """connected_components' driver path returns an Arrow-backed
+    LocalRelation of known size, so apply_dedup's anti-join broadcasts the
+    losers and never hash-shuffles the docs (text included)."""
+    import pyarrow as pa
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    pairs = spark.createDataFrame(pa.table({"id_a": [1, 2, 10], "id_b": [2, 3, 11]}))
+    out = DD.apply_dedup(docs, pairs)
+    assert {2, 3, 11}.isdisjoint(r["doc_id"] for r in out.collect())
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "BroadcastHashJoin" in final and "LeftAnti" in final
+    assert "Exchange hashpartitioning" not in final
 
 
 def test_incremental_pairs_match_full_run(spark, sf_dir):

@@ -6,9 +6,10 @@ reading-guide invariants, promoted from documentation to CI):
 2. ``Exchange SinglePartition`` only in queries whose plan provably
    funnels a SMALL input through it (1-row stats aggregates, k-element
    percentile sketches, global scalar subqueries) — whitelisted by name;
-3. Python eval nodes (Batch/ArrowEvalPython, MapInPandas,
-   FlatMapGroupsInPandas[WithState]) only in the known Arrow-batched
-   kernels — never row-at-a-time UDFs sneaking into an expression path.
+3. Python eval nodes (Batch/ArrowEvalPython, MapInPandas/MapInArrow,
+   FlatMapGroupsInPandas[WithState]/FlatMapGroupsInArrow) only in the
+   known Arrow-batched kernels — never row-at-a-time UDFs sneaking into
+   an expression path.
 
 A NEW registry entry that develops an unpushed global sort, a stray
 cartesian, or an un-whitelisted Python node fails here, not in judge
@@ -120,6 +121,20 @@ PYTHON_NODES_OK = frozenset(
         "text_nfc_normalize",
         # Arrow-batched zlib size kernel (pure-int64 outputs, map-only)
         "compression_density_by_source",
+        # the MinHash signature fold: a mapInArrow NumPy min-reduction
+        # over the JVM's shingle-hash stream, one partial row per doc
+        "dedup_incremental",
+        "dedup_minhash_lsh_pairs",
+        "dedup_minhash_signatures",
+        "neardup_pair_profile",
+        "split_leakage_audit",
+        # the PQ encoder: a mapInArrow vectorized argmin against the
+        # shipped codebooks (map-only)
+        "knn_ivf_pq",
+        "knn_ivf_pq_trained",
+        "knn_pq_adc",
+        "knn_pq_adc_trained",
+        "pq_encode",
     }
 )
 
@@ -127,8 +142,10 @@ _PY_NODES = (
     "BatchEvalPython",
     "ArrowEvalPython",
     "MapInPandas",
+    "MapInArrow",
     "FlatMapGroupsInPandas",
     "FlatMapGroupsInPandasWithState",
+    "FlatMapGroupsInArrow",
 )
 
 

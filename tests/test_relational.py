@@ -107,12 +107,13 @@ def test_window_running_revenue_single_shuffle(spark, sf_dir):
 
 
 def test_minhash_signatures_single_shuffle(spark, sf_dir):
-    """The explicit repartition(doc_id) must be the only KEYED exchange: it
-    doubles as the groupBy's required partitioning (no second hash shuffle)
-    and as the barrier keeping md5 out of the H min-aggregates. One
-    round-robin fan-out of the under-parallelized fixture scan
-    (dedup.fan_out_small_scan) is allowed below it — and is absent when the
-    scan already parallelizes."""
+    """The groupBy's doc_id exchange must be the only KEYED exchange, with
+    the md5 projection and the per-batch Arrow fold (MapInArrow) below
+    it: md5 runs once per shingle and the shuffle carries one partial
+    signature row per doc per map partition. One round-robin fan-out of
+    the under-parallelized fixture scan (dedup.fan_out_small_scan) is
+    allowed below it — and is absent when the scan already
+    parallelizes."""
     from auto_vectordb_spark.operators import dedup as DD
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -126,6 +127,7 @@ def test_minhash_signatures_single_shuffle(spark, sf_dir):
     # inside the aggregates
     below_exchange = plan.split("Exchange hashpartitioning(doc_id")[1]
     assert "md5" in below_exchange
+    assert "MapInArrow" in below_exchange
     # a pre-parallelized input gets NO fan-out exchange; repartition to the
     # session's own parallelism so fan_out_small_scan's threshold (a
     # defaultParallelism multiple) is met on any host core count
