@@ -20,7 +20,8 @@ Five tiers, cheap → thorough, all shuffle-disciplined:
    index (explode distinct shingles, equi-join on shingle, count
    intersections — never a crossJoin).
 5. :func:`embedding_neardup_pairs` — cosine near-dup over embeddings; exact
-   all-pairs for oracle-checkable sizes, LSH-bucketed at scale.
+   all-pairs for oracle-checkable sizes, sign-LSH-bucketed BLAS at scale
+   (:func:`embedding_neardup_pairs_blas_bucketed`).
 
 All hash math uses functions/hashing.py portable primitives so every operator
 here has a DuckDB oracle twin (plans/parity.py).
@@ -909,14 +910,13 @@ def _sign_lsh_cells(
     num_tables: int,
     bits_per_table: int,
     seed: int,
-    carry_vec: bool,
 ) -> DataFrame | None:
-    """(vid, tbl, bucket[, vec]): each valid vector's sign-LSH bucket in
+    """(vid, tbl, bucket, vec): each valid vector's sign-LSH bucket in
     each of ``num_tables`` tables, from one ``mapInArrow`` scan — a matmul
     against the tiny plane matrix (T·B × d, seeded by ``seed``, riding the
     kernel closure; see embedding_neardup_pairs_blas for the
-    broadcast-lifecycle note). ``carry_vec`` re-emits the vector column
-    with ``pc.take`` for a per-cell kernel. ``None`` on an empty or
+    broadcast-lifecycle note) — with the vector column re-emitted by
+    ``pc.take`` for the per-cell kernel. ``None`` on an empty or
     all-invalid corpus: the modal-dim probe over a bounded valid-row
     sample finds no dimensionality to draw planes for, and a ragged
     minority row can't hijack it."""
@@ -930,9 +930,8 @@ def _sign_lsh_cells(
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((num_tables * bits_per_table, dim))
     weights = np.power(2, np.arange(bits_per_table), dtype=np.int64)
-    schema = "vid long, tbl int, bucket long"
-    if carry_vec:
-        schema += f", vec {vectors.schema[vec_col].dataType.simpleString()}"
+    vec_type = vectors.schema[vec_col].dataType.simpleString()
+    schema = f"vid long, tbl int, bucket long, vec {vec_type}"
 
     def assign(batches):
         P = planes
@@ -950,15 +949,14 @@ def _sign_lsh_cells(
             )  # (rows, T)
             vids = batch.column(id_col).to_numpy()[rows].astype(np.int64)
             # table-major: row r of table t sits at t*n + r
-            cols = [
-                pa.array(np.tile(vids, num_tables)),
-                pa.array(np.repeat(np.arange(num_tables, dtype=np.int32), n)),
-                pa.array(buckets.T.ravel()),
-            ]
-            if carry_vec:
-                cols.append(pc.take(vec, pa.array(np.tile(rows, num_tables))))
             yield pa.RecordBatch.from_arrays(
-                cols, names=["vid", "tbl", "bucket", "vec"][: len(cols)]
+                [
+                    pa.array(np.tile(vids, num_tables)),
+                    pa.array(np.repeat(np.arange(num_tables, dtype=np.int32), n)),
+                    pa.array(buckets.T.ravel()),
+                    pc.take(vec, pa.array(np.tile(rows, num_tables))),
+                ],
+                names=["vid", "tbl", "bucket", "vec"],
             )
 
     # The JVM-side NULL-id filter is the only place NULL ids drop: the
@@ -1003,20 +1001,27 @@ def embedding_neardup_pairs_blas_bucketed(
     3. pairs colliding in several tables are merged with ``max(cosine)``
        (BLAS reduction order may differ at last ulp between cells).
 
+    The cells are random-hyperplane (SimHash-for-vectors) LSH: two
+    vectors at angle θ agree on one bit with probability 1 − θ/π, so a
+    near-dup pair shares a cell in ≥ 1 table with high probability.
     Recall vs the exact kernel ≥ ``recall_target`` by the table-count bound
-    (see :func:`_auto_num_tables`); precision is exact: every emitted pair's
-    cosine was computed from the full vectors and thresholded. Gated in
-    tests/test_dedup.py, which also pins the streaming kernel to a
-    per-cell ``applyInArrow`` twin.
+    (``num_tables`` defaults to :func:`_auto_num_tables`); precision is
+    exact: every emitted pair's cosine was computed from the full vectors
+    and thresholded. For loose thresholds (< ~0.7) lower
+    ``bits_per_table`` (p^b collapses), e.g. b=3; the default b=8 targets
+    real near-dup thresholds (≥ 0.9). Gated in tests/test_dedup.py, which
+    also pins the streaming kernel to a per-cell ``applyInArrow`` twin.
+
+    A future perf idea, measured by no workload yet: shuffle only the
+    (vid, tbl, bucket) keys and join the vectors once per cell partition,
+    instead of shuffling T copies of every vector.
     """
     import numpy as np
     import pyarrow as pa
 
     if num_tables is None:
         num_tables = _auto_num_tables(threshold, bits_per_table, recall_target)
-    assigned = _sign_lsh_cells(
-        vectors, id_col, vec_col, num_tables, bits_per_table, seed, carry_vec=True
-    )
+    assigned = _sign_lsh_cells(vectors, id_col, vec_col, num_tables, bits_per_table, seed)
     out_schema = "id_a long, id_b long, cosine double"
     if assigned is None:
         return vectors.sparkSession.createDataFrame([], out_schema)
@@ -1065,78 +1070,6 @@ def embedding_neardup_pairs_blas_bucketed(
         .mapInArrow(kernel, schema=out_schema)
     )
     return per_cell.groupBy("id_a", "id_b").agg(F.max("cosine").alias("cosine"))
-
-
-def embedding_neardup_lsh(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    num_tables: int | None = None,
-    bits_per_table: int = 8,
-    recall_target: float = 0.95,
-    seed: int = 42,
-) -> DataFrame:
-    """Scale path for :func:`embedding_neardup_pairs`: sign-LSH bucketing,
-    exact cosine only within buckets.
-
-    Random-hyperplane (SimHash-for-vectors) LSH: ``num_tables`` independent
-    tables of ``bits_per_table`` hyperplanes each (fixed ``seed`` →
-    deterministic). A vector's bucket in table t is the sign-bit pattern of
-    its ``bits_per_table`` projections. Two vectors at cosine angle θ agree
-    on one bit with prob 1−θ/π, so near-dup pairs collide in ≥1 table with
-    high probability while the corpus never meets itself outside buckets:
-    the plan is bucket-assign (one mapInArrow scan, matmul with the tiny
-    plane matrix) → explode tables → equi-join on (table, bucket) →
-    distinct candidate pairs → exact cosine ≥ threshold.
-
-    Recall vs the exact kernel is gated in tests/test_dedup.py.
-    ``num_tables`` defaults to the smallest T with
-    1-(1-p^b)^T >= recall_target at the threshold boundary, where
-    p = 1 - acos(threshold)/pi — the ES ``num_candidates``-style knob.
-    For loose thresholds (< ~0.7) lower ``bits_per_table`` (p^b collapses),
-    e.g. b=3; the default b=8 targets real near-dup thresholds (>= 0.9).
-    """
-    if num_tables is None:
-        num_tables = _auto_num_tables(threshold, bits_per_table, recall_target)
-    assigned = _sign_lsh_cells(
-        vectors, id_col, vec_col, num_tables, bits_per_table, seed, carry_vec=False
-    )
-    if assigned is None:
-        return vectors.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cosine double"
-        )
-    a, b = assigned.alias("a"), assigned.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        )
-        .select(F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"))
-        .distinct()
-    )
-    prepped = vectors.select(
-        F.col(id_col).alias("vid"),
-        V.as_double_array(F.col(vec_col)).alias("v"),
-        V.norm(F.col(vec_col)).alias("nrm"),
-    )
-    pa_ = prepped.select(
-        F.col("vid").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    pb_ = prepped.select(
-        F.col("vid").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    scored = (
-        cand.join(pa_, "id_a")
-        .join(pb_, "id_b")
-        .withColumn(
-            "cosine",
-            V.cosine_with_norms(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")),
-        )
-    )
-    return scored.filter(F.col("cosine") >= threshold).select("id_a", "id_b", "cosine")
 
 
 def connected_components(
@@ -1551,7 +1484,8 @@ def semantic_decontaminate_flags(
     Scale shape: the eval side is tiny by construction → broadcast; the
     corpus is scanned in place with zero shuffle, then one corpus-id
     groupBy. At very large eval sets, swap the broadcast for the sign-LSH
-    bucketed kernel (embedding_neardup_lsh) — same flag semantics.
+    bucketed kernel (embedding_neardup_pairs_blas_bucketed) — same flag
+    semantics.
     """
     e = F.broadcast(
         eval_vecs.select(

@@ -14,7 +14,9 @@ the parity default).
 
 Two shapes compute the weighted fusion:
 
-- :func:`fused_topk` — the pipeline's search path. One ``mapInArrow``
+- :func:`fused_topk` — the pipeline's search path, and the first stage
+  of its ``rerank`` mode (:func:`rerank_token_overlap` rescoring the
+  top max(4·size, 20)). One ``mapInArrow``
   kernel reads a pinned frame that carries each doc's id, vector, term
   array and category, scores every row on BOTH legs (Lucene BM25 from
   the term arrays and driver-side idf; cosine by one GEMV), and emits
@@ -28,9 +30,9 @@ Two shapes compute the weighted fusion:
   (EDBT 2020).
 - :func:`fuse_weighted` — the composable DataFrame form for score legs
   that arrive as (query_id, doc_id, score) frames: a full-outer join on
-  (query_id, doc_id) and a windowed top-k. The registry entries and the
-  pipeline's ``rerank`` first stage use it, and it is the twin the fused
-  kernel is tested against (tests/test_pipeline.py).
+  (query_id, doc_id) and a windowed top-k. The registry entries use it,
+  and it is the twin the fused kernel and the ``rerank`` first stage are
+  tested against (tests/test_pipeline.py).
 """
 
 from __future__ import annotations

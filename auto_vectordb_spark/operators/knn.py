@@ -464,6 +464,29 @@ def ivf_search(
     recall/latency knob = nprobe (≈ ES num_candidates). The semi-join on
     centroid_id prunes the corpus scan to probed buckets only.
     """
+    return _ivf_probe_and_score(
+        queries, index, centroids, k, nprobe, vec_col, corpus_id, metric
+    )
+
+
+def _ivf_probe_and_score(
+    queries: DataFrame,
+    index,
+    centroids: DataFrame,
+    k: int,
+    nprobe: int,
+    vec_col: str,
+    corpus_id: str,
+    metric: str = "cosine",
+) -> DataFrame | None:
+    """The one IVF search body: probe each query's ``nprobe`` nearest
+    centroids (:func:`knn_exact` over the centroid table), join the
+    broadcast (query, probe) pairs to the index on centroid_id, score,
+    collapse duplicate ids, cut the top-k per query.
+
+    ``index`` is the index frame, or a function of the probed centroid
+    ids that reads it (a persisted index pruned to those partitions); a
+    ``None`` from that function (nothing readable) is returned as is."""
     probes = knn_exact(
         queries,
         centroids.select(F.col("centroid_id"), F.col("centroid").alias("embedding")),
@@ -471,6 +494,11 @@ def ivf_search(
         corpus_id="centroid_id",
         metric=metric,
     ).select("query_id", "centroid_id")
+    if not isinstance(index, DataFrame):
+        probe_ids = [r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()]
+        index = index(probe_ids)
+        if index is None:
+            return None
     qv = queries.select("query_id", F.col(vec_col).alias("__qv"))
     cand = (
         F.broadcast(probes.join(qv, "query_id"))
@@ -533,27 +561,15 @@ def ivf_search_persisted(
     probed centroid ids prunes the index scan to those partitions, then the
     per-query semi-join restricts each query to its own probes.
     """
-    probes = knn_exact(
+    return _ivf_probe_and_score(
         queries,
-        centroids.select(F.col("centroid_id"), F.col("centroid").alias("embedding")),
-        k=nprobe,
-        corpus_id="centroid_id",
-    ).select("query_id", "centroid_id")
-    probe_ids = [r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()]
-    index = ivf_read_pruned(spark, path, probe_ids)
-    qv = queries.select("query_id", F.col(vec_col).alias("__qv"))
-    cand = (
-        F.broadcast(probes.join(qv, "query_id"))
-        .join(index, "centroid_id")
-        .withColumn("score", V.cosine(F.col("__qv"), F.col(vec_col)))
+        lambda probe_ids: ivf_read_pruned(spark, path, probe_ids),
+        centroids,
+        k,
+        nprobe,
+        vec_col,
+        corpus_id,
     )
-    # Same replay-duplicate collapse as ivf_search — see the comment there.
-    best = (
-        cand.select("query_id", corpus_id, "score")
-        .groupBy("query_id", corpus_id)
-        .agg(F.max("score").alias("score"))
-    )
-    return top_k_per_group(best, ["query_id"], "score", k, tie_break=corpus_id)
 
 
 def label_centroids(

@@ -495,24 +495,23 @@ def ivf_search_persisted_with_deletes(
     test-pinned in tests/test_retraction.py. The tombstone list is
     broadcast-sized against any realistic erasure volume; when it grows,
     :func:`ivf_reclaim_deleted` physically reclaims."""
-    from .knn import ivf_read_pruned, knn_exact, top_k_per_group
-    from ..functions import vector as V
+    from pyspark.sql.utils import AnalysisException
 
-    probes = knn_exact(
-        queries,
-        centroids.select(
-            F.col("centroid_id"), F.col("centroid").alias("embedding")
-        ),
-        k=nprobe,
-        corpus_id="centroid_id",
-    ).select("query_id", "centroid_id")
-    probe_ids = [
-        r["centroid_id"]
-        for r in probes.select("centroid_id").distinct().collect()
-    ]
-    try:
-        pruned = ivf_read_pruned(spark, path, probe_ids)
-    except Exception:
+    from .knn import _ivf_probe_and_score, ivf_read_pruned
+
+    def read(probe_ids):
+        try:
+            pruned = ivf_read_pruned(spark, path, probe_ids)
+        except AnalysisException:
+            return None
+        return pruned.join(
+            F.broadcast(_ivf_tombstones(spark, path, corpus_id)),
+            corpus_id,
+            "left_anti",
+        )
+
+    out = _ivf_probe_and_score(queries, read, centroids, k, nprobe, vec_col, corpus_id)
+    if out is None:
         # an index whose every vector was reclaimed (or a zero-row write)
         # has no readable parquet schema — searching it returns the
         # schema-correct empty result, not an analysis crash
@@ -520,23 +519,7 @@ def ivf_search_persisted_with_deletes(
         return spark.createDataFrame(
             [], f"query_id {qt}, {corpus_id} long, score double"
         )
-    index = pruned.join(
-        F.broadcast(_ivf_tombstones(spark, path, corpus_id)),
-        corpus_id,
-        "left_anti",
-    )
-    qv = queries.select("query_id", F.col(vec_col).alias("__qv"))
-    cand = (
-        F.broadcast(probes.join(qv, "query_id"))
-        .join(index, "centroid_id")
-        .withColumn("score", V.cosine(F.col("__qv"), F.col(vec_col)))
-    )
-    best = (
-        cand.select("query_id", corpus_id, "score")
-        .groupBy("query_id", corpus_id)
-        .agg(F.max("score").alias("score"))
-    )
-    return top_k_per_group(best, ["query_id"], "score", k, tie_break=corpus_id)
+    return out
 
 
 def _ivf_tombstones(spark, path: str, corpus_id: str) -> DataFrame:

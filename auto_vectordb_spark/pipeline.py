@@ -73,7 +73,6 @@ from .functions.text import (
 )
 from .operators import bm25 as BM25
 from .operators import hybrid as HY
-from .operators import knn as KNN
 from .operators.relational import delete_by_ids as _delete_by_ids
 from .session import Materialized, materialize
 
@@ -310,7 +309,6 @@ class VectorPipeline:
         """
         ok = chunks.filter(F.col("status") == "success").drop("error", "status")
         ok.write.mode(mode).partitionBy("lv1_cat").parquet(str(self.base / "corpus"))
-        self._corpus_cache = None
         self._invalidate()
         if remove_original:
             self.clear_staging()
@@ -340,7 +338,15 @@ class VectorPipeline:
         tokenized once); the BM25 frames index that column, and
         :meth:`search`'s kernel reads it. Two ``toArrow()`` collects fill
         the pins and bring ``N``/``avgdl`` and the term → df table to the
-        driver, where each query's idf is computed."""
+        driver, where each query's idf is computed.
+
+        Every :meth:`search` mode reads only the search side and the
+        ``_bm25`` handle's ``N``/``avgdl`` scalars, not the four BM25
+        pins behind it; the pipeline benchmark's set-up span counts the
+        postings, doc_lens and term_df pins. Pinning the search side
+        alone read ``setup_s`` 1.92 → 2.31 s (medians of five alternated
+        pairs, parent IQR 0.41): unresolved and near the bound, so the
+        pins stay until the benchmark stops counting them."""
         self._invalidate()
         search = materialize(
             self.corpus()
@@ -366,11 +372,12 @@ class VectorPipeline:
         self._term_df = dict(zip(term_df["term"].to_pylist(), term_df["df"].to_pylist()))
 
     def _invalidate(self) -> None:
-        """Release this pipeline's pins and refresh Spark's view of the
-        corpus path. Spark re-caches only the path a write names:
-        ``delete_by_ids`` writes a staging path and renames it, so without
-        this a later :meth:`build_index` would match the stale cached plans
-        over ``corpus/`` and serve deleted pages."""
+        """Release this pipeline's pins, drop its corpus read and refresh
+        Spark's view of the corpus path. Spark re-caches only the path a
+        write names: ``delete_by_ids`` writes a staging path and renames
+        it, so without this a later :meth:`build_index` would match the
+        stale cached plans over ``corpus/`` and serve deleted pages."""
+        self._corpus_cache = None
         for pin in self._pins:
             pin.release()
         self._pins = []
@@ -397,30 +404,29 @@ class VectorPipeline:
         1..100 (routers/es_index.py:45-46). Returns the hits' corpus
         columns plus ``score``, ordered (score desc, id asc).
 
-        Not fully lazy: the ``hybrid``, ``bm25`` and ``knn`` modes run ONE
-        scoring job at call time (:func:`hybrid.fused_topk`) — a
-        ``mapInArrow`` pass over the search side pinned by
-        :meth:`build_index` that scores BM25 from the pinned term arrays
-        and cosine by a GEMV, and ships back each partition's local BM25
-        top-K and cosine top-``size`` — and the driver fuses them. The
-        result is exact: BM25 scores are never negative, so a doc outside
-        both the global BM25 top-K and the scoped cosine top-``size``
-        scores 0.8·cos and ``size`` docs rank above it under (score desc,
-        id asc); the fused top-``size`` therefore lies in (BM25 top-K ∩
-        scope) ∪ (cosine top-``size``), and local cuts in the same total
-        order keep every member of both. The returned frame is a lazy
-        fetch of at most ``size`` pinned rows by id (a second job when
-        consumed), its score projected from a literal map: no parquet
-        scan, no shuffle, no join.
+        Not fully lazy: every mode runs ONE scoring job at call time
+        (:func:`hybrid.fused_topk`) — a ``mapInArrow`` pass over the
+        search side pinned by :meth:`build_index` that scores BM25 from
+        the pinned term arrays and cosine by a GEMV, and ships back each
+        partition's local BM25 top-K and cosine top-``size`` — and the
+        driver fuses them. The result is exact: BM25 scores are never
+        negative, so a doc outside both the global BM25 top-K and the
+        scoped cosine top-``size`` scores 0.8·cos and ``size`` docs rank
+        above it under (score desc, id asc); the fused top-``size``
+        therefore lies in (BM25 top-K ∩ scope) ∪ (cosine top-``size``),
+        and local cuts in the same total order keep every member of both.
+        The returned frame is a lazy fetch of at most ``size`` pinned rows
+        by id (a second job when consumed), its score projected from a
+        literal map: no parquet scan, no shuffle, no join.
 
         A page whose vector is NULL, ragged or non-finite never matches
         the kNN clause (ES semantics for a doc without a vector) and is a
         hit only through BM25. ``categories`` restricts both legs to the
         given ``lv1_cat`` values (the BM25 cut stays corpus-wide, as the
-        index is). ``rerank`` keeps the composed plan: the hybrid top
-        max(4·size, 20) from :func:`bm25.search` and
-        :func:`knn.cosine_scores_blas` fused by
-        :func:`hybrid.fuse_weighted`, reranked by token overlap.
+        index is). ``rerank`` takes the hybrid top max(4·size, 20) from
+        the same kernel (the exactness argument holds for any cut size)
+        and reranks those pinned rows by token overlap
+        (:func:`hybrid.rerank_token_overlap`).
         """
         size = max(1, min(int(size), 100))
         if mode not in ("hybrid", "bm25", "knn", "rerank"):
@@ -433,9 +439,6 @@ class VectorPipeline:
         if not np.isfinite(qvec).all():
             raise ValueError("query embedding has non-finite elements")
         text_k = max(size * 10, 50)
-        corpus = self._search_side.drop(TERMS)
-        if mode == "rerank":
-            return self._rerank(corpus, query_text, qvec, size, min_score, categories, text_k)
         n_docs = self._bm25.n_docs
         idf = {
             t: BM25.idf(n_docs, self._term_df[t])
@@ -448,59 +451,47 @@ class VectorPipeline:
                 qvec,
                 idf,
                 self._bm25.avgdl,
-                size,
+                max(4 * size, 20) if mode == "rerank" else size,
                 text_k,
-                mode=mode,
+                mode="hybrid" if mode == "rerank" else mode,
                 categories=categories,
                 min_score=min_score,
                 terms_col=TERMS,
             )
         )
+        corpus = self._search_side.drop(TERMS)
+        fetched = corpus.where(F.col("id").isin(list(hits)))
         lits = [F.lit(x) for kv in hits.items() for x in kv]
         score = F.create_map(*lits)[F.col("id")] if hits else F.lit(None)
+        score = score.cast("double").alias("score")
+        if mode == "rerank":
+            return self._rerank(fetched, score, query_text, size)
         return (
-            corpus.where(F.col("id").isin(list(hits)))
-            .select(score.cast("double").alias("score"), *corpus.columns)
+            fetched.select(score, *corpus.columns)
             .orderBy(F.col("score").desc(), F.col("id").asc())
             .limit(size)
         )
 
-    def _rerank(self, corpus, query_text, qvec, size, min_score, categories, text_k) -> DataFrame:
-        """Two-stage search: hybrid top-(4*size) candidates, reranked by the
-        pluggable second-stage scorer (token-overlap stand-in; a real
-        cross-encoder swaps in via operators/hybrid.py)."""
-        if categories is not None:
-            corpus = corpus.filter(F.col("lv1_cat").isin(list(categories)))
-        queries_df = self.spark.createDataFrame(
-            [(0, query_text)], ["query_id", "query_text"]
+    def _rerank(self, fetched: DataFrame, score, query_text: str, size: int) -> DataFrame:
+        """Second stage of the ``rerank`` mode: the hybrid top
+        max(4·size, 20) (``fetched``, the candidates' pinned rows, and
+        ``score``, their first-stage score) reranked by the pluggable
+        second-stage scorer (token-overlap stand-in; a real cross-encoder
+        swaps in via operators/hybrid.py)."""
+        queries = self.spark.range(1).select(
+            F.lit(0).alias("query_id"), F.lit(query_text).alias("query_text")
         )
-        knn_scores = KNN.cosine_scores_blas(
-            corpus.select(F.col("id").alias("doc_id"), F.col("embeddings")),
-            np.zeros(1, dtype=np.int64),
-            qvec[None, :],
-            corpus_id="doc_id",
-            corpus_vec="embeddings",
-        )
-        bm25_scores = BM25.search(self._bm25, queries_df, k=text_k)
-        if categories is not None:
-            # the BM25 index is corpus-wide; restrict its leg too, or
-            # out-of-category docs would occupy top-k slots pre-join
-            bm25_scores = bm25_scores.join(
-                corpus.select(F.col("id").alias("doc_id")), "doc_id", "left_semi"
-            )
-        cand = HY.fuse_weighted(
-            bm25_scores, knn_scores, min_score=min_score, k=max(4 * size, 20)
-        )
+        cand = fetched.select(F.lit(0).alias("query_id"), F.col("id").alias("doc_id"), score)
         hits = HY.rerank_token_overlap(
             cand,
-            queries_df,
-            corpus.select(F.col("id").alias("doc_id"), F.col("page_content")),
+            queries,
+            fetched.select(F.col("id").alias("doc_id"), F.col("page_content")),
             k=size,
             text_col="page_content",
-        ).select("query_id", "doc_id", F.col("rerank_score").alias("score"))
+        ).select(F.col("doc_id").alias("id"), F.col("rerank_score").alias("score"))
         return (
-            hits.join(corpus, hits["doc_id"] == corpus["id"])
-            .drop("doc_id", "query_id")
+            hits.join(fetched, "id")
+            .select("score", *fetched.columns)
             .orderBy(F.col("score").desc(), F.col("id").asc())
         )
 
@@ -537,7 +528,6 @@ class VectorPipeline:
         final = self.base / "corpus"
         shutil.rmtree(final)
         staging.rename(final)
-        self._corpus_cache = None
         self._invalidate()
 
     def count(self) -> int:
@@ -640,9 +630,10 @@ def build_training_set(
             "doc_id", "n_tokens", F.lit(0).cast("long").alias("cum_tokens"), "quality"
         ).limit(0)
     # 256-entry literal lookup beats a broadcast join: no broadcast
-    # exchange, no join node, stays inside whole-stage codegen.
-    off_map = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
+    # exchange, no join node, stays inside whole-stage codegen. One SQL
+    # literal is one JVM call (a create_map of F.lit pairs is 512).
+    off_map = F.expr(
+        "map(" + ", ".join(f"'{b}', {o}L" for b, o in offsets.items()) + ")"
     )
     in_bucket = Window.partitionBy("__bkt").orderBy("__ord").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -699,7 +690,6 @@ def _ingest_stream_method(
             ok.write.mode("append").partitionBy("lv1_cat").parquet(
                 str(self.base / "corpus")
             )
-            self._corpus_cache = None
             self._invalidate()
 
     return foreach_batch_index_merge(chunks, write_fn, ckpt)

@@ -1973,21 +1973,6 @@ def skew_salted_join_q(spark, sf):
 
 
 @_register(
-    "dedup_embedding_lsh",
-    None,
-    doc="Embedding near-dup at scale: sign-LSH (random-hyperplane) bucketing, "
-    "exact cosine only within buckets; num_tables auto-tuned to hit the "
-    "recall target at the threshold boundary (ES num_candidates analog). "
-    "Rows-only (random projections have no SQL twin); recall >= 0.85 and "
-    "zero-false-positive gates in tests/test_dedup.py",
-)
-def dedup_embedding_lsh_q(spark, sf):
-    t = load_views(spark, sf)
-    pairs = DD.embedding_neardup_lsh(t["embeddings"], threshold=0.3, bits_per_table=3)
-    return pairs.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-
-
-@_register(
     "text_bpe_tokens",
     r"""
     SELECT doc_id,

@@ -101,7 +101,6 @@ def test_blas_neardup_builders_degenerate_on_empty_and_all_null(spark):
         for fn in (
             DD.embedding_neardup_pairs_blas,
             DD.embedding_neardup_pairs_blas_bucketed,
-            DD.embedding_neardup_lsh,
         ):
             out = fn(vectors)
             assert out.columns == ["id_a", "id_b", "cosine"]

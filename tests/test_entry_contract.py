@@ -21,7 +21,6 @@ def test_registry_shape():
         "ann_lsh_topk",  # MLlib random-projection LSH; recall-gated
         "knn_ivf_pq",  # IVFADC; recall-gated (test_cluster.py)
         "dedup_embedding_blas",  # sign-LSH bucketing, measured 0.971 recall
-        "dedup_embedding_lsh",  # sign-LSH; recall-gated (test_dedup.py)
         "approx_distinct_users",  # HLL sketch; error-gated
         "events_wau_hll",  # Datasketches HLL rollup; error-gated
         "bpe_train_merges",  # lookaround regexp replay RE2 can't express;

@@ -155,23 +155,24 @@ def _plan_nodes(plan):
 
 
 def test_search_plan_reads_only_pinned_frames(pipe):
-    """After build_index a query reads the pinned search side and the
-    cached BM25 frames only: no parquet scan, and no query × corpus cross
-    product (the one nested-loop join allowed broadcasts BM25's one-row
-    (__n, __avgdl) stats). A category-scoped query exercises all four
-    reads of the pinned side: kNN leg, filter, BM25 semi-join, hit join."""
-    df = pipe.search("bread flour catalyst", size=3, categories=["food"])
-    assert df.collect()
-    nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
-    names = [n for n, _ in nodes]
-    assert "InMemoryTableScanExec" in names
-    assert "FileSourceScanExec" not in names
-    assert "CartesianProductExec" not in names
-    for name, node in nodes:
-        if name == "BroadcastNestedLoopJoinExec":
-            sides = [node.left(), node.right()]
-            outputs = [sorted(a.name() for a in _seq(side.output())) for side in sides]
-            assert ["__avgdl", "__n"] in outputs, outputs
+    """After build_index a query reads the pinned search side only: no
+    parquet scan, no cross product, and every cached-frame scan outputs
+    search-side columns (no BM25 postings, doc_lens, term_df or stats
+    pin). The hybrid case is the fused kernel's hit fetch; the rerank
+    case adds the token-overlap second stage over the fetched rows."""
+    side = set(pipe._search_side.columns)
+    for mode in ("hybrid", "rerank"):
+        df = pipe.search("bread flour catalyst", size=3, mode=mode, categories=["food"])
+        assert df.collect(), mode
+        nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
+        names = [n for n, _ in nodes]
+        assert "InMemoryTableScanExec" in names, mode
+        assert "FileSourceScanExec" not in names, mode
+        assert "CartesianProductExec" not in names, mode
+        for name, node in nodes:
+            if name == "InMemoryTableScanExec":
+                cols = {a.name() for a in _seq(node.output())}
+                assert cols <= side, (mode, cols - side)
 
 
 def _tokens(text):
@@ -278,9 +279,10 @@ def test_search_matches_driver_reference(malformed_store, text, categories):
             assert terms & set(_tokens(by_id[d]["page_content"]))
 
 
-def _composed_hits(p, text, size, mode, categories, min_score):
-    """The search as a composition of the library's DataFrame operators:
-    fuse_weighted over BM25.search ⋉ scope and cosine_scores_blas."""
+def _composed_fused(p, text, size, k, mode, categories, min_score):
+    """The search's first stage as a composition of the library's
+    DataFrame operators: fuse_weighted over BM25.search ⋉ scope (the
+    BM25 top max(10·size, 50)) and cosine_scores_blas, cut to ``k``."""
     side = p._search_side.drop(TERMS)
     if categories is not None:
         side = side.filter(F.col("lv1_cat").isin(categories))
@@ -296,7 +298,12 @@ def _composed_hits(p, text, size, mode, categories, min_score):
         corpus_vec="embeddings",
     )
     legs = {"hybrid": (bm25, knn), "bm25": (bm25, knn.limit(0)), "knn": (bm25.limit(0), knn)}
-    fused = HY.fuse_weighted(*legs[mode], min_score=min_score, k=size)
+    return HY.fuse_weighted(*legs[mode], min_score=min_score, k=k)
+
+
+def _composed_hits(p, text, size, mode, categories, min_score):
+    """The search as a composition of the library's DataFrame operators."""
+    fused = _composed_fused(p, text, size, size, mode, categories, min_score)
     rows = fused.orderBy(F.col("score").desc(), F.col("doc_id").asc()).collect()
     return [(r["doc_id"], r["score"]) for r in rows]
 
@@ -317,6 +324,30 @@ def test_fused_search_matches_composed_operators(malformed_store, mode, categori
     assert got and [d for d, _ in got] == [d for d, _ in want]
     for (_, gs), (_, ws) in zip(got, want):
         assert abs(gs - ws) <= 1e-9 * max(1.0, abs(ws))
+
+
+@pytest.mark.parametrize("categories", [None, ["food"]])
+def test_rerank_matches_composed_first_stage(malformed_store, categories):
+    """rerank = rerank_token_overlap over the composed hybrid top
+    max(4·size, 20): the fused kernel's first stage is exact at any cut."""
+    p, _, _ = malformed_store
+    text, size = "whisk bread", 3
+    got = [
+        (r["id"], r["score"])
+        for r in p.search(text, size=size, mode="rerank", categories=categories).collect()
+    ]
+    stage1 = _composed_fused(p, text, size, max(4 * size, 20), "hybrid", categories, 0.0)
+    docs = p._search_side.select(F.col("id").alias("doc_id"), "page_content")
+    queries = p.spark.createDataFrame([(0, text)], ["query_id", "query_text"])
+    rows = (
+        HY.rerank_token_overlap(stage1, queries, docs, k=size, text_col="page_content")
+        .orderBy(F.col("rerank_score").desc(), F.col("doc_id").asc())
+        .collect()
+    )
+    want = [(r["doc_id"], r["rerank_score"]) for r in rows]
+    assert got and [d for d, _ in got] == [d for d, _ in want]
+    for (_, gs), (_, ws) in zip(got, want):
+        assert abs(gs - ws) <= 1e-9
 
 
 def test_search_result_columns_match_the_corpus(malformed_store):

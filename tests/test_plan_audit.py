@@ -109,7 +109,6 @@ PYTHON_NODES_OK = frozenset(
         "dedup_embedding_blas_exact",
         # Arrow-batched per-partition d×d int64 Gram partials
         "embedding_gram_matrix",
-        "dedup_embedding_lsh",
         "embed_documents",
         "knn_blas_topk",
         "mmr_rerank",
