@@ -52,15 +52,14 @@ class BM25Index:
     term_df: DataFrame    # (term, df)
     stats: DataFrame      # ONE row: (__n double, __avgdl double)
 
-    # Corpus scalars stay a DataFrame that rides into the query plan as a
-    # broadcast 1-row cross join (measured ~0.3 s faster per query than a
-    # collect at build time). Lazy stats remain right for an unpinned
-    # index: building it and scoring with it is ONE Spark job. An owner
-    # that queries repeatedly pins the row with the other frames
-    # (VectorPipeline.build_index), so queries read it instead of
-    # re-aggregating doc_lens. The properties below collect on first
-    # access for callers that genuinely want the numbers; an owner that
-    # already collected the row passes it as ``_scalars``.
+    # Corpus scalars come in two forms. :func:`search` (the registry
+    # entries and one-shot callers) reads ``stats`` as a broadcast 1-row
+    # cross join, so building an unpinned index and scoring with it is ONE
+    # Spark job. ``VectorPipeline.build_index`` collects the row once at
+    # build time and passes it as ``_scalars``; its queries go through
+    # ``hybrid.fused_topk``, which takes N/avgdl as plain floats. The
+    # properties below collect on first access for any other caller that
+    # wants the numbers.
     _scalars: tuple[int, float] | None = None
 
     def _fetch(self) -> tuple[int, float]:

@@ -744,40 +744,53 @@ def semdedup_pairs(
 
     The paper's recipe — k-means the corpus, then compare pairwise ONLY
     within each cluster — makes exact cosine dedup tractable at web scale:
-    the quadratic term is bounded per cell (sum of c_i^2, not N^2), and the
-    self-join is an equi-join on the cell id so Spark shuffles each vector
-    once to its cell. ``cells`` is any (id, cell) assignment — the
-    operators/cluster.py coarse quantizer, IVF cells, or k-means output —
-    so cell granularity is the recall/cost knob exactly like nprobe.
+    the quadratic term is bounded per cell (sum of c_i^2, not N^2).
+    ``cells`` is any (id, cell) assignment — the operators/cluster.py
+    coarse quantizer, IVF cells, or k-means output — so cell granularity
+    is the recall/cost knob exactly like nprobe.
 
-    Emits (cell, id_a, id_b, cosine) for id_a < id_b with cosine >= threshold;
-    feed to :func:`connected_components` / :func:`apply_dedup` to realize
-    keep-one-per-group.
+    The assignment is joined to the vectors once and each cell is scored
+    by :func:`_cell_pairs`, the BLAS walker the sign-LSH kernel runs
+    (:func:`embedding_neardup_pairs_blas_bucketed`); ids and cells must be
+    integral. Rows with a NULL cell, a NULL id or a vector that is not
+    ``dim`` finite floats (the modal length, :func:`CV.probe_dim`) drop.
+
+    Emits (cell, id_a, id_b, cosine) for id_a < id_b, with cosine rounded
+    to ``round_decimals`` BEFORE the ``>= threshold`` cut, in the input
+    id and cell types; feed to :func:`connected_components` /
+    :func:`apply_dedup` to realize keep-one-per-group.
     """
-    v = vectors.select(F.col(id_col), F.col(vec_col)).join(
-        cells.select(F.col(id_col), F.col(cell_col).alias("__cell")), id_col
+    from pyspark.sql import types as T
+
+    id_type = vectors.schema[id_col].dataType
+    cell_type = cells.schema[cell_col].dataType
+    for name, t in ((id_col, id_type), (cell_col, cell_type)):
+        if not isinstance(t, T.IntegralType):
+            raise TypeError(f"semdedup_pairs needs an integral {name!r}, got {t.simpleString()}")
+    # None when no vector is non-empty: the walker then decodes nothing
+    dim = CV.probe_dim(vectors, vec_col)
+    keyed = (
+        vectors.select(id_col, vec_col)
+        .join(cells.select(id_col, F.col(cell_col).alias("__cell")), id_col)
+        .where(F.col("__cell").isNotNull())
+        .select(
+            F.col("__cell").cast("long").alias("cell"),
+            F.col(id_col).cast("long").alias("vid"),
+            F.col(vec_col).alias("vec"),
+        )
     )
-    a = v.select(
-        "__cell",
-        F.col(id_col).alias("id_a"),
-        V.as_double_array(F.col(vec_col)).alias("__va"),
-        V.norm(F.col(vec_col)).alias("__na"),
-    )
-    b = v.select(
-        "__cell",
-        F.col(id_col).alias("id_b"),
-        V.as_double_array(F.col(vec_col)).alias("__vb"),
-        V.norm(F.col(vec_col)).alias("__nb"),
-    )
-    cos = V.cosine_with_norms(
-        F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")
-    )
+    # One rounding step below the threshold, the walker keeps every pair
+    # whose ROUNDED cosine can reach it; the exact cut follows the round.
     return (
-        a.join(b, "__cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(cos, round_decimals))
+        _cell_pairs(keyed, dim, threshold - 10.0**-round_decimals)
+        .withColumn("cosine", F.round("cosine", round_decimals))
         .filter(F.col("cosine") >= threshold)
-        .select(F.col("__cell").alias("cell"), "id_a", "id_b", "cosine")
+        .select(
+            F.col("cell").cast(cell_type).alias("cell"),
+            F.col("id_a").cast(id_type).alias("id_a"),
+            F.col("id_b").cast(id_type).alias("id_b"),
+            "cosine",
+        )
     )
 
 
@@ -789,9 +802,10 @@ def embedding_neardup_pairs(
 ) -> DataFrame:
     """Cosine near-dup pairs ≥ threshold (exact all-pairs).
 
-    Correctness-oracle path. At 100 TB use minhash/LSH bucketing first (or
-    :func:`ivf_build` buckets) and run this within buckets; the exact kernel
-    below is the same either way.
+    Correctness-oracle path (``dedup_embedding_cosine``), and the
+    expression twin the BLAS walker (:func:`_cell_pairs`) is pinned
+    against in tests. At scale use
+    :func:`embedding_neardup_pairs_blas_bucketed`.
     """
     # Precompute the double cast + norm once per vector (N rows), so the
     # O(N²) pair stage evaluates a single dot product per pair.
@@ -815,91 +829,94 @@ def embedding_neardup_pairs(
 
 def _auto_num_tables(threshold: float, bits_per_table: int, recall_target: float) -> int:
     """Smallest T with 1-(1-p^b)^T >= recall_target at the threshold boundary,
-    where p = 1 - acos(threshold)/pi (sign-LSH bit-agreement probability)."""
+    where p = 1 - acos(threshold)/pi (sign-LSH bit-agreement probability).
+    One table when a boundary pair always shares its cell (threshold 1.0,
+    or ``bits_per_table=0``: one cell per table)."""
     import math
 
+    if not 0.0 < recall_target < 1.0:
+        raise ValueError(f"recall_target must be in (0, 1), got {recall_target!r}")
     p_bit = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
     p_tbl = p_bit**bits_per_table
+    if p_tbl >= 1.0:
+        return 1
+    if p_tbl <= 0.0:
+        raise ValueError(
+            f"threshold {threshold!r} admits antipodal pairs, which never share "
+            f"a sign-LSH cell; use bits_per_table=0 (one cell, exact)"
+        )
     return max(1, math.ceil(math.log(1.0 - recall_target) / math.log(1.0 - p_tbl)))
 
 
-def embedding_neardup_pairs_blas(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    max_collect_rows: int = 100_000,
-) -> DataFrame:
-    """BLAS-kernel variant of :func:`embedding_neardup_pairs` (throughput path).
+def _cell_pairs(cells: DataFrame, dim: int | None, cut: float) -> DataFrame:
+    """(cell, id_a, id_b, cosine): every pair of rows sharing a ``cell``
+    with id_a < id_b and cosine ≥ ``cut`` — the one all-pairs BLAS kernel
+    (sign-LSH cells, SemDeDup cells, and the one-cell exact form).
 
-    The full normalized matrix is broadcast (fits executor memory for the
-    within-bucket sizes this is meant for); each partition computes
-    ``block @ M.T`` and emits only pairs ≥ threshold with id_a < id_b.
-    Last-ulp cosine differences vs the expression kernel are possible (BLAS
-    reduction order).
-
-    SIZE-GUARDED: this form collects the corpus to the driver, which is only
-    legitimate for an already-bucketed slice. Above ``max_collect_rows`` it
-    fails fast — use :func:`embedding_neardup_pairs_blas_bucketed`, which
-    composes the same kernel with sign-LSH bucketing and never collects.
-    """
+    ``cells`` is (cell long, vid long, vec): NULL-free keys and ids.
+    ``repartition(cell).sortWithinPartitions(cell)`` lays each cell out as
+    one contiguous run, and ONE ``mapInArrow`` call per partition walks
+    the sorted stream: every batch is decoded at ``dim`` (``None`` when no
+    vector is non-empty: nothing decodes) and row-normalized once, each
+    complete cell of ≥ 2 rows gets the exact all-pairs ``Mn @ Mn.T``, and
+    the last cell of a batch is carried into the next one, since it may
+    continue there. A task holds at most one cell plus
+    one Arrow batch — the memory bound of a per-cell ``applyInArrow``,
+    without one Python call per cell. A dead (zero-norm or overflowing)
+    vector never pairs, as its expression cosine is NULL."""
     import numpy as np
     import pyarrow as pa
 
-    rows = (
-        vectors.select(id_col, vec_col)
-        .where(F.col(id_col).isNotNull())
-        .limit(max_collect_rows + 1)
-        .toArrow()
+    arrow_schema = pa.schema(
+        [
+            ("cell", pa.int64()),
+            ("id_a", pa.int64()),
+            ("id_b", pa.int64()),
+            ("cosine", pa.float64()),
+        ]
     )
-    if rows.num_rows > max_collect_rows:
-        raise ValueError(
-            f"embedding_neardup_pairs_blas collects the corpus to the driver "
-            f"and got > {max_collect_rows} rows; use "
-            f"embedding_neardup_pairs_blas_bucketed for unbucketed corpora"
-        )
-    # row-fails-not-job: NULL / zero-length / ragged / non-finite vectors
-    # drop (modal dim of the collected valid rows defines the working
-    # dimensionality); an empty or all-invalid slice returns the
-    # schema-correct empty frame
-    out_schema = "id_a long, id_b long, cosine double"
-    mask, M = CV.decode(rows.column(vec_col))
-    if M is None:
-        return vectors.sparkSession.createDataFrame([], out_schema)
-    ids = rows.column(id_col).to_numpy()[mask].astype(np.int64)
-    Mn = M / V.safe_row_norms(M)
-    # (ids, Mn) ride the pickled kernel closure: PySpark ships large task
-    # commands via its own managed TorrentBroadcast, reclaimed with the
-    # plan by the ContextCleaner — an explicit sc.broadcast handle here
-    # could never be destroy()ed without breaking lazy execution and
-    # leaked across bench repeats.
 
-    def part(batches):
-        ids_b, Mn_b = ids, Mn
+    def pairs(runs):
+        # exact all-pairs per cell; a 1-row cell has no pair
+        out = []
+        for key, ids, Mn in runs:
+            if len(ids) > 1:
+                S = Mn @ Mn.T
+                live = np.diag(S) > 0  # a unit row's self-cosine is ~1
+                i, j = np.nonzero(S >= cut)
+                keep = (ids[i] < ids[j]) & live[i] & live[j]
+                i, j = i[keep], j[keep]
+                out.append((np.full(len(i), key), ids[i], ids[j], S[i, j]))
+        cols = [np.concatenate(c) for c in zip(*out)] if out else [[], [], [], []]
+        return pa.record_batch(cols, schema=arrow_schema)
+
+    def kernel(batches):
+        # (cell keys, ids, normalized rows) of the cell that ended the
+        # previous batch and may continue in this one
+        key = ids = Mn = None
         for batch in batches:
-            mask, C = CV.decode(batch.column(vec_col), Mn_b.shape[1])
-            if C is None:
+            # row-fails-not-job: NULL/ragged/non-finite vectors drop here
+            mask, M = CV.decode(batch.column("vec"), dim)
+            if M is None:
                 continue
-            Cn = C / V.safe_row_norms(C)
-            S = Cn @ Mn_b.T  # (block, N)
-            bids = batch.column(id_col).to_numpy()[mask].astype(np.int64)
-            bi, mj = np.nonzero(S >= threshold)
-            keep = bids[bi] < ids_b[mj]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(bids[bi][keep]),
-                    pa.array(ids_b[mj][keep]),
-                    pa.array(S[bi, mj][keep]),
-                ],
-                names=["id_a", "id_b", "cosine"],
+            k = batch.column("cell").to_numpy()[mask]
+            v = batch.column("vid").to_numpy()[mask]
+            Mb = M / V.safe_row_norms(M)
+            if key is not None:
+                k, v, Mb = np.r_[key, k], np.r_[ids, v], np.vstack([Mn, Mb])
+            bounds = np.r_[np.flatnonzero(np.r_[True, k[1:] != k[:-1]]), len(k)]
+            last = bounds[-2]
+            key, ids, Mn = k[last:], v[last:], Mb[last:]
+            yield pairs(
+                (k[s], v[s:e], Mb[s:e]) for s, e in zip(bounds[:-2], bounds[1:-1])
             )
+        if key is not None:
+            yield pairs([(key[0], ids, Mn)])
 
-    # The JVM-side NULL-id filter is the only place NULL ids drop: the
-    # kernel reads the id column as plain int64
     return (
-        vectors.select(id_col, vec_col)
-        .where(F.col(id_col).isNotNull())
-        .mapInArrow(part, schema=out_schema)
+        cells.repartition("cell")
+        .sortWithinPartitions("cell")
+        .mapInArrow(kernel, schema="cell long, id_a long, id_b long, cosine double")
     )
 
 
@@ -907,31 +924,31 @@ def _sign_lsh_cells(
     vectors: DataFrame,
     id_col: str,
     vec_col: str,
+    dim: int,
     num_tables: int,
     bits_per_table: int,
     seed: int,
-) -> DataFrame | None:
-    """(vid, tbl, bucket, vec): each valid vector's sign-LSH bucket in
-    each of ``num_tables`` tables, from one ``mapInArrow`` scan — a matmul
-    against the tiny plane matrix (T·B × d, seeded by ``seed``, riding the
-    kernel closure; see embedding_neardup_pairs_blas for the
-    broadcast-lifecycle note) — with the vector column re-emitted by
-    ``pc.take`` for the per-cell kernel. ``None`` on an empty or
-    all-invalid corpus: the modal-dim probe over a bounded valid-row
-    sample finds no dimensionality to draw planes for, and a ragged
-    minority row can't hijack it."""
+) -> DataFrame:
+    """(cell, vid, vec): each valid vector's sign-LSH cell in each of
+    ``num_tables`` tables, keyed ``tbl << bits_per_table | bucket`` as one
+    int64, from one ``mapInArrow`` scan — a matmul against the tiny plane
+    matrix (T·B × ``dim``, seeded by ``seed``) — with the vector column
+    re-emitted by ``pc.take`` for :func:`_cell_pairs`."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    dim = CV.probe_dim(vectors, vec_col)
-    if dim is None:
-        return None
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((num_tables * bits_per_table, dim))
     weights = np.power(2, np.arange(bits_per_table), dtype=np.int64)
+    tbl_keys = np.arange(num_tables, dtype=np.int64) << bits_per_table
     vec_type = vectors.schema[vec_col].dataType.simpleString()
-    schema = f"vid long, tbl int, bucket long, vec {vec_type}"
+    schema = f"cell long, vid long, vec {vec_type}"
+    # The planes ride the pickled kernel closure: PySpark ships large task
+    # commands via its own managed TorrentBroadcast, reclaimed with the
+    # plan by the ContextCleaner — an explicit sc.broadcast handle here
+    # could never be destroy()ed without breaking lazy execution and
+    # leaked across bench repeats.
 
     def assign(batches):
         P = planes
@@ -951,12 +968,11 @@ def _sign_lsh_cells(
             # table-major: row r of table t sits at t*n + r
             yield pa.RecordBatch.from_arrays(
                 [
+                    pa.array((buckets | tbl_keys).T.ravel()),
                     pa.array(np.tile(vids, num_tables)),
-                    pa.array(np.repeat(np.arange(num_tables, dtype=np.int32), n)),
-                    pa.array(buckets.T.ravel()),
                     pc.take(vec, pa.array(np.tile(rows, num_tables))),
                 ],
-                names=["vid", "tbl", "bucket", "vec"],
+                names=["cell", "vid", "vec"],
             )
 
     # The JVM-side NULL-id filter is the only place NULL ids drop: the
@@ -978,26 +994,20 @@ def embedding_neardup_pairs_blas_bucketed(
     recall_target: float = 0.95,
     seed: int = 42,
 ) -> DataFrame:
-    """The 100 TB shape of the BLAS near-dup kernel: sign-LSH bucket
-    assignment → per-bucket all-pairs BLAS matmul → max-merge across tables.
+    """The 100 TB shape of the BLAS near-dup kernel: sign-LSH cell
+    assignment → per-cell all-pairs BLAS matmul → max-merge across tables.
 
     Nothing is ever collected to the driver and the corpus never meets
-    itself outside a bucket:
+    itself outside a cell:
 
-    1. one ``mapInArrow`` scan assigns each vector to ``num_tables``
-       (table, bucket) cells — a matmul against the tiny broadcast plane
+    1. one ``mapInArrow`` scan (:func:`_sign_lsh_cells`) assigns each
+       vector to one cell per table — a matmul against the tiny plane
        matrix — carrying the vector along (shuffle volume = T × corpus,
        the honest cost of multi-table LSH grouping);
-    2. ``repartition(tbl, bucket).sortWithinPartitions(tbl, bucket)``
-       lays each cell out as one contiguous run, and ONE ``mapInArrow``
-       call per partition walks the sorted stream: every batch is decoded
-       and row-normalized once, each complete cell of ≥ 2 rows gets the
-       exact all-pairs ``Mn @ Mn.T``, and the last cell of a batch is
-       carried into the next one, since it may continue there. A task
-       holds at most one cell plus one Arrow batch — the memory bound of a
-       per-cell ``applyInArrow``, without one Python call per cell (the
-       cell size is the ``bits_per_table`` knob: b bits → 2^b
-       buckets/table; raise b to shrink task memory);
+    2. :func:`_cell_pairs` sorts by cell and walks each partition in one
+       ``mapInArrow`` call, scoring every cell with the exact all-pairs
+       ``Mn @ Mn.T`` (the cell size is the ``bits_per_table`` knob: b bits
+       → 2^b buckets/table; raise b to shrink task memory);
     3. pairs colliding in several tables are merged with ``max(cosine)``
        (BLAS reduction order may differ at last ulp between cells).
 
@@ -1012,64 +1022,29 @@ def embedding_neardup_pairs_blas_bucketed(
     real near-dup thresholds (≥ 0.9). Gated in tests/test_dedup.py, which
     also pins the streaming kernel to a per-cell ``applyInArrow`` twin.
 
+    ``num_tables=1, bits_per_table=0`` is the exact all-pairs form: one
+    cell holds every vector, so one task scores all N² pairs — meant for
+    slices whose N² scores fit in one task (the registry's equality
+    oracle, ``dedup_embedding_blas_exact``).
+
     A future perf idea, measured by no workload yet: shuffle only the
-    (vid, tbl, bucket) keys and join the vectors once per cell partition,
+    (cell, vid) keys and join the vectors once per cell partition,
     instead of shuffling T copies of every vector.
     """
-    import numpy as np
-    import pyarrow as pa
-
     if num_tables is None:
         num_tables = _auto_num_tables(threshold, bits_per_table, recall_target)
-    assigned = _sign_lsh_cells(vectors, id_col, vec_col, num_tables, bits_per_table, seed)
-    out_schema = "id_a long, id_b long, cosine double"
-    if assigned is None:
-        return vectors.sparkSession.createDataFrame([], out_schema)
-
-    arrow_schema = pa.schema(
-        [("id_a", pa.int64()), ("id_b", pa.int64()), ("cosine", pa.float64())]
+    dim = CV.probe_dim(vectors, vec_col)
+    if dim is None:
+        # an empty or all-invalid corpus has no dimensionality to draw
+        # planes for (the modal-dim probe over a bounded valid-row sample,
+        # so a ragged minority row can't hijack it)
+        return vectors.sparkSession.createDataFrame([], "id_a long, id_b long, cosine double")
+    assigned = _sign_lsh_cells(vectors, id_col, vec_col, dim, num_tables, bits_per_table, seed)
+    return (
+        _cell_pairs(assigned, dim, threshold)
+        .groupBy("id_a", "id_b")
+        .agg(F.max("cosine").alias("cosine"))
     )
-
-    def pairs(cells):
-        # exact all-pairs per cell; a 1-row cell has no pair
-        out = []
-        for ids, Mn in cells:
-            if len(ids) > 1:
-                S = Mn @ Mn.T
-                i, j = np.nonzero(S >= threshold)
-                keep = ids[i] < ids[j]
-                out.append((ids[i][keep], ids[j][keep], S[i, j][keep]))
-        cols = [np.concatenate(c) for c in zip(*out)] if out else [[], [], []]
-        return pa.record_batch(cols, schema=arrow_schema)
-
-    def kernel(batches):
-        # (cell key, ids, normalized rows) of the cell that ended the
-        # previous batch and may continue in this one
-        key = ids = Mn = None
-        for batch in batches:
-            # every vector passed the assign pass's decode: the mask keeps all
-            mask, M = CV.decode(batch.column("vec"))
-            if M is None:
-                continue
-            k = batch.column("tbl").to_numpy().astype(np.int64) << bits_per_table
-            k = (k | batch.column("bucket").to_numpy())[mask]
-            v = batch.column("vid").to_numpy()[mask]
-            Mb = M / V.safe_row_norms(M)
-            if key is not None:
-                k, v, Mb = np.r_[key, k], np.r_[ids, v], np.vstack([Mn, Mb])
-            bounds = np.r_[np.flatnonzero(np.r_[True, k[1:] != k[:-1]]), len(k)]
-            last = bounds[-2]
-            key, ids, Mn = k[last:], v[last:], Mb[last:]
-            yield pairs((v[s:e], Mb[s:e]) for s, e in zip(bounds[:-2], bounds[1:-1]))
-        if key is not None:
-            yield pairs([(ids, Mn)])
-
-    per_cell = (
-        assigned.repartition("tbl", "bucket")
-        .sortWithinPartitions("tbl", "bucket")
-        .mapInArrow(kernel, schema=out_schema)
-    )
-    return per_cell.groupBy("id_a", "id_b").agg(F.max("cosine").alias("cosine"))
 
 
 def connected_components(

@@ -388,14 +388,14 @@ def mmr_rerank(
         _, q = CV.decode(table.column("__qv").slice(0, 1))
         if q is None:
             return empty
-        mask, V = CV.decode(table.column("__dv"), q.shape[1])
-        if V is None:
+        mask, D = CV.decode(table.column("__dv"), q.shape[1])
+        if D is None:
             return empty
         ids = table.column(id_col).to_numpy()[mask]
-        Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
-        qn = q[0] / max(np.linalg.norm(q[0]), 1e-30)
-        rel = Vn @ qn
-        sim = Vn @ Vn.T
+        Dn = D / V.safe_row_norms(D)
+        qn = (q / V.safe_row_norms(q))[0]
+        rel = Dn @ qn
+        sim = Dn @ Dn.T
         n = len(ids)
         chosen: list[int] = []
         max_sim = np.zeros(n)

@@ -495,7 +495,9 @@ def _ivf_probe_and_score(
         metric=metric,
     ).select("query_id", "centroid_id")
     if not isinstance(index, DataFrame):
-        probe_ids = [r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()]
+        # a NULL centroid id (a NULL label's centroid) joins no index row
+        probed = probes.select("centroid_id").distinct().where(F.col("centroid_id").isNotNull())
+        probe_ids = [r["centroid_id"] for r in probed.collect()]
         index = index(probe_ids)
         if index is None:
             return None

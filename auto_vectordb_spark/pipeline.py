@@ -83,6 +83,11 @@ PAGE_CHARS = 2000  # fake-parser page size (reference pages are real PDF pages)
 TERMS = "__terms"  # the search side's internal token-array column
 
 
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash and quote escaped)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def text_page_parser(path: str, content: bytes) -> list[tuple[int, str]]:
     """Deterministic stand-in parser: UTF-8 text, form-feed or fixed-size pages.
 
@@ -461,8 +466,10 @@ class VectorPipeline:
         )
         corpus = self._search_side.drop(TERMS)
         fetched = corpus.where(F.col("id").isin(list(hits)))
-        lits = [F.lit(x) for kv in hits.items() for x in kv]
-        score = F.create_map(*lits)[F.col("id")] if hits else F.lit(None)
+        # one SQL map literal is one JVM call (a create_map of F.lit pairs
+        # is two per hit); repr + D keeps every score the exact double
+        entries = ", ".join(f"{_sql_str(i)}, {float(x)!r}D" for i, x in hits.items())
+        score = F.expr(f"map({entries})")[F.col("id")] if hits else F.lit(None)
         score = score.cast("double").alias("score")
         if mode == "rerank":
             return self._rerank(fetched, score, query_text, size)

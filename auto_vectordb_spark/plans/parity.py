@@ -1294,10 +1294,9 @@ def knn_blas_topk(spark, sf):
     "dedup_embedding_blas",
     None,
     doc="Embedding near-dup pairs via the bucket-composed BLAS kernel: "
-    "sign-LSH bucket assignment -> per-bucket all-pairs matmul (one "
-    "mapInArrow walk over (tbl, bucket)-sorted partitions) -> max-merge "
-    "across tables. Never collects the corpus "
-    "(the whole-corpus kernel is size-guarded and bucket-scoped only). "
+    "sign-LSH cell assignment -> per-cell all-pairs matmul (one "
+    "mapInArrow walk over cell-sorted partitions) -> max-merge "
+    "across tables. Never collects the corpus. "
     "GENUINELY rows-only: sign-LSH recall is probabilistic — measured "
     "961/990 pairs (0.971) on the sf0.01 fixtures at threshold=0.3, "
     "bits_per_table=3, seed=42, T=13 tables (the 0.95 recall_target "
@@ -1322,18 +1321,22 @@ def dedup_embedding_blas(spark, sf):
     FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
     WHERE {V.cosine_sql('a.embedding', 'b.embedding')} >= 0.3
     """,
-    doc="Whole-corpus BLAS near-dup kernel (size-guarded broadcast matmul, "
-    "dedup.py:562) — thresholded-EXACT pairs, so it carries the same "
-    "equality oracle as dedup_embedding_cosine. Divergence would need a "
-    "true cosine within BLAS reduction noise (~1e-15) of the 0.3 "
-    "threshold or a 6dp rounding boundary; measured margins on the "
-    "sf0.01 fixtures are 6.9e-5 (threshold) and 8.8e-5 (rounding). "
-    "Legitimate only on bucketed/small slices (fails fast above "
-    "max_collect_rows); the 100 TB shape is dedup_embedding_blas above",
+    doc="The bucketed BLAS near-dup kernel of dedup_embedding_blas in its "
+    "one-cell form (num_tables=1, bits_per_table=0): one cell holds every "
+    "vector, so the walker scores all N^2 pairs in one task and the pairs "
+    "are thresholded-EXACT, carrying the same equality oracle as "
+    "dedup_embedding_cosine. Divergence would need a true cosine within "
+    "BLAS reduction noise (~1e-15) of the 0.3 threshold or a 6dp rounding "
+    "boundary; measured margins on the sf0.01 fixtures are 6.9e-5 "
+    "(threshold) and 8.8e-11 (rounding, tools/margin_audit.py). Meant for "
+    "slices whose N^2 scores fit in one task; the 100 TB shape is "
+    "dedup_embedding_blas above",
 )
 def dedup_embedding_blas_exact(spark, sf):
     t = load_views(spark, sf)
-    pairs = DD.embedding_neardup_pairs_blas(t["embeddings"], threshold=0.3)
+    pairs = DD.embedding_neardup_pairs_blas_bucketed(
+        t["embeddings"], threshold=0.3, num_tables=1, bits_per_table=0
+    )
     return pairs.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
@@ -5694,10 +5697,11 @@ def mmr_rerank(spark, sf):
     WHERE round({V.cosine_sql('a.embedding', 'b.embedding')}, 6) >= 0.3
     """,
     doc="SemDeDup (Abbas et al. 2023): exact cosine near-dup pairs confined "
-    "to coarse-quantizer cells — the quadratic term is bounded per cell and "
-    "the self-join is an equi-join on cell id (one shuffle of each vector "
-    "to its cell), never a corpus crossJoin (operators/dedup.py "
-    "semdedup_pairs over operators/cluster.py assignment)",
+    "to coarse-quantizer cells — the quadratic term is bounded per cell: "
+    "one shuffle of each vector to its cell, then the BLAS cell walker of "
+    "dedup_embedding_blas scores each cell's pairs, never a corpus "
+    "crossJoin (operators/dedup.py semdedup_pairs over operators/cluster.py "
+    "assignment)",
 )
 def semdedup_pairs(spark, sf):
     t = load_views(spark, sf)

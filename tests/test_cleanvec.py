@@ -96,12 +96,15 @@ def test_knn_exact_blas_drops_dirty_rows_matches_clean_run(spark):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
+def _one_cell(vectors, **kw):
+    return DD.embedding_neardup_pairs_blas_bucketed(
+        vectors, num_tables=1, bits_per_table=0, **kw
+    )
+
+
 def test_blas_neardup_builders_degenerate_on_empty_and_all_null(spark):
     for vectors in (_emb(spark, []), _emb(spark, [(1, None), (2, [])])):
-        for fn in (
-            DD.embedding_neardup_pairs_blas,
-            DD.embedding_neardup_pairs_blas_bucketed,
-        ):
+        for fn in (_one_cell, DD.embedding_neardup_pairs_blas_bucketed):
             out = fn(vectors)
             assert out.columns == ["id_a", "id_b", "cosine"]
             assert out.count() == 0
@@ -110,8 +113,8 @@ def test_blas_neardup_builders_degenerate_on_empty_and_all_null(spark):
 def test_blas_neardup_dirty_rows_match_clean_run(spark):
     clean = [(i, [1.0, float(i % 3)]) for i in range(1, 8)]
     dirty = clean + [(11, None), (12, [1.0, 2.0, 3.0]), (None, [1.0, 1.0]), (13, [])]
-    got = DD.embedding_neardup_pairs_blas(_emb(spark, dirty), threshold=0.9)
-    want = DD.embedding_neardup_pairs_blas(_emb(spark, clean), threshold=0.9)
+    got = _one_cell(_emb(spark, dirty), threshold=0.9)
+    want = _one_cell(_emb(spark, clean), threshold=0.9)
     k = lambda df: sorted((r["id_a"], r["id_b"], round(r["cosine"], 9)) for r in df.collect())  # noqa: E731
     assert k(got) == k(want)
 

@@ -132,11 +132,19 @@ def test_ngram_jaccard_exact_value(spark):
     assert abs(out[0]["jaccard"] - 1 / 3) < 1e-12
 
 
+def _one_cell(emb, threshold):
+    """The bucketed BLAS kernel in its exact form: one cell holds every
+    vector, so it scores all pairs."""
+    return DD.embedding_neardup_pairs_blas_bucketed(
+        emb, threshold=threshold, num_tables=1, bits_per_table=0
+    )
+
+
 def test_embedding_neardup_kernels_agree(spark, sf_dir):
     """BLAS kernel must produce the same pair set as the expression kernel."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     exact = {(r["id_a"], r["id_b"]) for r in DD.embedding_neardup_pairs(emb, threshold=0.3).collect()}
-    blas = {(r["id_a"], r["id_b"]) for r in DD.embedding_neardup_pairs_blas(emb, threshold=0.3).collect()}
+    blas = {(r["id_a"], r["id_b"]) for r in _one_cell(emb, 0.3).collect()}
     assert exact == blas
     assert len(exact) > 0
 
@@ -144,20 +152,41 @@ def test_embedding_neardup_kernels_agree(spark, sf_dir):
 def test_neardup_scores_match_between_kernels(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(100)
     e = DD.embedding_neardup_pairs(emb, threshold=0.2).withColumnRenamed("cosine", "c1")
-    b = DD.embedding_neardup_pairs_blas(emb, threshold=0.2).withColumnRenamed("cosine", "c2")
+    b = _one_cell(emb, 0.2).withColumnRenamed("cosine", "c2")
     j = e.join(b, ["id_a", "id_b"])
     bad = j.filter(F.abs(F.col("c1") - F.col("c2")) > 1e-9).count()
     assert bad == 0
 
 
-def test_blas_size_guard_fails_fast(spark, sf_dir):
-    """The whole-corpus BLAS kernel is bucket-scoped only: above the collect
-    guard it must refuse rather than pull the corpus to the driver."""
-    import pytest
+def test_auto_num_tables_degenerate_collision_and_recall_target(spark):
+    """A per-table collision probability of 1 (threshold 1.0, or
+    bits_per_table=0) needs one table; a recall_target outside (0, 1)
+    is refused by name. The bucketed kernel at threshold 1.0 pairs an
+    exact-duplicate vector."""
+    import pyarrow as pa
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    with pytest.raises(ValueError, match="bucketed"):
-        DD.embedding_neardup_pairs_blas(emb, threshold=0.3, max_collect_rows=10)
+    assert DD._auto_num_tables(1.0, 8, 0.95) == 1
+    assert DD._auto_num_tables(0.9, 0, 0.95) == 1
+    for bad in (0.0, 1.0, 1.5):
+        with pytest.raises(ValueError, match="recall_target"):
+            DD._auto_num_tables(0.9, 8, bad)
+    # an antipodal boundary pair never shares a sign-LSH cell
+    with pytest.raises(ValueError, match="bits_per_table=0"):
+        DD._auto_num_tables(-1.0, 8, 0.95)
+    emb = spark.createDataFrame(
+        pa.table(
+            {
+                "vec_id": pa.array([1, 2, 3], pa.int64()),
+                "embedding": pa.array(
+                    # norm 2: the unit rows and their cosines are exact
+                    [[1.0, 1.0, 1.0, 1.0], [1.0, 1.0, 1.0, 1.0], [1.0, 1.0, 1.0, -1.0]],
+                    pa.list_(pa.float64()),
+                ),
+            }
+        )
+    )
+    got = DD.embedding_neardup_pairs_blas_bucketed(emb, threshold=1.0).collect()
+    assert [(r["id_a"], r["id_b"]) for r in got] == [(1, 2)]
 
 
 def test_blas_bucketed_recall_and_precision(spark, sf_dir):
@@ -244,7 +273,7 @@ def test_blas_bucketed_streaming_kernel_matches_per_cell_form(spark):
         )
     )
     threshold, tables, bits = 0.8, 4, 3
-    assigned = DD._sign_lsh_cells(emb, "vec_id", "embedding", tables, bits, 42)
+    assigned = DD._sign_lsh_cells(emb, "vec_id", "embedding", 8, tables, bits, 42)
 
     def per_cell(table):
         mask, M = CV.decode(table.column("vec"))
@@ -258,12 +287,15 @@ def test_blas_bucketed_streaming_kernel_matches_per_cell_form(spark):
         )
 
     twin = (
-        assigned.groupBy("tbl", "bucket")
+        assigned.groupBy("cell")
         .applyInArrow(per_cell, schema="id_a long, id_b long, cosine double")
         .groupBy("id_a", "id_b")
         .agg(F.max("cosine").alias("cosine"))
     )
-    sizes = [r["count"] for r in assigned.groupBy("tbl", "bucket").count().collect()]
+    cells = assigned.groupBy("cell").count().collect()
+    sizes = [r["count"] for r in cells]
+    # one key per (table, bucket): tables land in disjoint key ranges
+    assert {r["cell"] >> bits for r in cells} == set(range(tables))
     assert max(sizes) > 16
     assert len(sizes) > int(spark.conf.get("spark.sql.shuffle.partitions"))
     with _arrow_batch_rows(spark, 16):
@@ -276,6 +308,72 @@ def test_blas_bucketed_streaming_kernel_matches_per_cell_form(spark):
     want = {(r["id_a"], r["id_b"]): r["cosine"] for r in twin.collect()}
     assert got and set(got) == set(want)
     assert all(abs(got[k] - want[k]) <= 1e-9 for k in got)
+
+
+def test_semdedup_matches_expression_kernel_within_cells(spark):
+    """semdedup_pairs (the BLAS cell walker over the joined assignment)
+    equals the expression kernel restricted to same-cell pairs, cosines
+    rounded to 6 dp before the threshold cut, on cells that outgrow the
+    16-row Arrow batches. A NULL-cell row and a ragged row never pair,
+    though each copies a live vector."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    rng = np.random.default_rng(11)
+    n = 90
+    centers = rng.standard_normal((6, 8))
+    X = centers[rng.integers(0, 6, n)] + 0.4 * rng.standard_normal((n, 8))
+    vecs = [list(x) for x in X]
+    ids = [int(i) * 3 + 1 for i in range(n)]
+    cell = [i % 4 for i in range(n)]
+    vecs[5] = vecs[9][:7]  # ragged: a prefix of a live vector
+    vecs[8], cell[8] = vecs[12], None  # NULL cell: a copy of a live vector
+    # a pair just under the threshold whose 6 dp cosine reaches it
+    c = 0.4999996
+    vecs += [[1.0] + [0.0] * 7, [c, (1 - c * c) ** 0.5] + [0.0] * 6]
+    ids += [1001, 1002]
+    cell += [0, 0]
+    emb = spark.createDataFrame(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float64())),
+            }
+        )
+    )
+    cells = spark.createDataFrame(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "cluster_id": pa.array(cell, pa.int32()),
+            }
+        )
+    )
+    threshold = 0.5
+    with _arrow_batch_rows(spark, 16):
+        got = DD.semdedup_pairs(emb, cells, threshold=threshold)
+        rows = sorted(map(tuple, got.collect()))
+    assert [f.dataType for f in got.schema] == [
+        T.IntegerType(), T.LongType(), T.LongType(), T.DoubleType()
+    ]
+    every = DD.embedding_neardup_pairs(emb, threshold=threshold - 1e-6)
+    ca = cells.select(F.col("vec_id").alias("id_a"), F.col("cluster_id").alias("cell"))
+    cb = cells.select(F.col("vec_id").alias("id_b"), F.col("cluster_id").alias("cell"))
+    want = (
+        every.join(ca, "id_a")
+        .join(cb, ["id_b", "cell"])
+        .select("cell", "id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+        .where(F.col("cosine") >= threshold)
+    )
+    assert rows and rows == sorted(map(tuple, want.collect()))
+    assert (0, 1001, 1002, 0.5) in rows
+    # the NULL-cell copy pairs in the unrestricted kernel, never here
+    assert any(ids[8] in (r["id_a"], r["id_b"]) for r in every.collect())
+    assert not any({ids[5], ids[8]} & {a, b} for _, a, b, _ in rows)
+    # the walker keys cells as int64: a non-integral cell is refused
+    with pytest.raises(TypeError, match="cluster_id"):
+        DD.semdedup_pairs(emb, cells.withColumn("cluster_id", F.col("cluster_id").cast("string")))
 
 
 def test_merge_upsert_latest_wins(spark):

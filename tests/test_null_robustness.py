@@ -2,6 +2,8 @@
 empty documents (at 100 TB there WILL be malformed rows; a null must never
 fail the job — SURVEY §1.3 'dynamic fields' / error-row stance)."""
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -246,18 +248,25 @@ def test_knn_blas_zero_norm_no_nan(zero_norm_vectors):
 def test_embedding_neardup_zero_norm_never_pairs(zero_norm_vectors):
     from auto_vectordb_spark.operators.dedup import (
         embedding_neardup_pairs,
-        embedding_neardup_pairs_blas,
+        embedding_neardup_pairs_blas_bucketed,
     )
+
+    def one_cell(vectors, threshold):
+        return embedding_neardup_pairs_blas_bucketed(
+            vectors, threshold=threshold, num_tables=1, bits_per_table=0
+        )
 
     dup = zero_norm_vectors.union(
         zero_norm_vectors.select(
             (F.col("vec_id") + 10).alias("vec_id"), "embedding"
         )
     )
-    for fn in (embedding_neardup_pairs, embedding_neardup_pairs_blas):
-        pairs = fn(dup, threshold=0.95).collect()
+    # -1.0 admits every live pair: a dead vector's cosine is NULL in the
+    # expression kernel and must not pass as 0.0 in the BLAS walker
+    for fn, threshold in itertools.product((embedding_neardup_pairs, one_cell), (0.95, -1.0)):
+        pairs = fn(dup, threshold=threshold).collect()
         ids = {x for r in pairs for x in (r["id_a"], r["id_b"])}
-        assert 3 not in ids and 13 not in ids, fn.__name__
+        assert 3 not in ids and 13 not in ids, (fn.__name__, threshold)
         # live exact duplicates still pair
         assert any({r["id_a"], r["id_b"]} == {1, 11} for r in pairs), fn.__name__
 

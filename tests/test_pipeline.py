@@ -350,6 +350,30 @@ def test_rerank_matches_composed_first_stage(malformed_store, categories):
         assert abs(gs - ws) <= 1e-9
 
 
+def test_search_scores_are_fused_topk_scores_exactly(malformed_store, monkeypatch):
+    """search() hands fused_topk's scores to the fetched rows as one SQL
+    map literal: every score comes back as the same double (``==``),
+    negative knn-mode scores and exponent-form reprs included."""
+    p, _, _ = malformed_store
+    real, seen = HY.fused_topk, []
+
+    def spy(*args, **kwargs):
+        seen.append(real(*args, **kwargs))
+        return seen[-1]
+
+    def tiny(*args, **kwargs):
+        seen.append([(d, s * 1e-7 - 3e-12) for d, s in real(*args, **kwargs)])
+        return seen[-1]
+
+    monkeypatch.setattr(HY, "fused_topk", spy)
+    rows = p.search("eggs", size=10, mode="knn", min_score=-1.0).collect()
+    got = {r["id"]: r["score"] for r in rows}
+    assert got == dict(seen[-1]) and min(got.values()) < 0
+    monkeypatch.setattr(HY, "fused_topk", tiny)
+    got = {r["id"]: r["score"] for r in p.search("bread flour", size=10).collect()}
+    assert got == dict(seen[-1]) and all("e" in repr(s) for s in got.values())
+
+
 def test_search_result_columns_match_the_corpus(malformed_store):
     """Every mode, and both empty-result paths, return ``score`` plus the
     corpus columns: the search side's internal term column never leaks."""

@@ -105,8 +105,10 @@ SINGLE_PARTITION_OK = frozenset(
 # decoder plumbing, per-query MMR groups), never a row-at-a-time UDF.
 PYTHON_NODES_OK = frozenset(
     {
+        # the BLAS cell walker (dedup._cell_pairs) and its LSH assign scan
         "dedup_embedding_blas",
         "dedup_embedding_blas_exact",
+        "semdedup_pairs",
         # Arrow-batched per-partition d×d int64 Gram partials
         "embedding_gram_matrix",
         "embed_documents",
