@@ -278,11 +278,11 @@ def knn_exact_blas(
     BOUNDED-QUERY CONTRACT: the query side is collected to the driver and
     broadcast, so it must be a bounded working set — ``max_queries``
     (default 64k; at d=1024 float64 that is ~0.5 GB broadcast) fails fast
-    past the bound rather than OOMing the driver. For unbounded query sets
-    (corpus-vs-corpus scoring) use the DataFrame-native paths instead:
-    :func:`knn_exact` (expression kernel, both sides stay distributed) or
+    past the bound rather than OOMing the driver. :func:`knn_exact` is
+    bounded-query too (``score_pairs`` broadcasts its query side). For
+    corpus-vs-corpus scoring use
     ``dedup.embedding_neardup_pairs_blas_bucketed`` (sign-LSH bucketed
-    per-partition GEMM).
+    per-partition GEMM), the one kernel where both sides stay distributed.
 
     The query matrix (small) is collected and shipped with the kernel
     closure (:func:`cosine_scores_blas`, which L2-normalizes it); each
@@ -316,8 +316,8 @@ def knn_exact_blas(
     if q.num_rows > max_queries:
         raise ValueError(
             f"knn_exact_blas collects the query side to the driver; got more "
-            f"than max_queries={max_queries} rows. Use knn_exact or the "
-            f"bucketed BLAS dedup path for unbounded query sets."
+            f"than max_queries={max_queries} rows. Use the bucketed BLAS "
+            f"dedup path for unbounded query sets."
         )
     # row-fails-not-job: NULL / zero-length / ragged / non-finite query
     # vectors drop (modal dim of the valid rows defines the working

@@ -4,7 +4,9 @@ the one way library code pins (and releases) a working set.
 Local-mode defaults match the test/bench environment (local[32], single JVM);
 on a real cluster the same settings remain sane: AQE handles skew/coalesce at
 runtime, Arrow speeds every pandas_udf, UTC pins timestamp semantics for
-cross-engine (DuckDB-oracle) comparability.
+cross-engine (DuckDB-oracle) comparability. Python workers fork from the
+engine's daemon (:mod:`.pydaemon`), which keeps each task from re-reading
+Spark's zip archives when it starts.
 """
 
 from __future__ import annotations
@@ -52,6 +54,7 @@ def get_spark(
         # CollectLimit's sequential 1, 4, 16... escalation (see
         # plans/parity.py ensure_session_confs)
         .config("spark.sql.limit.initialNumPartitions", "1024")
+        .config("spark.python.daemon.module", "auto_vectordb_spark.pydaemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -4,7 +4,11 @@ from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests belong to, for this process and (through
+# PYTHONPATH) for the Python workers and daemon its Spark session starts
+ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 from auto_vectordb_spark.session import get_spark  # noqa: E402
 
